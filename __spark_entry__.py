@@ -57,8 +57,8 @@ def _n_docs(sf_dir: str) -> int:
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pages corpus. Default: the deterministic in-flight synthetic
     generator (content = f(doc_id, seed); no external data). With
-    ``SPARK_GRAFT_PAGES_DIR`` set (bench.py sets it after writing the
-    SAME synthetic corpus to parquet once), pages come from a stored
+    ``SPARK_GRAFT_PAGES_DIR`` set (pointing at the SAME synthetic corpus
+    written to parquet once), pages come from a stored
     table instead — the production shape (the north-rule corpus is an
     Iceberg TABLE), which also stops every downstream job from paying
     the corpus-generation python stage again per action."""

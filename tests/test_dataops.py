@@ -53,6 +53,41 @@ def test_ngram_jaccard_unpackable_ids_match_packed_path(spark, docs):
     assert packed  # non-vacuous
 
 
+def _plain_jaccard_pairs(docs, to_id):
+    """The plain two-column aggregation's pairs (negative ids force it),
+    with ids mapped through ``to_id``."""
+    from weak_supervision_for_ner_spark.operators.dedup import ngram_jaccard_pairs
+
+    shifted = docs.select((F.col("doc_id") - 10).alias("doc_id"), "text")
+    return {(to_id(r["a"] + 10), to_id(r["b"] + 10)): r["jaccard"]
+            for r in ngram_jaccard_pairs(shifted, 0.3).collect()}
+
+
+def test_ngram_jaccard_string_ids_match_plain_path(spark, docs):
+    """String ids cannot be packed into the long pair key: they must
+    take the two-column aggregation instead of raising TypeError."""
+    from weak_supervision_for_ner_spark.operators.dedup import ngram_jaccard_pairs
+
+    as_str = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    got = {(r["a"], r["b"]): r["jaccard"]
+           for r in ngram_jaccard_pairs(as_str, 0.3).collect()}
+    assert got == _plain_jaccard_pairs(docs, str)
+    assert got
+
+
+def test_ngram_jaccard_fractional_ids_do_not_collide(spark, docs):
+    """Fractional double ids in [0, 2^31) would truncate to the same
+    packed key (0.25, 0.5, 0.75 all cast to 0) and merge distinct pairs:
+    they must take the two-column aggregation."""
+    from weak_supervision_for_ner_spark.operators.dedup import ngram_jaccard_pairs
+
+    quarter = docs.select((F.col("doc_id") / 4.0).alias("doc_id"), "text")
+    got = {(r["a"], r["b"]): r["jaccard"]
+           for r in ngram_jaccard_pairs(quarter, 0.3).collect()}
+    assert got == _plain_jaccard_pairs(docs, lambda i: i / 4.0)
+    assert len(got) == 3  # (1,2), (1,3), (2,3) stay distinct
+
+
 def test_minhash_lsh_finds_exact_dups(spark, docs):
     from weak_supervision_for_ner_spark.operators.dedup import minhash_lsh_pairs
 

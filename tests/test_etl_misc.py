@@ -117,3 +117,16 @@ def test_annotate_batch_error_isolation(monkeypatch):
     out = ann.annotate_batch(pd.Series(["Oslo is nice", ""]))
     assert out[0][0] == ["Oslo", "is", "nice"] and out[0][1] == []
     assert out[1] == ([], [])
+
+
+def test_get_spark_default_cores_follow_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark sizes local mode to the
+    cores this process may run on instead of a fixed count."""
+    import os
+
+    from weak_supervision_for_ner_spark import config
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert config._default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert config._default_cores() == 3

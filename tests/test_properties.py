@@ -2,7 +2,7 @@
 enforces at runtime (SURVEY.md §5.2)."""
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from weak_supervision_for_ner_spark.functions.tokenizer import tokenize_with_offsets
 from weak_supervision_for_ner_spark.functions.trie import TokenTrie
@@ -346,3 +346,98 @@ def test_standardise_rebuilds_over_unit_conf_mass():
     for lab, c in before[(0, 2)]:
         doc2.add("legal_detector", 0, 2, lab, c)
     assert after == doc2.layers["legal_detector"]
+
+
+# ---------------------------------------------------------------------------
+# The per-document triple kernel: the Spark extraction stage equals the
+# oracle's loop over the same kernel, whatever the partitioning and the
+# Arrow batch size, on corpora with empty and token-less documents.
+# ---------------------------------------------------------------------------
+
+_KERNEL_TEXTS = st.one_of(
+    st.integers(0, 500),
+    st.sampled_from(["", " ", "\n\t  "]),
+)
+
+
+def _kernel_pages(texts):
+    from weak_supervision_for_ner_spark.sources.pages import make_page
+
+    return [
+        {"url": f"https://kernel.example.org/{j}",
+         "text": make_page(t)[0]["text"] if isinstance(t, int) else t,
+         "lang": "en"}
+        for j, t in enumerate(texts)
+    ]
+
+
+_SMALL_HMM = []
+
+
+def _small_hmm():
+    """An HMM fitted once, by the oracle, on a fixed 30-page corpus."""
+    if not _SMALL_HMM:
+        from weak_supervision_for_ner_spark.plans.oracle import (
+            oracle_annotate,
+            oracle_hmm_fit,
+        )
+
+        docs = oracle_annotate(_kernel_pages(range(30)))
+        _SMALL_HMM.append(oracle_hmm_fit(docs, n_iter=1))
+    return _SMALL_HMM[0]
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    texts=st.lists(_KERNEL_TEXTS, max_size=12),
+    partitions=st.sampled_from([1, 3, 7]),
+    batch=st.sampled_from([1, 2048]),
+)
+@example(texts=[*range(8), "", " "], partitions=7, batch=1)
+def test_spark_triples_equal_oracle_kernel(spark, texts, partitions, batch):
+    from weak_supervision_for_ner_spark.operators.aggregate import sequence_from_spans
+    from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
+    from weak_supervision_for_ner_spark.operators.triples import (
+        doc_mentions,
+        doc_triples,
+        extract_triples_direct,
+        extract_triples_hmm_fused,
+        majority_labeller,
+    )
+    from weak_supervision_for_ner_spark.plans.oracle import (
+        oracle_annotate,
+        oracle_form_frequencies,
+    )
+
+    pages = _kernel_pages(texts)
+    form_freqs = oracle_form_frequencies(pages)
+    docs = oracle_annotate(pages, form_freqs=form_freqs)
+    model = _small_hmm()
+
+    def oracle(label):
+        return sorted(
+            t for d in docs
+            for t in doc_triples(d["url"], d["tokens"],
+                                 doc_mentions(d["tokens"], d["spans"], label), True)
+        )
+
+    def collected(df):
+        return sorted(map(tuple, df.collect()))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        df = spark.createDataFrame(
+            [(p["url"], p["text"], p["lang"]) for p in pages],
+            "url string, text string, lang string",
+        ).repartition(partitions)
+        annotated = annotate_pages(df, form_freqs=form_freqs)
+        majority = oracle(majority_labeller())
+        assert collected(extract_triples_direct(df, form_freqs=form_freqs, correct=True)) == majority
+        assert collected(extract_triples_direct(annotated, correct=True)) == majority
+        assert collected(extract_triples_hmm_fused(annotated, model, correct=True)) == oracle(
+            lambda spans, n: model.label(sequence_from_spans(spans, n))
+        )
+    finally:
+        spark.conf.set(key, previous)

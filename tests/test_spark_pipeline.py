@@ -9,10 +9,10 @@ from weak_supervision_for_ner_spark.operators.annotate import (
     annotate_pages,
     mentions_from_annotated,
 )
+from weak_supervision_for_ner_spark.operators.triples import doc_triples
 from weak_supervision_for_ner_spark.plans.oracle import (
     oracle_annotate,
     oracle_majority_mentions,
-    oracle_triples,
 )
 from weak_supervision_for_ner_spark.plans.pipeline import (
     run_kg_pipeline,
@@ -77,8 +77,14 @@ def test_kg_pipeline_triples_pr_vs_oracle(spark, pages_df, oracle_docs):
         (r["subj"], r["pred"], r["obj"], r["url"])
         for r in graph.select("subj", "pred", "obj", "url").collect()
     }
-    oracle_ments = oracle_majority_mentions(oracle_docs)
-    want = {(t[0], t[2], t[3], t[5]) for t in oracle_triples(oracle_docs, oracle_ments)}
+    by_url: dict[str, list] = {}
+    for (url, _src, s, e, lab, conf, _txt) in oracle_majority_mentions(oracle_docs):
+        by_url.setdefault(url, []).append((s, e, lab, conf))
+    want = {
+        (t[0], t[2], t[3], t[5])
+        for d in oracle_docs
+        for t in doc_triples(d["url"], d["tokens"], by_url.get(d["url"], []))
+    }
     assert want, "oracle should produce triples on the synthetic corpus"
     tp = len(got & want)
     precision = tp / max(len(got), 1)
@@ -232,6 +238,23 @@ def test_hmm_fused_triples_match_join_path(spark):
     # and the fused plan really has no join
     assert "Join" not in fused._jdf.queryExecution().executedPlan().toString()
     annotated.unpersist()
+
+
+def test_graph_only_majority_extraction_is_one_stage(spark, tmp_path):
+    """On the graph-only majority path everything between the scan and
+    entity linking (annotate → vote → correct → SVO, then the KB map
+    lookup) is ONE MapInPandas node, with no join."""
+    from weak_supervision_for_ner_spark.operators.triples import (
+        extract_triples_direct,
+        link_entities,
+    )
+
+    path = str(tmp_path / "pages")
+    synth_pages(spark, 20, partitions=2).write.parquet(path)
+    raw = extract_triples_direct(spark.read.parquet(path), truecase=True, correct=True)
+    plan = link_entities(spark, raw)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan, plan
 
 
 def test_cli_truecase_and_correction_are_flagship_defaults(spark, tmp_path, monkeypatch):

@@ -15,12 +15,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run
+    on — never more workers than the host can schedule."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "weak_supervision_for_ner_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or _default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # One BLAS thread per Python worker (workers run one-per-core);
     # set in the driver env BEFORE the JVM starts so local-mode python

@@ -295,27 +295,22 @@ def majority_voter_mentions(
     ``sources_to_keep`` restricts the vote to a source subset AFTER
     specialisation, matching the reference's UnifiedAnnotator order
     (specialise over all layers, then extract only kept sources,
-    labelling.py:144-175)."""
-    keep = None if sources_to_keep is None else set(sources_to_keep)
+    labelling.py:144-175). Runs the shared per-document kernel
+    (operators.triples.doc_mentions)."""
+    from weak_supervision_for_ner_spark.operators.triples import (
+        doc_mentions,
+        majority_labeller,
+    )
+
+    label = majority_labeller(nb_sources_threshold, sources_to_keep)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                layers = specialise_layers(layers_from_spans(list(spans)))
-                if keep is not None:
-                    layers = {s: l for s, l in layers.items() if s in keep}
-                states, confs = majority_vote_sparse(
-                    layers, len(tokens), nb_sources_threshold
-                )
-                for (start, end), (label, conf) in decode_biluo(states, confs).items():
-                    rows.append(
-                        (url, source_name, start, end, label, conf,
-                         " ".join(tokens[start:end]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "source", "start", "end", "label", "conf", "text"],
-            )
+            rows = [
+                (url, source_name, s, e, lab, conf, " ".join(tokens[s:e]))
+                for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"])
+                for (s, e, lab, conf) in doc_mentions(tokens, spans, label)
+            ]
+            yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
 
     return annotated.mapInPandas(run, schema=MENTIONS_SCHEMA)

@@ -68,6 +68,33 @@ def annotate_batch(
     return out
 
 
+def select_text(
+    pages: DataFrame,
+    lang: str = "en",
+    truecase: bool = False,
+    form_freqs: dict | None = None,
+):
+    """pages → (their ``url``/``text`` rows in ``lang``, the casing
+    dictionary as a Spark broadcast or None). The lang filter is pushed
+    into the scan.
+
+    With ``truecase=True`` the casing dictionary is derived from those
+    rows (one groupBy + bounded driver collect,
+    textstats.collect_form_frequency_dict); pass ``form_freqs`` to reuse
+    a precomputed dictionary. Short/ALL-CAPS docs then get case repair
+    before labelling (spacy_wrapper.py:186-221)."""
+    selected = pages.filter(F.col("lang") == lang).select("url", "text")
+    if not truecase and form_freqs is None:
+        return selected, None
+    if form_freqs is None:
+        from weak_supervision_for_ner_spark.operators.textstats import (
+            collect_form_frequency_dict,
+        )
+
+        form_freqs = collect_form_frequency_dict(selected)
+    return selected, selected.sparkSession.sparkContext.broadcast(form_freqs)
+
+
 def annotate_pages(
     pages: DataFrame,
     lang: str = "en",
@@ -76,25 +103,10 @@ def annotate_pages(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → annotated(url, tokens, spans).
 
-    One narrow stage; the lang filter is pushed into the scan.
-
-    With ``truecase=True`` the casing dictionary is derived from the
-    corpus itself (one groupBy + bounded driver collect,
-    textstats.collect_form_frequency_dict) and shipped to executors via
-    a Spark broadcast, then short/ALL-CAPS docs get case repair before
-    labelling (spacy_wrapper.py:186-221). Pass ``form_freqs`` to reuse
-    a precomputed dictionary.
+    One narrow stage over :func:`select_text`'s rows, truecased under
+    its broadcast dictionary when ``truecase`` or ``form_freqs`` asks.
     """
-    selected = pages.filter(F.col("lang") == lang).select("url", "text")
-    bc = None
-    if truecase or form_freqs is not None:
-        if form_freqs is None:
-            from weak_supervision_for_ner_spark.operators.textstats import (
-                collect_form_frequency_dict,
-            )
-
-            form_freqs = collect_form_frequency_dict(selected)
-        bc = selected.sparkSession.sparkContext.broadcast(form_freqs)
+    selected, bc = select_text(pages, lang, truecase, form_freqs)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         freqs = bc.value if bc is not None else None

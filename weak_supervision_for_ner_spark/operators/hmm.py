@@ -36,9 +36,9 @@ from pyspark.sql import types as T
 from weak_supervision_for_ner_spark.operators.aggregate import (
     N_SOURCES,
     N_STATES,
-    decode_biluo,
     sequence_from_spans,
 )
+from weak_supervision_for_ner_spark.operators.triples import doc_mentions
 from weak_supervision_for_ner_spark.schema import (
     MENTIONS_SCHEMA,
     OUT_PRECISION,
@@ -540,9 +540,7 @@ class HMMAggregator:
 
             def e_step_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 sp, tm, ep, epr, spp, tmp = params_bc.value
-                model = HMMAggregator.__new__(HMMAggregator)
-                model.startprob_, model.transmat_, model.emission_probs = sp, tm, ep
-                model._excluded = excluded
+                model = HMMAggregator._rebuilt(sp, tm, ep, excluded)
                 logprob = 0.0
                 n_docs = 0
                 n_tokens = 0
@@ -610,37 +608,51 @@ class HMMAggregator:
             prev_logprob = curr_logprob
         return self
 
-    def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
-        """Stateless Viterbi decode: annotated -> HMM mention rows."""
+    @classmethod
+    def _rebuilt(cls, startprob, transmat, emission_probs, excluded) -> "HMMAggregator":
+        """A bare model holding only what ``label``/``e_step`` read,
+        rebuilt on an executor from broadcast parameters."""
+        model = cls.__new__(cls)
+        model.startprob_, model.transmat_, model.emission_probs = startprob, transmat, emission_probs
+        model._excluded = excluded
+        return model
+
+    def labeller(self, spark: SparkSession, encoded: bool = False):
+        """This model's Viterbi as a labeller for the per-document kernel
+        (operators.triples.doc_mentions): ``label(obs, n_tokens)``, where
+        ``obs`` is a doc's span rows, or its encode_observations cells
+        when ``encoded``. The parameters travel as one broadcast; the
+        model is rebuilt once per task, on first use."""
         params_bc = spark.sparkContext.broadcast(
             (self.startprob_, self.transmat_, self.emission_probs)
         )
-        source_name = self.source_name
-        excluded = self._excluded
+        excluded, cls = self._excluded, type(self)
+        model = None
 
+        def label(obs, n_tokens: int):
+            nonlocal model
+            if model is None:
+                model = cls._rebuilt(*params_bc.value, excluded)
+            return model.label(_materialize_X(obs, n_tokens, encoded))
+
+        return label
+
+    def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
+        """Stateless Viterbi decode: annotated -> HMM mention rows."""
         encoded = self._is_encoded(annotated)
+        label = self.labeller(spark, encoded)
+        source_name = self.source_name
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sp, tm, ep = params_bc.value
-            model = HMMAggregator.__new__(HMMAggregator)
-            model.startprob_, model.transmat_, model.emission_probs = sp, tm, ep
-            model._excluded = excluded
             for pdf in batches:
-                rows = []
-                for url, tokens, (n_toks, payload) in zip(
-                    pdf["url"], pdf["tokens"], _iter_observations(pdf, encoded)
-                ):
-                    if n_toks == 0:
-                        continue
-                    X = _materialize_X(payload, n_toks, encoded)
-                    path, confs = model.label(X)
-                    for (s, e), (lab, conf) in decode_biluo(path, confs).items():
-                        rows.append((url, source_name, s, e, lab, conf,
-                                     " ".join(tokens[s:e])))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["url", "source", "start", "end", "label", "conf", "text"],
-                )
+                rows = [
+                    (url, source_name, s, e, lab, conf, " ".join(tokens[s:e]))
+                    for url, tokens, (_n, obs) in zip(
+                        pdf["url"], pdf["tokens"], _iter_observations(pdf, encoded)
+                    )
+                    for (s, e, lab, conf) in doc_mentions(tokens, obs, label)
+                ]
+                yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
 
         cols = ["url", "tokens", "n_tokens", "obs_t", "obs_s", "obs_k", "obs_v"] \
             if encoded else ["url", "tokens", "spans"]

@@ -2,11 +2,18 @@
 minhash-LSH canonicalization, graph materialize (north_rule — new
 capability layered on the reference's aggregated mentions).
 
-Pipeline:
-  mentions (HMM/majority-voter output) ──┐
-                                         ├─ per-doc SVO-window rule (narrow)
-  pages.tokens ──────────────────────────┘
-      → raw triples (surface forms)
+Triple extraction is one per-document kernel — :func:`doc_mentions`
+(spans → labeller → BILUO decode; the labeller is the sparse majority
+vote or a trained model's Viterbi) then :func:`doc_triples` ([entity
+correction →] the SVO-window rule) — run by one Arrow stage,
+``_triples_stage``, over one of three input forms: pages (annotated in
+the stage), annotated rows (labelled in the stage), or annotated rows
+joined to already-aggregated mentions (used as they are). The public
+builders only pick the form and the labeller; the mention tables, the
+stream and the single-node oracle call the same kernel.
+
+After extraction:
+      raw triples (surface forms)
       → entity linking: broadcast join against the gazetteer KB
       → canonicalization: minhash-LSH over character shingles of
         UNLINKED surface forms; band groupBy; connected components via
@@ -26,9 +33,16 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql import types as T
 
 from weak_supervision_for_ner_spark.functions.lexicons import LEGAL_SUFFIXES as _LEGAL_SUFFIXES
+from weak_supervision_for_ner_spark.operators.aggregate import (
+    decode_biluo,
+    layers_from_spans,
+    majority_vote_sparse,
+    specialise_layers,
+)
+from weak_supervision_for_ner_spark.operators.annotate import annotate_batch, select_text
+from weak_supervision_for_ner_spark.operators.entity_correction import correct_spans_with_conf
 from weak_supervision_for_ner_spark.schema import TRIPLES_SCHEMA
 from weak_supervision_for_ner_spark.sources.gazetteer import RELATION_LEXICON
 
@@ -163,197 +177,143 @@ def extract_triples_from_doc(
     return out
 
 
-def extract_triples_direct(pages: DataFrame, nb_sources_threshold: int = 4,
+# ---------------------------------------------------------------------------
+# The per-document kernel and the one extraction stage
+# ---------------------------------------------------------------------------
+
+_TRIPLE_COLS = TRIPLES_SCHEMA.fieldNames()
+
+
+def majority_labeller(nb_sources_threshold: int = 4,
+                      sources_to_keep: list[str] | None = None):
+    """The sparse majority vote as a :func:`doc_mentions` labeller,
+    ``label(spans, n_tokens) -> (states, confs)``: specialise the
+    layers, then vote. ``sources_to_keep`` restricts the vote to a
+    source subset AFTER specialisation, matching the reference's
+    UnifiedAnnotator order (labelling.py:144-175)."""
+    keep = None if sources_to_keep is None else set(sources_to_keep)
+
+    def label(spans, n_tokens: int):
+        layers = specialise_layers(layers_from_spans(list(spans)))
+        if keep is not None:
+            layers = {s: layer for s, layer in layers.items() if s in keep}
+        return majority_vote_sparse(layers, n_tokens, nb_sources_threshold)
+
+    return label
+
+
+def doc_mentions(tokens, spans, label) -> list[tuple[int, int, str, float]]:
+    """One document's aggregated (start, end, label, conf) mentions: the
+    labeller — :func:`majority_labeller` or a model's Viterbi
+    (``HMMAggregator.labeller``) — gives a per-token state path, BILUO
+    decoding turns it into spans. A token-less document has none."""
+    if len(tokens) == 0:
+        return []
+    states, confs = label(spans, len(tokens))
+    return [
+        (s, e, lab, conf) for (s, e), (lab, conf) in decode_biluo(states, confs).items()
+    ]
+
+
+def doc_triples(url: str, tokens, mentions: list, correct: bool = False) -> list[tuple]:
+    """One document's raw triples: [the 15-rule entity repair,
+    spacy_wrapper.py:268-402 →] the SVO-window rule."""
+    tokens = list(tokens)
+    if correct:
+        mentions = correct_spans_with_conf(tokens, mentions)
+    return extract_triples_from_doc(url, tokens, mentions)
+
+
+def _committed_mentions(ms) -> list[tuple[int, int, str, float]]:
+    """Collected mention structs (dicts or tuples after Arrow) as tuples."""
+    return [
+        (int(m["start"]), int(m["end"]), m["label"], float(m["conf"]))
+        if isinstance(m, dict) else (int(m[0]), int(m[1]), m[2], float(m[3]))
+        for m in ms
+    ]
+
+
+def _triples_stage(frame: DataFrame, label, correct: bool, freqs_bc=None) -> DataFrame:
+    """The triple-extraction stage: one narrow Arrow stage running
+    :func:`doc_mentions` and :func:`doc_triples` per document. The input
+    form comes from the frame's columns:
+
+    - ``text`` (pages, already lang-filtered): annotate in the stage
+      under the broadcast casing dictionary ``freqs_bc``, then label —
+      the span structs never cross the Arrow boundary;
+    - ``ms`` (annotated rows joined to committed mentions): use those
+      mentions, no labeller;
+    - ``spans`` (annotated rows): label the spans."""
+    if "text" in frame.columns:
+        form, frame = "text", frame.select("url", "text")
+    elif "ms" in frame.columns:
+        form, frame = "ms", frame.select("url", "tokens", "ms")
+    else:
+        form, frame = "spans", frame.select("url", "tokens", "spans")
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        freqs = freqs_bc.value if freqs_bc is not None else None
+        for pdf in batches:
+            if form == "text":
+                docs = annotate_batch(pdf["text"], form_freqs=freqs)
+            else:
+                docs = zip(pdf["tokens"], pdf[form])
+            rows = []
+            for url, (tokens, obs) in zip(pdf["url"], docs):
+                ments = (_committed_mentions(obs) if form == "ms"
+                         else doc_mentions(tokens, obs, label))
+                rows.extend(doc_triples(url, tokens, ments, correct))
+            yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
+
+    return frame.mapInPandas(run, schema=TRIPLES_SCHEMA)
+
+
+def extract_triples_direct(frame: DataFrame, nb_sources_threshold: int = 4,
                            lang: str = "en", truecase: bool = False,
                            form_freqs: dict | None = None,
                            correct: bool = False) -> DataFrame:
-    """Maximal fusion: pages → annotate → specialise → majority-vote →
-    [entity-correct] → SVO triples in ONE Arrow stage. On the graph
-    path the span table never crosses the Arrow boundary at all — used
-    by the pipeline when the aggregator is per-doc recomputable
-    (majority voting).
+    """Majority-vote triples in ONE Arrow stage, from pages or from
+    annotated rows.
 
-    ``truecase`` derives the corpus casing dictionary (one groupBy +
-    bounded collect) and broadcasts it, exactly like ``annotate_pages``
-    (pass ``form_freqs`` to reuse a precomputed dictionary — at real
-    scale derive it once and ship it). ``correct`` applies the 15-rule
-    entity-repair pass (spacy_wrapper.py:268-402) to the aggregated
-    mentions per doc — still row-local, so the stage stays narrow."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        layers_from_spans,
-        majority_vote_sparse,
-        specialise_layers,
-    )
-    from weak_supervision_for_ner_spark.operators.annotate import annotate_batch
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
+    Pages (a ``text`` column): annotate → specialise → majority-vote →
+    [entity-correct] → SVO per doc, so on the graph-only path the span
+    table never crosses the Arrow boundary. ``truecase`` derives the
+    corpus casing dictionary and broadcasts it, exactly like
+    ``annotate_pages``; pass ``form_freqs`` to reuse a precomputed one.
 
-    selected = pages.filter(F.col("lang") == lang).select("url", "text")
-    bc = None
-    if truecase or form_freqs is not None:
-        if form_freqs is None:
-            from weak_supervision_for_ner_spark.operators.textstats import (
-                collect_form_frequency_dict,
-            )
-
-            form_freqs = collect_form_frequency_dict(selected)
-        bc = selected.sparkSession.sparkContext.broadcast(form_freqs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        freqs = bc.value if bc is not None else None
-        for pdf in batches:
-            rows = []
-            for url, (tokens, spans) in zip(
-                pdf["url"], annotate_batch(pdf["text"], form_freqs=freqs)
-            ):
-                layers = specialise_layers(layers_from_spans(spans))
-                states, confs = majority_vote_sparse(
-                    layers, len(tokens), nb_sources_threshold
-                )
-                ments = [
-                    (s, e, lab, conf)
-                    for (s, e), (lab, conf) in decode_biluo(states, confs).items()
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
-
-    return selected.mapInPandas(run, schema=TRIPLES_SCHEMA)
-
-
-def extract_triples_fused(annotated: DataFrame, nb_sources_threshold: int = 4,
-                          correct: bool = False) -> DataFrame:
-    """Zero-shuffle triple extraction: re-derive the majority-voter
-    mentions per doc (cheap vectorized numpy) INSIDE the same Arrow
-    batch and run the SVO rule — the whole pages→triples path stays one
-    narrow stage. Preferred in the pipeline over
-    :func:`extract_triples`, which exists for aggregators whose
-    mentions are not per-doc recomputable (e.g. a trained HMM).
-    ``correct`` applies the 15-rule repair pass per doc first."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        layers_from_spans,
-        majority_vote_sparse,
-        specialise_layers,
-    )
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                tokens = list(tokens)
-                layers = specialise_layers(layers_from_spans(list(spans)))
-                states, confs = majority_vote_sparse(
-                    layers, len(tokens), nb_sources_threshold
-                )
-                ments = [
-                    (s, e, lab, conf)
-                    for (s, e), (lab, conf) in decode_biluo(states, confs).items()
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
-
-    return annotated.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    Annotated rows (``tokens``, ``spans``): re-vote the spans per doc,
+    for callers that materialize the annotated table anyway, so the
+    labelling functions run once; ``lang``, ``truecase`` and
+    ``form_freqs`` do not apply. ``correct`` applies the 15-rule entity
+    repair per doc before the SVO rule — row-local either way."""
+    freqs_bc = None
+    if "text" in frame.columns:
+        frame, freqs_bc = select_text(frame, lang, truecase, form_freqs)
+    return _triples_stage(frame, majority_labeller(nb_sources_threshold), correct, freqs_bc)
 
 
 def extract_triples_hmm_fused(annotated: DataFrame, model,
                               correct: bool = False) -> DataFrame:
-    """Decode-fused HMM-path triple extraction: Viterbi-decode the
-    trained model and run [entity-correct →] the SVO rule per doc in
-    ONE Arrow stage over the annotated table — no mentions shuffle, no
-    join back (the HMM-path counterpart of :func:`extract_triples_fused`;
-    the trained params travel as a broadcast like ``decode_spark``).
-    Produces the same graph as ``extract_triples(annotated,
+    """HMM triples in ONE Arrow stage over the annotated table: Viterbi
+    under the trained model (its parameters travel as one broadcast) →
+    [entity-correct] → SVO per doc. No mentions shuffle and no join
+    back; the same triples as ``extract_triples(annotated,
     model.decode_spark(...))`` — asserted by the parity test."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        sequence_from_spans,
-    )
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-
-    params_bc = annotated.sparkSession.sparkContext.broadcast(
-        (model.startprob_, model.transmat_, model.emission_probs)
-    )
-    excluded = model._excluded
-    model_cls = type(model)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sp, tm, ep = params_bc.value
-        m = model_cls.__new__(model_cls)
-        m.startprob_, m.transmat_, m.emission_probs = sp, tm, ep
-        m._excluded = excluded
-        for pdf in batches:
-            rows = []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                tokens = list(tokens)
-                if not tokens:
-                    continue
-                X = sequence_from_spans(list(spans), len(tokens))
-                path, confs = m.label(X)
-                ments = [
-                    (s, e, lab, conf)
-                    for (s, e), (lab, conf) in decode_biluo(path, confs).items()
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
-
-    return annotated.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return _triples_stage(annotated, model.labeller(annotated.sparkSession), correct)
 
 
 def extract_triples(annotated: DataFrame, mentions: DataFrame,
                     correct: bool = False) -> DataFrame:
-    """Join aggregated mentions back onto tokens (co-partitioned equi
-    join on url) and run [entity-correct →] the SVO rule per doc
-    inside Arrow batches."""
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-
+    """Triples from an aggregated mentions table: collect the mentions
+    per url, join them back onto the tokens (equi-join on url) and run
+    [entity-correct →] the SVO rule per doc. For mentions that are
+    materialized anyway (a committed stage, an export), so the model's
+    decode runs once."""
     grouped = mentions.groupBy("url").agg(
         F.collect_list(F.struct("start", "end", "label", "conf")).alias("ms")
     )
     joined = annotated.select("url", "tokens").join(grouped, "url")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, tokens, ms in zip(pdf["url"], pdf["tokens"], pdf["ms"]):
-                tokens = list(tokens)
-                ments = [
-                    (int(m["start"]), int(m["end"]), m["label"], float(m["conf"]))
-                    if isinstance(m, dict) else (int(m[0]), int(m[1]), m[2], float(m[3]))
-                    for m in ms
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
-
-    return joined.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return _triples_stage(joined, None, correct)
 
 
 # ---------------------------------------------------------------------------

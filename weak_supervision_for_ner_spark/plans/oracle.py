@@ -1,10 +1,13 @@
 """Single-node pure-numpy oracle (SURVEY.md §5.2).
 
 Implements the identical semantics as the Spark pipeline by calling
-the SAME per-document core (operators.labelling / aggregate / hmm /
-triples doc functions) in a plain Python loop — no Spark. Golden
-parity tests assert the distributed output equals this oracle exactly
-(spans, mentions) and at P/R >= 0.95 (triples, per north_rule).
+the SAME per-document core (operators.labelling, and the kernel the
+Spark extraction stage runs: triples.doc_mentions / doc_triples) in a
+plain Python loop — no Spark. ``oracle_majority_mentions`` alone keeps
+the dense ``majority_vote``: it is the independent reference for the
+sparse vote. Golden parity tests assert the distributed output equals
+this oracle exactly (spans, mentions) and at P/R >= 0.95 (triples, per
+north_rule).
 """
 
 from __future__ import annotations
@@ -12,6 +15,8 @@ from __future__ import annotations
 import numpy as np
 
 from weak_supervision_for_ner_spark.operators.aggregate import (
+    N_SOURCES,
+    N_STATES,
     decode_biluo,
     majority_vote,
     sequence_from_spans,
@@ -22,9 +27,17 @@ from weak_supervision_for_ner_spark.operators.labelling import (
     annotate_document,
     flatten_spans,
 )
-from weak_supervision_for_ner_spark.operators.triples import extract_triples_from_doc
-from weak_supervision_for_ner_spark.sources.gazetteer import FIRST_NAMES, build_gazetteers
-from weak_supervision_for_ner_spark.operators.aggregate import N_SOURCES, N_STATES
+from weak_supervision_for_ner_spark.operators.triples import (
+    _local_components,
+    doc_mentions,
+    doc_triples,
+    majority_labeller,
+)
+from weak_supervision_for_ner_spark.sources.gazetteer import (
+    FIRST_NAMES,
+    build_gazetteers,
+    canonical_entity_ids,
+)
 
 
 def oracle_annotate(pages: list[dict], form_freqs: dict | None = None) -> list[dict]:
@@ -98,27 +111,14 @@ def oracle_hmm_fit(annotated: list[dict], n_iter: int = 10, seed: int = 42) -> H
 
 
 def oracle_hmm_mentions(model: HMMAggregator, annotated: list[dict]) -> list[tuple]:
-    rows = []
-    for doc in annotated:
-        if not doc["tokens"]:
-            continue
-        X = sequence_from_spans(doc["spans"], len(doc["tokens"]))
-        path, confs = model.label(X)
-        for (s, e), (lab, conf) in decode_biluo(path, confs).items():
-            rows.append((doc["url"], model.source_name, s, e, lab, conf,
-                         " ".join(doc["tokens"][s:e])))
-    return rows
+    def label(spans, n_tokens):
+        return model.label(sequence_from_spans(spans, n_tokens))
 
-
-def oracle_triples(annotated: list[dict], mentions: list[tuple]) -> list[tuple]:
-    by_url: dict[str, list] = {}
-    for (url, _src, s, e, lab, conf, _txt) in mentions:
-        by_url.setdefault(url, []).append((s, e, lab, conf))
-    rows = []
-    for doc in annotated:
-        ms = by_url.get(doc["url"], [])
-        rows.extend(extract_triples_from_doc(doc["url"], doc["tokens"], ms))
-    return rows
+    return [
+        (doc["url"], model.source_name, s, e, lab, conf, " ".join(doc["tokens"][s:e]))
+        for doc in annotated
+        for (s, e, lab, conf) in doc_mentions(doc["tokens"], doc["spans"], label)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -189,42 +189,33 @@ def oracle_graph(
     max_bucket: int = 64,
 ) -> list[tuple]:
     """Single-node mirror of ``run_kg_pipeline(aggregator='majority')``:
-    truecase dict → annotate → specialise → sparse majority vote →
-    entity-correct → SVO triples → KB linking → minhash-LSH
-    canonicalization (bit-exact xxhash64 signatures + the same banding/
-    union-find as canonicalize_triples' driver path) → max-conf dedup
-    with the deterministic surface tiebreak of materialize_graph.
+    truecase dict → annotate → the per-document kernel of the Spark
+    stage (specialise → sparse majority vote → entity-correct → SVO
+    triples) → :func:`oracle_finalize_graph`.
 
     Returns rows shaped like the graph DataFrame: (subj, subj_type,
     pred, obj, obj_type, url, conf, subj_id, obj_id)."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        layers_from_spans,
-        majority_vote_sparse,
-        specialise_layers,
-    )
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-    from weak_supervision_for_ner_spark.operators.triples import _local_components
-    from weak_supervision_for_ner_spark.sources.gazetteer import canonical_entity_ids
-
     form_freqs = oracle_form_frequencies(pages) if truecase else None
-    annotated = oracle_annotate(pages, form_freqs=form_freqs)
+    label = majority_labeller(nb_sources_threshold)
+    raw = [
+        t
+        for doc in oracle_annotate(pages, form_freqs=form_freqs)
+        for t in doc_triples(
+            doc["url"], doc["tokens"], doc_mentions(doc["tokens"], doc["spans"], label), correct
+        )
+    ]
+    return oracle_finalize_graph(raw, n_hashes, bands, max_bucket)
 
-    raw: list[tuple] = []
-    for doc in annotated:
-        tokens = list(doc["tokens"])
-        layers = specialise_layers(layers_from_spans(list(doc["spans"])))
-        states, confs = majority_vote_sparse(layers, len(tokens), nb_sources_threshold)
-        ments = [
-            (s, e, lab, conf)
-            for (s, e), (lab, conf) in decode_biluo(states, confs).items()
-        ]
-        if correct:
-            ments = correct_spans_with_conf(tokens, ments)
-        raw.extend(extract_triples_from_doc(doc["url"], tokens, ments))
 
+def oracle_finalize_graph(
+    raw: list[tuple], n_hashes: int = 16, bands: int = 4, max_bucket: int = 64,
+) -> list[tuple]:
+    """Single-node mirror of the pipeline's tail over raw (subj,
+    subj_type, pred, obj, obj_type, url, conf) triples: KB linking →
+    minhash-LSH canonicalization (bit-exact xxhash64 signatures + the
+    same banding/union-find as canonicalize_triples' driver path) →
+    max-conf dedup with the deterministic surface tiebreak of
+    materialize_graph. Rows are shaped like the graph DataFrame."""
     # linking (broadcast-dictionary join mirror)
     kb = canonical_entity_ids()
     linked = []

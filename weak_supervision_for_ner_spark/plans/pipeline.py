@@ -26,7 +26,6 @@ from weak_supervision_for_ner_spark.operators.triples import (
     canonicalize_triples,
     extract_triples,
     extract_triples_direct,
-    extract_triples_fused,
     extract_triples_hmm_fused,
     link_entities,
     materialize_graph,
@@ -158,13 +157,20 @@ def run_kg_pipeline(
     aggregated layer before triple extraction — per-doc pure function,
     fused into the extraction stage, so neither default adds a shuffle.
 
-    ``mentions_consumed``: set True when the caller will materialize
-    the mentions/annotated tables as well as the graph (e.g.
-    --mentions-out). The majority-path triple extraction then reads the
-    PERSISTED annotated table (labelling runs exactly once in total)
-    instead of the pages-fused stage, which is fastest when the graph
-    is the only output but would re-run the 35-function labelling
-    stage if annotated is also materialized.
+    Triple extraction is one stage running one per-document kernel
+    (operators.triples: labeller → BILUO → [correct] → SVO); the flags
+    below only choose its input frame and labeller:
+
+    - graph-only majority run: pages, annotated inside the stage (the
+      span table never crosses Arrow), majority labeller;
+    - ``mentions_consumed`` (the caller also materializes the mentions/
+      annotated tables, e.g. --mentions-out): majority runs re-vote the
+      PERSISTED annotated rows, so the 35-function labelling stage
+      executes exactly once in total; HMM runs join the decoded
+      mentions back, so Viterbi runs once. ``with_metrics`` also
+      materializes the annotated table, so majority runs re-vote it;
+    - otherwise an HMM run decodes inside the stage over the annotated
+      rows (Viterbi labeller under the broadcast model), no join.
 
     ``stage_dir``: durable MID-PIPELINE resume (north_rule). Each major
     stage output (annotated, mentions) is written to
@@ -173,8 +179,11 @@ def run_kg_pipeline(
     instead of recomputing — so a job that died during canonicalization
     restarts without re-running the labelling or aggregation stages at
     all (the HMM additionally resumes EM mid-training from
-    ``checkpoint_dir``). Stage files are the job's own durable
-    checkpoints; clean them up after the final sink commits.
+    ``checkpoint_dir``). Triple extraction reads the committed stages:
+    majority runs re-vote the committed annotated rows; HMM runs join
+    the committed mentions back (a resumed run has no model to decode
+    with). Stage files are the job's own durable checkpoints; clean
+    them up after the final sink commits.
     """
     lineage = Lineage(lineage_path)
 
@@ -261,29 +270,20 @@ def run_kg_pipeline(
         mentions = mentions.persist()
     lineage.stage("aggregate", mentions)
 
-    if (aggregator == "hmm" and model is not None and not stage_dir
-            and not mentions_consumed):
-        # decode-fused: Viterbi + SVO in one Arrow stage over the
-        # persisted annotated table — no mentions join on the graph
-        # path. Only when the decoded mentions are NOT also being
-        # materialized: a caller exporting mentions would otherwise pay
-        # the corpus Viterbi twice (once fused, once for the export).
-        raw_triples = extract_triples_hmm_fused(
-            annotated, model, correct=entity_correction
-        )
-    elif aggregator == "hmm" or stage_dir:
-        # resumed (or stage-durable) runs extract from the committed
-        # mention/annotated stages: one co-partitioned join, no re-fit
+    # choose the extraction stage's input frame and labeller
+    if aggregator == "hmm" and (stage_dir or mentions_consumed):
+        # the decoded mentions are materialized anyway (or the model is
+        # gone on a resume): join them back, Viterbi runs once
         raw_triples = extract_triples(annotated, mentions, correct=entity_correction)
-    elif mentions_consumed or with_metrics:
-        # annotated gets materialized anyway — reuse its cache so the
-        # labelling stage executes exactly once end-to-end
-        raw_triples = extract_triples_fused(annotated, correct=entity_correction)
+    elif aggregator == "hmm":
+        raw_triples = extract_triples_hmm_fused(annotated, model, correct=entity_correction)
     else:
-        # graph-only caller: maximally-fused single python stage over
-        # pages — span structs never cross Arrow on the graph path
+        # re-vote the materialized annotated table when there is one,
+        # else annotate in the stage from pages
+        reuse = stage_dir or mentions_consumed or with_metrics
         raw_triples = extract_triples_direct(
-            pages, form_freqs=form_freqs, correct=entity_correction
+            annotated if reuse else pages, form_freqs=form_freqs,
+            correct=entity_correction,
         )
     if with_metrics:
         for row in stage_metrics(annotated).collect():
