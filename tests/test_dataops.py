@@ -861,6 +861,25 @@ def test_numpy_rerank_enforces_max_queries(spark):
             fn(emb, q, k=3, kernel="numpy", max_queries=5, **kw).collect()
 
 
+def test_numpy_rerank_unknown_query_id_fails_loudly(spark):
+    """A candidate whose query_id is missing from the broadcast query
+    set must raise: searchsorted alone would hand it the vector of the
+    neighbouring query id and score it silently."""
+    import pytest
+
+    from weak_supervision_for_ner_spark.operators.similarity import _numpy_pair_rerank
+
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (3, [0.0, 1.0])], "query_id long, embedding array<double>"
+    )
+    cand = spark.createDataFrame(
+        [(1, 10, [1.0, 0.0]), (2, 11, [0.5, 0.5])],
+        "query_id long, vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match=r"unknown query_id\(s\) \[2\]"):
+        _numpy_pair_rerank(cand, queries, 3, "vec_id", "embedding").collect()
+
+
 def test_zero_vector_never_ranks_first_in_either_kernel(spark):
     """A zero-norm embedding (failed encoder / padding row) must not
     outrank real neighbors: unguarded cosine yields NaN, which Spark's

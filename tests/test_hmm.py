@@ -176,6 +176,27 @@ def test_checkpoint_roundtrip(tmp_path):
     assert np.array_equal(p1, p2)
 
 
+def test_framelogprob_follows_in_place_emission_update():
+    """The log-table caches are keyed on a parameter version, not on
+    array identity: pinning excluded sources rewrites emission_probs IN
+    PLACE, and framelogprob must see the new table, not the cached one."""
+    doc = next(d for d in _small_corpus(10) if d["spans"])
+    X = sequence_from_spans(doc["spans"], len(doc["tokens"]))
+    model = HMMAggregator()
+    model.initialise(np.ones(N_STATES), np.ones((N_STATES, N_STATES)),
+                     np.ones((N_SOURCES, N_STATES)))
+    emissions = model.emission_probs
+    before = model.framelogprob(X)  # fills the cache
+    model._excluded = np.array([0, 1])
+    model._pin_excluded_emissions()
+    assert model.emission_probs is emissions  # same array, new contents
+    fresh = HMMAggregator._rebuilt(model.startprob_, model.transmat_,
+                                   emissions.copy(), model._excluded)
+    after = model.framelogprob(X)
+    assert not np.array_equal(after, before)
+    assert np.array_equal(after, fresh.framelogprob(X))
+
+
 def test_encoded_observations_exact():
     """The r7 sparse cell encoding must rebuild the observation tensor
     byte-for-byte: cells are harvested from extract_sequence's own

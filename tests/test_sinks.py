@@ -41,6 +41,43 @@ def test_write_graph_default_is_parquet(spark, tmp_path):
     assert spark.read.parquet(out).count() == 50
 
 
+def _part_files(root):
+    return sorted(p for p in root.rglob("part-*") if p.suffix == ".parquet")
+
+
+def test_small_graph_writes_one_file_per_pred(spark, tmp_path):
+    """At the session defaults AQE coalesces the rebalance to one writer
+    task, so a small graph writes exactly one part file per pred — not a
+    fixed bucket count per pred."""
+    from weak_supervision_for_ner_spark.operators.triples import write_graph
+
+    out = tmp_path / "g_small"
+    write_graph(_graph_rows(spark, 200), str(out))
+    files = _part_files(out)
+    assert [f.parent.name for f in files] == ["pred=acquired", "pred=born_in"]
+
+
+def test_single_hot_url_spans_several_writers(spark, tmp_path):
+    """One url carrying every row: the rebalance may split it across
+    writers once it outgrows the advisory size, where a hash
+    repartition on the url always funnels it through one task."""
+    from weak_supervision_for_ner_spark.sinks import write_table
+
+    df = spark.range(0, 2000, 1, 4).selectExpr(
+        "'https://hot.example.com/one' AS url", "'acquired' AS pred", "id",
+    )
+    out = tmp_path / "hot_url"
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    try:
+        write_table(df, str(out), partition_by=("pred",), bucket_col="url")
+    finally:
+        spark.conf.set(key, previous)
+    assert spark.read.parquet(str(out)).count() == 2000
+    assert len(_part_files(out)) > 1
+
+
 def test_iceberg_without_catalog_fails_actionably(spark, tmp_path):
     from weak_supervision_for_ner_spark.sinks import write_table
 

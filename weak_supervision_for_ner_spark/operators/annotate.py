@@ -143,14 +143,12 @@ def mentions_from_annotated(annotated: DataFrame) -> DataFrame:
     )
 
 
-def write_mentions(
-    mentions: DataFrame, target: str, buckets: int = 32, fmt: str = "parquet"
-) -> None:
-    """Sink: salted repartition on url-hash (hot-domain skew, SURVEY.md
-    §4), source-partitioned for layer pruning. ``fmt="iceberg"`` writes
-    to a catalog table via writeTo/overwritePartitions
-    (sinks.write_table)."""
+def write_mentions(mentions: DataFrame, target: str, fmt: str = "parquet") -> None:
+    """Sink: source-partitioned for layer pruning, writer tasks
+    rebalanced on url and sized from the data by AQE (hot-domain skew,
+    SURVEY.md §4). ``fmt="iceberg"`` writes to a catalog table via
+    writeTo/overwritePartitions (sinks.write_table)."""
     from weak_supervision_for_ner_spark.sinks import write_table
 
     write_table(mentions, target, fmt=fmt, partition_by=("source",),
-                bucket_col="url", buckets=buckets)
+                bucket_col="url")

@@ -106,6 +106,10 @@ def viterbi_pass(log_start, log_trans, framelogprob):
 class HMMAggregator:
     """77-state HMM over multi-source BILUO observations."""
 
+    # bumped by _params_changed on every parameter update; the log-table
+    # caches are keyed on it, so in-place updates invalidate them too
+    _params_version = 0
+
     def __init__(self, source_name: str = "HMM", n_iter: int = 10,
                  tol: float = 1e-2, seed: int = 42, informative_priors: bool = True,
                  sources_to_keep: list[str] | None = None):
@@ -163,6 +167,13 @@ class HMMAggregator:
         onehot[:, 0] = 1.0
         self.emission_probs[self._excluded] = onehot
         self.emission_priors[self._excluded] = onehot
+        self._params_changed()
+
+    def _params_changed(self) -> None:
+        """Invalidate the cached log tables. Every update of
+        startprob_/transmat_/emission_probs — in place or by
+        reassignment — must call this."""
+        self._params_version += 1
 
     def initialise(self, init_counts, trans_counts, obs_counts) -> None:
         """Build priors from corpus count aggregations
@@ -193,6 +204,7 @@ class HMMAggregator:
 
         self._initialise_emissions(obs_counts)
         self._pin_excluded_emissions()
+        self._params_changed()
 
     def _initialise_emissions(self, obs_counts: np.ndarray, strength: float = 1000.0):
         """Emission priors from SOURCE_PRIORS P/R with boundary-error x5
@@ -251,15 +263,14 @@ class HMMAggregator:
 
     def _emission_log_cache(self):
         """(log B[:, :, 0], its source-sum) — recomputed only when the
-        emission tensor object changes (per EM iteration / per task),
-        not per document: np.log of the 37x77 slice plus two errstate
-        context switches per doc were ~15% of framelogprob (r7)."""
-        ep = self.emission_probs
+        parameters change (per EM iteration / per task), not per
+        document: np.log of the 37x77 slice plus two errstate context
+        switches per doc were ~15% of framelogprob (r7)."""
         cache = getattr(self, "_logB0_cache", None)
-        if cache is None or cache[0] is not ep:
+        if cache is None or cache[0] != self._params_version:
             with np.errstate(divide="ignore"):
-                logB0 = np.log(ep[:, :, 0])  # (S, K)
-            cache = (ep, logB0, logB0.sum(axis=0))
+                logB0 = np.log(self.emission_probs[:, :, 0])  # (S, K)
+            cache = (self._params_version, logB0, logB0.sum(axis=0))
             self._logB0_cache = cache
         return cache[1], cache[2]
 
@@ -267,13 +278,13 @@ class HMMAggregator:
         """Cached (log startprob, log transmat) for Viterbi decode —
         the decode pass is stateless, so these are per-task constants
         that were being re-logged per document (6k np.log calls/doc)."""
-        sp, tm = self.startprob_, self.transmat_
         cache = getattr(self, "_lst_cache", None)
-        if cache is None or cache[0] is not sp or cache[1] is not tm:
+        if cache is None or cache[0] != self._params_version:
             with np.errstate(divide="ignore"):
-                cache = (sp, tm, np.log(sp), np.log(tm))
+                cache = (self._params_version,
+                         np.log(self.startprob_), np.log(self.transmat_))
             self._lst_cache = cache
-        return cache[2], cache[3]
+        return cache[1], cache[2]
 
     def framelogprob(self, X: np.ndarray) -> np.ndarray:
         """log Σ_sources X·emissionᵀ with masked -inf and the
@@ -389,6 +400,7 @@ class HMMAggregator:
         counts = self.emission_priors + obs
         probs = counts / (counts + 1e-100).sum(axis=2, keepdims=True)
         self.emission_probs = np.where(self.emission_probs > 0, probs, 0)
+        self._params_changed()
 
     def label(self, X: np.ndarray):
         """Viterbi decode one doc -> (state path, per-token confidence)
@@ -440,6 +452,7 @@ class HMMAggregator:
         self.transmat_ = data["transmat"]
         self.emission_priors = data["emission_priors"]
         self.emission_probs = data["emission_probs"]
+        self._params_changed()
         meta_path = (path[:-4] if path.endswith(".npz") else path) + ".meta.json"
         if os.path.exists(meta_path):
             with open(meta_path) as fd:

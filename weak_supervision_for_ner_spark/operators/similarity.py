@@ -296,7 +296,14 @@ def _numpy_pair_rerank(
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
             Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            Q = qm[np.searchsorted(ids_b, pdf["query_id"].to_numpy())]
+            q = pdf["query_id"].to_numpy()
+            idx = np.searchsorted(ids_b, q)
+            # searchsorted returns a neighbour's slot for an id it lacks:
+            # fail loudly instead of scoring against the wrong vector
+            if not ((idx < len(ids_b)).all() and np.array_equal(ids_b[idx], q)):
+                missing = sorted(set(q.tolist()) - set(ids_b.tolist()))
+                raise KeyError(f"re-rank candidates carry unknown query_id(s) {missing[:5]}")
+            Q = qm[idx]
             cos = _round_half_up6(np.einsum("ij,ij->i", Xn, Q))
             yield pd.DataFrame({
                 "query_id": pdf["query_id"].values,

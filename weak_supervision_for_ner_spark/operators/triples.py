@@ -716,10 +716,11 @@ def materialize_graph(canonical: DataFrame) -> DataFrame:
 
 
 def write_graph(graph: DataFrame, target: str, fmt: str = "parquet") -> None:
-    """Graph sink, pred-partitioned for predicate pruning; url-hash
-    salted so hot domains don't serialize one writer (SURVEY.md §4).
-    ``fmt="iceberg"`` writes to a catalog table via
-    writeTo/overwritePartitions (sinks.write_table)."""
+    """Graph sink, pred-partitioned for predicate pruning; writer tasks
+    are rebalanced on url and sized from the data by AQE, so a small
+    graph writes one file per pred and a hot domain still spreads
+    across writers (SURVEY.md §4). ``fmt="iceberg"`` writes to a
+    catalog table via writeTo/overwritePartitions (sinks.write_table)."""
     from weak_supervision_for_ner_spark.sinks import write_table
 
     write_table(graph, target, fmt=fmt, partition_by=("pred",),

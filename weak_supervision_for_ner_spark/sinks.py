@@ -9,9 +9,13 @@ targets a catalog table when one is configured and fails with an
 actionable message when not.
 
 Layout contract shared by both formats:
-- a salted ``repartition(buckets, xxhash64(bucket_col))`` ahead of the
-  write spreads hot keys (hot-domain url skew, SURVEY.md §4) so no
-  writer task owns a mega-partition;
+- an AQE ``REBALANCE(bucket_col)`` hint ahead of the write sizes the
+  writer tasks from the data: adaptive execution coalesces the
+  rebalance shuffle to ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+  (a small graph becomes one writer task, so one file per partition
+  value) and splits oversized partitions. The hash is on the full key,
+  so a hot domain (url skew, SURVEY.md §4) spreads across writers, and
+  a single hot url may span several;
 - ``partition_by`` columns become directory partitions (parquet) or
   identity partition fields (Iceberg) — pred for the graph, source for
   mentions — giving consumers partition pruning either way.
@@ -30,7 +34,6 @@ def write_table(
     fmt: str = "parquet",
     partition_by: tuple[str, ...] = (),
     bucket_col: str | None = None,
-    buckets: int = 32,
 ) -> None:
     """Write ``df`` to ``target`` — a filesystem path (parquet) or a
     catalog table name (iceberg) — overwriting previous contents.
@@ -38,11 +41,14 @@ def write_table(
     Iceberg path: ``overwritePartitions`` when the table already exists
     (the idempotent re-run shape: only partitions present in ``df`` are
     replaced), ``create`` with identity partitioning otherwise.
+
+    ``bucket_col``: the column the writer tasks are rebalanced on; the
+    task count comes from the data, not from a constant.
     """
     if fmt not in FORMATS:
         raise ValueError(f"fmt must be one of {FORMATS}, got {fmt!r}")
     if bucket_col is not None:
-        df = df.repartition(buckets, F.xxhash64(bucket_col))
+        df = df.hint("rebalance", F.col(bucket_col))
 
     if fmt == "parquet":
         writer = df.write.mode("overwrite")

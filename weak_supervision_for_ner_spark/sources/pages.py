@@ -17,8 +17,8 @@ percent/quantity/ordinal, legal references, NORP/LANGUAGE/FAC/EVENT,
 repeated entities (doc-majority), long-form→short-form pairs
 (doc-history), and SVO relation patterns (triple extraction).
 
-Hot-domain skew: >=30% of urls come from 2 domains (exercises salted
-repartitioning, SURVEY.md §4).
+Hot-domain skew: >=30% of urls come from 2 domains (exercises the
+sinks' url rebalance, SURVEY.md §4).
 """
 
 from __future__ import annotations
