@@ -797,17 +797,9 @@ def q_pages_majority(spark, sf_dir):
 
 def q_pages_hmm(spark, sf_dir):
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
-    from weak_supervision_for_ner_spark.operators.hmm import (
-        HMMAggregator,
-        encode_observations,
-    )
+    from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
 
-    # persist the ENCODED observation frame (r7): the prior pass, both
-    # EM iterations and the decode all consume the same per-doc tensor,
-    # so the span->specialise->extract derivation runs once instead of
-    # once per pass (reconstruction is exact — cells are harvested from
-    # the reference chain's own output; tests/test_hmm.py pins it)
-    annotated = encode_observations(annotate_pages(_pages(spark, sf_dir))).persist()
+    annotated = annotate_pages(_pages(spark, sf_dir)).persist()
     model = HMMAggregator(n_iter=2)
     model.fit_spark(spark, annotated)
     return model.decode_spark(spark, annotated)

@@ -195,27 +195,3 @@ def test_framelogprob_follows_in_place_emission_update():
     after = model.framelogprob(X)
     assert not np.array_equal(after, before)
     assert np.array_equal(after, fresh.framelogprob(X))
-
-
-def test_encoded_observations_exact():
-    """The r7 sparse cell encoding must rebuild the observation tensor
-    byte-for-byte: cells are harvested from extract_sequence's own
-    output, so any divergence here would silently change the hash-gated
-    HMM mentions."""
-    from weak_supervision_for_ner_spark.operators.hmm import _X_from_cells
-
-    annotated = _small_corpus(60)
-    checked = 0
-    for doc in annotated:
-        n = len(doc["tokens"])
-        if n == 0:
-            continue
-        X = sequence_from_spans(list(doc["spans"]), n)
-        base = np.zeros_like(X)
-        base[:, :, 0] = 1.0
-        t_i, s_i, k_i = np.nonzero(X != base)
-        rebuilt = _X_from_cells(n, t_i.astype(np.int32), s_i.astype(np.int32),
-                                k_i.astype(np.int32), X[t_i, s_i, k_i])
-        assert np.array_equal(X, rebuilt)
-        checked += 1
-    assert checked > 0

@@ -65,13 +65,16 @@ def test_labelmodel_quality_between_floor_and_mv(spark, annotated):
     assert 0.6 < sn_f1 < mv_f1
 
 
-def test_labelmodel_tree_combine_matches_flat(spark, annotated):
+def test_labelmodel_tree_level_matches_flat(spark, annotated, monkeypatch):
+    from weak_supervision_for_ner_spark.operators import partials
     from weak_supervision_for_ner_spark.operators.labelmodel import LabelModelAggregator
 
     flat = LabelModelAggregator(n_iter=3)
-    flat.fit_spark(spark, annotated, tree_combine=False)
+    flat.fit_spark(spark, annotated)
+    # the test session is below the tree-level threshold: lower it
+    monkeypatch.setattr(partials, "TREE_MIN_PARALLELISM", 1)
     wide = LabelModelAggregator(n_iter=3)
-    wide.fit_spark(spark, annotated.repartition(256), tree_combine=True, combine_fanin=16)
+    wide.fit_spark(spark, annotated.repartition(256))
     for a, b in zip(flat.history, wide.history):
         assert a == pytest.approx(b, rel=1e-9)
     assert np.allclose(np.exp(flat.log_conf), np.exp(wide.log_conf))

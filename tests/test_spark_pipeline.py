@@ -135,23 +135,26 @@ def test_hmm_spark_fit_and_decode(spark, tmp_path):
     assert np.allclose(model2.emission_probs, model.emission_probs)
 
 
-def test_hmm_tree_combine_matches_flat_collect(spark):
+def test_hmm_tree_level_matches_flat_collect(spark, monkeypatch):
     """E-step stats AND the one-time prior-count pass summed through
     the tree-combine level at 256 partitions must reproduce the
     flat-collect fit (same prior matrices, same logprob history up to
     float summation order, same parameters)."""
     import numpy as np
 
+    from weak_supervision_for_ner_spark.operators import partials
     from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
 
     pages = synth_pages(spark, 60, partitions=3)
     annotated = annotate_pages(pages).persist()
 
     flat = HMMAggregator(n_iter=2)
-    flat.fit_spark(spark, annotated, tree_combine=False)
+    flat.fit_spark(spark, annotated)
 
+    # the test session is below the tree-level threshold: lower it
+    monkeypatch.setattr(partials, "TREE_MIN_PARALLELISM", 1)
     wide = HMMAggregator(n_iter=2)
-    wide.fit_spark(spark, annotated.repartition(256), tree_combine=True, combine_fanin=16)
+    wide.fit_spark(spark, annotated.repartition(256))
 
     # prior-count pass parity (flat driver sum vs tree-combined)
     assert np.allclose(flat.startprob_prior, wide.startprob_prior)

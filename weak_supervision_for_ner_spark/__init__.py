@@ -10,8 +10,10 @@ Architecture (Spark-first, not a port):
 - All labelling functions run inside ONE narrow ``mapInPandas`` stage
   (Arrow-batched; no per-row Python UDFs, no shuffle until the sink).
 - The HMM aggregator is an iterative driver loop: per-partition
-  E-step count matrices via ``mapInPandas`` + treeReduce, numpy M-step
-  on the driver, params broadcast each iteration, checkpointed to disk.
+  E-step count matrices via ``mapInPandas``, summed on the driver
+  (``operators.partials.sum_partials``, with a ``groupBy`` pre-sum level
+  on large clusters), numpy M-step on the driver, params broadcast each
+  iteration, checkpointed to disk.
 - KG stages (triple extraction, entity linking, minhash-LSH
   canonicalization) are DataFrame ops: broadcast joins, groupBy on
   LSH bands, iterative-join connected components.

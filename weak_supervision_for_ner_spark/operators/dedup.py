@@ -100,7 +100,10 @@ def ngram_jaccard_pairs(
 
     ``max_shingle_freq`` drops ubiquitous shingles from *blocking*
     (boilerplate guard) — recall is unaffected as long as any
-    non-ubiquitous shingle is shared."""
+    non-ubiquitous shingle is shared.
+
+    Not fully lazy: for integral ids, building the plan runs one eager
+    Spark job (the doc_id min/max probe that gates the packed pair key)."""
     sh = word_shingles(documents, n)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))

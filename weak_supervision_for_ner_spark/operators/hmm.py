@@ -13,9 +13,10 @@ Distributed execution (SURVEY.md §3.2):
 - each EM iteration = mapInPandas E-step emitting ONE partial-stats
   row per partition (map-side combine) + driver-side final sum and
   M-step; params re-broadcast per iteration;
+- both passes are summed by ``operators.partials.sum_partials``, the
+  reducer the label model's E-step shares;
 - per-iteration checkpoints (params + logprob) make the loop resumable
-  mid-pipeline (north_rule), and Spark accumulator-style counters
-  (docs, tokens) ride along in the stats rows as lineage metrics.
+  mid-pipeline (north_rule).
 
 Determinism: dirichlet inits are seeded (the reference's are not,
 labelling.py:332/357 — SURVEY.md §7.4 calls this out as required).
@@ -31,13 +32,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from weak_supervision_for_ner_spark.operators.aggregate import (
     N_SOURCES,
     N_STATES,
     sequence_from_spans,
 )
+from weak_supervision_for_ner_spark.operators.partials import sum_partials
 from weak_supervision_for_ner_spark.operators.triples import doc_mentions
 from weak_supervision_for_ner_spark.schema import (
     MENTIONS_SCHEMA,
@@ -461,31 +462,20 @@ class HMMAggregator:
 
     # -- Spark driver loop -------------------------------------------------
 
-    @staticmethod
-    def _is_encoded(df: DataFrame) -> bool:
-        return "obs_t" in df.columns
-
     def fit_spark(
         self,
         spark: SparkSession,
         annotated: DataFrame,
         checkpoint_dir: str | None = None,
         resume: bool = False,
-        tree_combine: bool | str = "auto",
-        combine_fanin: int = 32,
     ) -> "HMMAggregator":
         """Baum-Welch over an annotated DataFrame.
 
         Per iteration: ONE narrow mapInPandas pass emitting one
-        partial-stats row per partition (map-side combine), then either
-        a direct driver sum (few partitions) or a tree-combine level —
-        a groupBy(partition_id % fanin) applyInPandas that pre-sums the
-        ~2.3 MB obs matrices so the driver receives ``combine_fanin``
-        rows instead of one per partition (O(fanin) driver traffic at
-        any cluster size; at 10k partitions the flat collect would be
-        ~23 GB). ``tree_combine="auto"`` turns the extra level on when
-        defaultParallelism >= 128, so small/local runs skip the extra
-        stage. Then numpy M-step, checkpoint, re-broadcast.
+        partial-stats row per partition (map-side combine), summed on
+        the driver by :func:`operators.partials.sum_partials` (which
+        adds a tree-combine level on large clusters). Then numpy M-step,
+        checkpoint, re-broadcast.
 
         Convergence follows the reference (hmmlearn ConvergenceMonitor,
         labelling.py:238): stop when the SIGNED logprob delta drops
@@ -493,22 +483,11 @@ class HMMAggregator:
         with a logged warning mirroring hmmlearn's monitor, and
         ``n_iter`` caps the loop either way.
         """
-        # the fit passes need only the token COUNT and the observation
-        # payload: projecting the token strings out here keeps them off
-        # the Arrow boundary for the prior pass and every EM iteration
-        # (guide §4.1: pass only the columns the function needs). An
-        # encode_observations() input additionally replaces the span
-        # rows with precomputed sparse tensor cells, so the
-        # layers/specialise/extract chain is not re-run per pass.
-        encoded = self._is_encoded(annotated)
-        if encoded:
-            annotated = annotated.select(
-                "n_tokens", "obs_t", "obs_s", "obs_k", "obs_v"
-            )
-        else:
-            annotated = annotated.select(
-                F.size("tokens").alias("n_tokens"), "spans"
-            )
+        # the fit passes need only the token COUNT and the spans:
+        # projecting the token strings out here keeps them off the Arrow
+        # boundary for the prior pass and every EM iteration (guide
+        # §4.1: pass only the columns the function needs)
+        annotated = annotated.select(F.size("tokens").alias("n_tokens"), "spans")
 
         start_iter = 0
         if resume and checkpoint_dir:
@@ -533,78 +512,46 @@ class HMMAggregator:
 
         if self.startprob_ is None:
             counts = _collect_prior_counts(
-                annotated, self._best_coverage_source_index(), self._excluded,
-                tree_combine=tree_combine, combine_fanin=combine_fanin,
-                encoded=encoded,
+                annotated, self._best_coverage_source_index(), self._excluded
             )
             self.initialise(*counts)
             if checkpoint_dir:
                 self.save(os.path.join(checkpoint_dir, "iter_init"), -1, None)
 
         sc = spark.sparkContext
+        excluded = self._excluded
         prev_logprob = self.history[-1] if self.history else None
         for iteration in range(start_iter, self.n_iter):
-            params_bc = sc.broadcast(
-                (self.startprob_, self.transmat_, self.emission_probs,
-                 self.emission_priors, self.startprob_prior, self.transmat_prior)
-            )
-            agg = self
-            excluded = self._excluded
+            params_bc = sc.broadcast((self.startprob_, self.transmat_, self.emission_probs))
 
-            def e_step_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                sp, tm, ep, epr, spp, tmp = params_bc.value
-                model = HMMAggregator._rebuilt(sp, tm, ep, excluded)
+            def e_step_partition(batches: Iterator[pd.DataFrame]) -> dict:
+                model = HMMAggregator._rebuilt(*params_bc.value, excluded)
                 logprob = 0.0
-                n_docs = 0
-                n_tokens = 0
                 start = np.zeros(N_STATES)
                 trans = np.zeros((N_STATES, N_STATES))
                 obs = np.zeros((N_SOURCES, N_STATES, N_STATES))
-                for pdf in batches:
-                    for n_toks, payload in _iter_observations(pdf, encoded):
-                        if n_toks == 0:
-                            continue
-                        X = _materialize_X(payload, n_toks, encoded)
-                        lp, st, tr, ob = model.e_step(X)
-                        logprob += lp
-                        start += st
-                        trans += tr
-                        obs += ob
-                        n_docs += 1
-                        n_tokens += int(n_toks)
-                yield pd.DataFrame({
-                    "logprob": [logprob], "n_docs": [n_docs], "n_tokens": [n_tokens],
-                    "start": [start.tobytes()], "trans": [trans.tobytes()],
-                    "obs": [obs.tobytes()],
-                })
+                for X in _doc_tensors(batches):
+                    lp, st, tr, ob = model.e_step(X)
+                    logprob += lp
+                    start += st
+                    trans += tr
+                    obs += ob
+                return {"logprob": logprob, "start": start, "trans": trans, "obs": obs}
 
-            schema = T.StructType([
-                T.StructField("logprob", T.DoubleType()),
-                T.StructField("n_docs", T.LongType()),
-                T.StructField("n_tokens", T.LongType()),
-                T.StructField("start", T.BinaryType()),
-                T.StructField("trans", T.BinaryType()),
-                T.StructField("obs", T.BinaryType()),
-            ])
-            stats = annotated.mapInPandas(e_step_partition, schema=schema)
-            use_tree = tree_combine is True or (
-                tree_combine == "auto" and sc.defaultParallelism >= 128
-            )
-            if use_tree:
-                stats = _tree_combine_stats(stats, schema, combine_fanin)
-            rows = stats.collect()
+            sums = sum_partials(annotated, e_step_partition, {
+                "logprob": (),
+                "start": (N_STATES,),
+                "trans": (N_STATES, N_STATES),
+                "obs": (N_SOURCES, N_STATES, N_STATES),
+            })
             params_bc.destroy()
 
-            curr_logprob = sum(r["logprob"] for r in rows)
-            start = sum(np.frombuffer(r["start"]).reshape(N_STATES) for r in rows)
-            trans = sum(np.frombuffer(r["trans"]).reshape(N_STATES, N_STATES) for r in rows)
-            obs = sum(np.frombuffer(r["obs"]).reshape(N_SOURCES, N_STATES, N_STATES) for r in rows)
-
-            self.m_step(start, trans, obs)
-            self.history.append(float(curr_logprob))
+            curr_logprob = sums["logprob"]
+            self.m_step(sums["start"], sums["trans"], sums["obs"])
+            self.history.append(curr_logprob)
             if checkpoint_dir:
                 self.save(os.path.join(checkpoint_dir, f"iter_{iteration:03d}"),
-                          iteration, float(curr_logprob))
+                          iteration, curr_logprob)
             if prev_logprob is not None and curr_logprob - prev_logprob < self.tol:
                 if curr_logprob < prev_logprob:
                     # mirrors hmmlearn's ConvergenceMonitor warning: EM
@@ -630,174 +577,51 @@ class HMMAggregator:
         model._excluded = excluded
         return model
 
-    def labeller(self, spark: SparkSession, encoded: bool = False):
+    def labeller(self, spark: SparkSession):
         """This model's Viterbi as a labeller for the per-document kernel
-        (operators.triples.doc_mentions): ``label(obs, n_tokens)``, where
-        ``obs`` is a doc's span rows, or its encode_observations cells
-        when ``encoded``. The parameters travel as one broadcast; the
-        model is rebuilt once per task, on first use."""
+        (operators.triples.doc_mentions): ``label(spans, n_tokens)``.
+        The parameters travel as one broadcast; the model is rebuilt
+        once per task, on first use."""
         params_bc = spark.sparkContext.broadcast(
             (self.startprob_, self.transmat_, self.emission_probs)
         )
         excluded, cls = self._excluded, type(self)
         model = None
 
-        def label(obs, n_tokens: int):
+        def label(spans, n_tokens: int):
             nonlocal model
             if model is None:
                 model = cls._rebuilt(*params_bc.value, excluded)
-            return model.label(_materialize_X(obs, n_tokens, encoded))
+            return model.label(sequence_from_spans(list(spans), n_tokens))
 
         return label
 
     def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
         """Stateless Viterbi decode: annotated -> HMM mention rows."""
-        encoded = self._is_encoded(annotated)
-        label = self.labeller(spark, encoded)
+        label = self.labeller(spark)
         source_name = self.source_name
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 rows = [
                     (url, source_name, s, e, lab, conf, " ".join(tokens[s:e]))
-                    for url, tokens, (_n, obs) in zip(
-                        pdf["url"], pdf["tokens"], _iter_observations(pdf, encoded)
-                    )
-                    for (s, e, lab, conf) in doc_mentions(tokens, obs, label)
+                    for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"])
+                    for (s, e, lab, conf) in doc_mentions(tokens, spans, label)
                 ]
                 yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
 
-        cols = ["url", "tokens", "n_tokens", "obs_t", "obs_s", "obs_k", "obs_v"] \
-            if encoded else ["url", "tokens", "spans"]
-        return annotated.select(*cols).mapInPandas(run, schema=MENTIONS_SCHEMA)
+        return annotated.select("url", "tokens", "spans").mapInPandas(
+            run, schema=MENTIONS_SCHEMA
+        )
 
 
-# ---------------------------------------------------------------------------
-# Precomputed observation encoding (r7): the fit+decode flow re-ran the
-# layers_from_spans -> specialise_layers -> extract_sequence chain once
-# per pass (prior counts, every EM iteration, decode — 4x per doc for
-# the benchmark's fit(2)+decode). encode_observations harvests the
-# sparse cells of the FINAL tensor produced by the reference chain
-# itself (every (t, source, state) where X differs from the all-O
-# default), so reconstruction is exact by construction — asserted
-# cell-for-cell by tests/test_hmm.py::test_encoded_observations_exact.
-# ---------------------------------------------------------------------------
-
-def encode_observations(annotated: DataFrame) -> DataFrame:
-    """annotated(url, tokens, spans) -> (url, tokens, n_tokens,
-    obs_t, obs_s, obs_k, obs_v): the per-doc observation tensor's
-    non-default cells as parallel primitive arrays (Arrow-friendly —
-    struct arrays would decode to per-cell python dicts).
-
-    fit_spark/decode_spark detect the encoded columns and skip the
-    span-to-tensor derivation per pass; persist the encoded frame once
-    and feed it to both."""
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, toks_out, n_tokens = [], [], []
-            ats, ass, aks, avs = [], [], [], []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                n = len(tokens)
-                urls.append(url)
-                toks_out.append(list(tokens))
-                n_tokens.append(n)
-                if n == 0:
-                    for a in (ats, ass, aks, avs):
-                        a.append([])
-                    continue
-                X = sequence_from_spans(list(spans), n)
-                base = np.zeros_like(X)
-                base[:, :, 0] = 1.0
-                t_i, s_i, k_i = np.nonzero(X != base)
-                ats.append(t_i.astype(np.int32))
-                ass.append(s_i.astype(np.int32))
-                aks.append(k_i.astype(np.int32))
-                avs.append(X[t_i, s_i, k_i])
-            yield pd.DataFrame({
-                "url": urls, "tokens": toks_out, "n_tokens": n_tokens,
-                "obs_t": ats, "obs_s": ass, "obs_k": aks, "obs_v": avs,
-            })
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("obs_t", T.ArrayType(T.IntegerType())),
-        T.StructField("obs_s", T.ArrayType(T.IntegerType())),
-        T.StructField("obs_k", T.ArrayType(T.IntegerType())),
-        T.StructField("obs_v", T.ArrayType(T.FloatType())),
-    ])
-    return annotated.select("url", "tokens", "spans").mapInPandas(enc, schema=schema)
-
-
-def _X_from_cells(n: int, ts, ss, ks, vs) -> np.ndarray:
-    """Rebuild the dense float32 observation tensor from its
-    non-default cells. Cell coordinates are unique (np.nonzero), so
-    the scatter is order-free; values round-trip float32-exact."""
-    X = np.zeros((n, N_SOURCES, N_STATES), dtype=np.float32)
-    X[:, :, 0] = 1.0
-    if len(ts):
-        X[np.asarray(ts, dtype=np.int64), np.asarray(ss, dtype=np.int64),
-          np.asarray(ks, dtype=np.int64)] = np.asarray(vs, dtype=np.float32)
-    return X
-
-
-def _iter_observations(pdf: pd.DataFrame, encoded: bool):
-    """Yield (n_tokens, payload) per row for either input form."""
-    if encoded:
-        for n, t, s, k, v in zip(pdf["n_tokens"], pdf["obs_t"], pdf["obs_s"],
-                                 pdf["obs_k"], pdf["obs_v"]):
-            yield int(n), (t, s, k, v)
-    elif "n_tokens" in pdf.columns:
-        for n, spans in zip(pdf["n_tokens"], pdf["spans"]):
-            yield int(n), spans
-    else:  # decode path on raw annotated rows
-        for tokens, spans in zip(pdf["tokens"], pdf["spans"]):
-            yield len(tokens), spans
-
-
-def _materialize_X(payload, n_toks: int, encoded: bool) -> np.ndarray:
-    if encoded:
-        t, s, k, v = payload
-        return _X_from_cells(n_toks, t, s, k, v)
-    return sequence_from_spans(list(payload), n_toks)
-
-
-def _tree_combine_stats(stats: DataFrame, schema, fanin: int,
-                        shapes: dict[str, tuple] | None = None) -> DataFrame:
-    """Second aggregation level for one-row-per-partition partials:
-    shuffle the stats rows to ``fanin`` groups and sum inside each with
-    applyInPandas, bounding driver traffic at O(fanin) rows regardless
-    of the input partition count. ``shapes`` names the BINARY columns
-    (packed ndarrays) with their array shapes; every other column is
-    summed numerically (floats stay float, ints stay int). Used by both
-    the per-iteration E-step pass and the one-time prior-count pass."""
-    if shapes is None:
-        shapes = {
-            "start": (N_STATES,),
-            "trans": (N_STATES, N_STATES),
-            "obs": (N_SOURCES, N_STATES, N_STATES),
-        }
-    fields = [(f.name, f.dataType.typeName()) for f in schema.fields]
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {}
-        for name, typ in fields:
-            if name in shapes:
-                total = sum(np.frombuffer(b).reshape(shapes[name]) for b in pdf[name])
-                out[name] = [total.tobytes()]
-            elif typ in ("long", "integer"):
-                out[name] = [int(pdf[name].sum())]
-            else:
-                out[name] = [pdf[name].sum()]
-        return pd.DataFrame(out)
-
-    return (
-        stats
-        .withColumn("g", F.spark_partition_id() % F.lit(fanin))
-        .groupBy("g")
-        .applyInPandas(lambda _key, pdf: combine(pdf), schema=schema)
-    )
+def _doc_tensors(batches: Iterator[pd.DataFrame]) -> Iterator[np.ndarray]:
+    """The observation tensor of every document with tokens, from
+    (n_tokens, spans) batches."""
+    for pdf in batches:
+        for n_toks, spans in zip(pdf["n_tokens"], pdf["spans"]):
+            if n_toks:
+                yield sequence_from_spans(list(spans), int(n_toks))
 
 
 # ---------------------------------------------------------------------------
@@ -807,58 +631,30 @@ def _tree_combine_stats(stats: DataFrame, schema, fanin: int,
 
 def _collect_prior_counts(
     annotated: DataFrame, best_source_index: int, excluded: np.ndarray | None = None,
-    tree_combine: bool | str = "auto", combine_fanin: int = 32,
-    encoded: bool = False,
 ):
-    """One partial-counts row per partition, then (like the E-step) an
-    optional tree-combine level: each row is ~78 KB of packed matrices,
-    so a flat collect at 10k partitions would be ~780 MB of driver
-    traffic — the same auto rule (defaultParallelism >= 128) bounds it
-    at O(fanin) rows. One-time pass, not per-iteration."""
-    def count_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(init, trans, obs) counts of the best-coverage source's argmax
+    path, one partial row per partition summed by ``sum_partials``.
+    One-time pass, not per-iteration."""
+    def count_partition(batches: Iterator[pd.DataFrame]) -> dict:
         init = np.zeros(N_STATES)
         trans = np.zeros((N_STATES, N_STATES))
         obs = np.zeros((N_SOURCES, N_STATES))
-        for pdf in batches:
-            for n_toks, payload in _iter_observations(pdf, encoded):
-                if n_toks == 0:
-                    continue
-                X = _materialize_X(payload, n_toks, encoded)
-                if excluded is not None and len(excluded):
-                    X[:, excluded, :] = 0.0
-                    X[:, excluded, 0] = 1.0
-                best = X[:, best_source_index, :].argmax(axis=1)
-                init[best[0]] += 1
-                np.add.at(trans, (best[:-1], best[1:]), 1.0)
-                obs += X.sum(axis=0)
-        yield pd.DataFrame({
-            "init": [init.tobytes()], "trans": [trans.tobytes()], "obs": [obs.tobytes()],
-        })
+        for X in _doc_tensors(batches):
+            if excluded is not None and len(excluded):
+                X[:, excluded, :] = 0.0
+                X[:, excluded, 0] = 1.0
+            best = X[:, best_source_index, :].argmax(axis=1)
+            init[best[0]] += 1
+            np.add.at(trans, (best[:-1], best[1:]), 1.0)
+            obs += X.sum(axis=0)
+        return {"init": init, "trans": trans, "obs": obs}
 
-    schema = T.StructType([
-        T.StructField("init", T.BinaryType()),
-        T.StructField("trans", T.BinaryType()),
-        T.StructField("obs", T.BinaryType()),
-    ])
-    stats = annotated.mapInPandas(count_partition, schema=schema)
-    sc = annotated.sparkSession.sparkContext
-    use_tree = tree_combine is True or (
-        tree_combine == "auto" and sc.defaultParallelism >= 128
-    )
-    if use_tree:
-        stats = _tree_combine_stats(
-            stats, schema, combine_fanin,
-            shapes={
-                "init": (N_STATES,),
-                "trans": (N_STATES, N_STATES),
-                "obs": (N_SOURCES, N_STATES),
-            },
-        )
-    rows = stats.collect()
-    init = sum(np.frombuffer(r["init"]).reshape(N_STATES) for r in rows)
-    trans = sum(np.frombuffer(r["trans"]).reshape(N_STATES, N_STATES) for r in rows)
-    obs = sum(np.frombuffer(r["obs"]).reshape(N_SOURCES, N_STATES) for r in rows)
-    return init, trans, obs
+    sums = sum_partials(annotated, count_partition, {
+        "init": (N_STATES,),
+        "trans": (N_STATES, N_STATES),
+        "obs": (N_SOURCES, N_STATES),
+    })
+    return sums["init"], sums["trans"], sums["obs"]
 
 
 def _quarantine_checkpoints(checkpoint_dir: str) -> None:

@@ -13,7 +13,8 @@ silent).
 Spark-first layout mirrors ``HMMAggregator.fit_spark``: vote extraction
 is a row-local Arrow stage, each EM iteration is ONE narrow mapInPandas
 pass emitting tiny per-partition sufficient statistics (priors C=20
-plus 48x20x20 vote counts ~ 150 KB), and the M-step runs on the driver.
+plus 48x20x20 vote counts ~ 150 KB) summed by the HMM's reducer,
+``operators.partials.sum_partials``, and the M-step runs on the driver.
 The single-node oracle calls the same per-doc/EM code, so Spark output
 equals the oracle exactly.
 """
@@ -24,13 +25,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from weak_supervision_for_ner_spark.operators.aggregate import (
     layers_from_spans,
     specialise_layers,
 )
+from weak_supervision_for_ner_spark.operators.partials import sum_partials
 from weak_supervision_for_ner_spark.schema import (
     GENERIC_LABELS,
     LABELS,
@@ -173,43 +174,17 @@ class LabelModelAggregator:
 
     # -- Spark driver loop --------------------------------------------------
 
-    def fit_spark(
-        self, spark: SparkSession, annotated: DataFrame,
-        tree_combine: bool | str = "auto", combine_fanin: int = 32,
-    ) -> "LabelModelAggregator":
+    def fit_spark(self, spark: SparkSession, annotated: DataFrame) -> "LabelModelAggregator":
         annotated = annotated.select("spans")
         self.log_prior, self.log_conf = self._init_params()
         sc = spark.sparkContext
         cand, keep = self.candidate_sources, self.sources_to_keep
-        schema = T.StructType([
-            T.StructField("loglik", T.DoubleType()),
-            T.StructField("prior_c", T.BinaryType()),
-            T.StructField("vote_c", T.BinaryType()),
-        ])
-        # same driver-traffic bound as HMMAggregator.fit_spark: each
-        # partial row carries ~150 KB of vote counts, so beyond ~128
-        # partitions a groupBy(partition_id % fanin) pre-sum keeps the
-        # collect at O(fanin) rows
-        use_tree = tree_combine is True or (
-            tree_combine == "auto" and sc.defaultParallelism >= 128
-        )
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            prior_c = sum(np.frombuffer(b).reshape(N_CLASSES) for b in pdf["prior_c"])
-            vote_c = sum(
-                np.frombuffer(b).reshape(N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES)
-                for b in pdf["vote_c"]
-            )
-            return pd.DataFrame({
-                "loglik": [pdf["loglik"].sum()],
-                "prior_c": [prior_c.tobytes()], "vote_c": [vote_c.tobytes()],
-            })
         for _ in range(self.n_iter):
-            params_bc = sc.broadcast((self.log_prior, self.log_conf, self.smoothing))
-            def e_step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                lp, lc, sm = params_bc.value
+            params_bc = sc.broadcast((self.log_prior, self.log_conf))
+
+            def e_step(batches: Iterator[pd.DataFrame]) -> dict:
                 model = LabelModelAggregator.__new__(LabelModelAggregator)
-                model.log_prior, model.log_conf = lp, lc
+                model.log_prior, model.log_conf = params_bc.value
                 prior_c = np.zeros(N_CLASSES)
                 vote_c = np.zeros((N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES))
                 loglik = 0.0
@@ -218,31 +193,16 @@ class LabelModelAggregator:
                         _, obs = span_votes(list(spans), cand, keep)
                         if len(obs):
                             loglik += model._accumulate(obs, prior_c, vote_c)
-                yield pd.DataFrame({
-                    "loglik": [loglik],
-                    "prior_c": [prior_c.tobytes()],
-                    "vote_c": [vote_c.tobytes()],
-                })
+                return {"loglik": loglik, "prior_c": prior_c, "vote_c": vote_c}
 
-            stats = annotated.mapInPandas(e_step, schema=schema)
-            if use_tree:
-                stats = (
-                    stats
-                    .withColumn("g", F.spark_partition_id() % F.lit(combine_fanin))
-                    .groupBy("g")
-                    .applyInPandas(lambda _key, pdf: combine(pdf), schema=schema)
-                )
-            rows = stats.collect()
+            sums = sum_partials(annotated, e_step, {
+                "loglik": (),
+                "prior_c": (N_CLASSES,),
+                "vote_c": (N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES),
+            })
             params_bc.destroy()
-            prior_c = sum(
-                np.frombuffer(r["prior_c"]).reshape(N_CLASSES) for r in rows
-            )
-            vote_c = sum(
-                np.frombuffer(r["vote_c"]).reshape(N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES)
-                for r in rows
-            )
-            self._m_step(prior_c, vote_c)
-            self.history.append(float(sum(r["loglik"] for r in rows)))
+            self._m_step(sums["prior_c"], sums["vote_c"])
+            self.history.append(sums["loglik"])
         return self
 
     # -- decode ------------------------------------------------------------

@@ -133,7 +133,11 @@ def brute_force_topk(
 
     Both kernels round cosines to 6 decimals BEFORE ranking and break
     ties by ascending neighbor id, so their outputs are identical
-    row-for-row (asserted by tests)."""
+    row-for-row (asserted by tests).
+
+    Not fully lazy: building the plan runs one eager Spark job — the
+    jvm kernel's vector-dimension probe (``_probe_dim``), the numpy
+    kernel's query collect."""
     if kernel == "jvm":
         # norms once per side BEFORE the pair join (they were recomputed
         # per pair); dot unrolled into codegen when the dim is uniform

@@ -17,10 +17,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from weak_supervision_for_ner_spark.operators.aggregate import majority_voter_mentions
-from weak_supervision_for_ner_spark.operators.annotate import (
-    annotate_pages,
-    mentions_from_annotated,
-)
+from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
 from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
 from weak_supervision_for_ner_spark.operators.triples import (
     canonicalize_triples,
@@ -296,12 +293,6 @@ def run_kg_pipeline(
     graph = materialize_graph(canonical)
     lineage.stage("graph", graph, **canon_stats)
     return annotated, mentions, graph
-
-
-def all_source_mentions(pages: DataFrame) -> DataFrame:
-    """The raw weak-supervision mention table (every labelling
-    function's layer, exploded long form)."""
-    return mentions_from_annotated(annotate_pages(pages))
 
 
 def verify_text_identity(pages: DataFrame) -> int:
