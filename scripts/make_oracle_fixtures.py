@@ -224,8 +224,10 @@ def main() -> None:
     lm.fit([d["spans"] for d in annotated])
     sn_rows = []
     for d in annotated:
-        sn_rows.extend(tuple(r) for r in
-                       lm.decode_doc(d["url"], list(d["tokens"]), d["spans"]))
+        tokens = list(d["tokens"])
+        sn_rows.extend(
+            (d["url"], lm.source_name, s, e, lab, conf, " ".join(tokens[s:e]))
+            for (s, e, lab, conf) in lm.decode_doc(tokens, d["spans"]))
     pq.write_table(_mention_table(sn_rows),
                    os.path.join(OUT_DIR, "oracle_snorkel_sf0.01.parquet"))
     print(f"snorkel decode: {len(sn_rows)} rows")

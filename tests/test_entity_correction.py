@@ -82,6 +82,7 @@ def test_overlap_merge_money_wins():
 def test_spark_correct_mentions_matches_pure_function(spark):
     from weak_supervision_for_ner_spark.operators.entity_correction import (
         correct_mentions,
+        correct_spans_with_conf,
     )
 
     tokens = "it cost 3,400 USD in Q1".split()
@@ -95,13 +96,17 @@ def test_spark_correct_mentions_matches_pure_function(spark):
         "url string, source string, start int, end int, label string, conf double, text string",
     )
     got = sorted(
-        (r["start"], r["end"], r["label"]) for r in correct_mentions(mentions, annotated).collect()
+        (r["start"], r["end"], r["label"], r["conf"])
+        for r in correct_mentions(mentions, annotated).collect()
     )
-    want = sorted(correct_entity_spans(
-        tokens, [(2, 3, "CARDINAL"), (5, 6, "DATE")]
+    want = sorted(correct_spans_with_conf(
+        tokens, [(2, 3, "CARDINAL", 0.9), (5, 6, "DATE", 0.8)]
     ))
     assert got == want
-    assert got == [(2, 4, "MONEY")]
+    assert [g[:3] for g in got] == sorted(correct_entity_spans(
+        tokens, [(2, 3, "CARDINAL"), (5, 6, "DATE")]
+    ))
+    assert got == [(2, 4, "MONEY", 0.9)]
 
 
 def test_overlap_merge_preserves_money_across_intervening_span():

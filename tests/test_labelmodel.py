@@ -31,6 +31,24 @@ def test_labelmodel_spark_matches_oracle(spark, annotated):
     assert np.allclose(np.exp(dist.log_prior), np.exp(local.log_prior))
 
 
+def test_labelmodel_decode_spark_matches_decode_doc(spark, annotated):
+    """The Spark decode (the shared mentions stage) emits exactly the
+    per-document ``decode_doc`` mentions over the collected annotated
+    rows, conf included."""
+    from weak_supervision_for_ner_spark.operators.labelmodel import LabelModelAggregator
+
+    model = LabelModelAggregator(n_iter=4)
+    model.fit_spark(spark, annotated)
+
+    got = sorted(tuple(r) for r in model.decode_spark(spark, annotated).collect())
+    want = sorted(
+        (r["url"], model.source_name, s, e, label, conf, " ".join(r["tokens"][s:e]))
+        for r in annotated.collect()
+        for (s, e, label, conf) in model.decode_doc(list(r["tokens"]), list(r["spans"]))
+    )
+    assert got == want and got
+
+
 def test_labelmodel_em_loglik_monotone(spark, annotated):
     from weak_supervision_for_ner_spark.operators.labelmodel import LabelModelAggregator
 

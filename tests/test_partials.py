@@ -18,22 +18,8 @@ def annotated(spark):
     frame.unpersist()
 
 
-def _jobs_launched(spark, group: str, action) -> list:
-    """The ids of the Spark jobs ``action`` launches."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is fed by an asynchronous listener
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("tree", [False, True])
-def test_sum_partials_exact_on_both_paths(spark, monkeypatch, tree):
+def test_sum_partials_exact_on_both_paths(spark, monkeypatch, jobs_launched, tree):
     from weak_supervision_for_ner_spark.operators import partials
 
     if tree:
@@ -49,7 +35,7 @@ def test_sum_partials_exact_on_both_paths(spark, monkeypatch, tree):
 
     frame = spark.range(0, 1000, numPartitions=40)
     sums = {}
-    jobs = _jobs_launched(spark, f"sum-partials-{tree}", lambda: sums.update(
+    jobs = jobs_launched(f"sum-partials-{tree}", lambda: sums.update(
         partials.sum_partials(frame, accumulate, {"n": (), "hist": (2, 5)})))
     tracker = spark.sparkContext.statusTracker()
     stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
@@ -62,20 +48,20 @@ def test_sum_partials_exact_on_both_paths(spark, monkeypatch, tree):
     assert np.array_equal(sums["hist"], want)
 
 
-def test_hmm_fit_runs_one_job_per_pass(spark, annotated):
+def test_hmm_fit_runs_one_job_per_pass(spark, annotated, jobs_launched):
     from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
 
     model = HMMAggregator(n_iter=3, tol=-np.inf)
-    jobs = _jobs_launched(spark, "hmm-fit-jobs", lambda: model.fit_spark(spark, annotated))
+    jobs = jobs_launched("hmm-fit-jobs", lambda: model.fit_spark(spark, annotated))
     assert len(model.history) == 3
     assert len(jobs) == 4  # the prior pass + 3 E-step collects
 
 
-def test_labelmodel_fit_runs_one_job_per_iteration(spark, annotated):
+def test_labelmodel_fit_runs_one_job_per_iteration(spark, annotated, jobs_launched):
     from weak_supervision_for_ner_spark.operators.labelmodel import LabelModelAggregator
 
     model = LabelModelAggregator(n_iter=5)
-    jobs = _jobs_launched(spark, "labelmodel-fit-jobs",
-                          lambda: model.fit_spark(spark, annotated))
+    jobs = jobs_launched("labelmodel-fit-jobs",
+                         lambda: model.fit_spark(spark, annotated))
     assert len(model.history) == 5
     assert len(jobs) == 5

@@ -19,8 +19,11 @@ def _plan(df) -> str:
 
 def test_annotate_scan_prunes_html_and_pushes_lang_filter(spark, pages_parquet):
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
+    from weak_supervision_for_ner_spark.schema import ANNOTATED_SCHEMA
 
-    plan = _plan(annotate_pages(spark.read.parquet(pages_parquet)))
+    annotated = annotate_pages(spark.read.parquet(pages_parquet))
+    assert annotated.schema == ANNOTATED_SCHEMA
+    plan = _plan(annotated)
     scan = [l for l in plan.splitlines() if "FileScan" in l]
     assert scan, plan
     read_schema = scan[0].split("ReadSchema:")[1]

@@ -260,6 +260,38 @@ def test_graph_only_majority_extraction_is_one_stage(spark, tmp_path):
     assert "Join" not in plan, plan
 
 
+def test_decodes_plan_one_mentions_stage(spark, jobs_launched):
+    """The three aggregator decodes (majority vote, HMM Viterbi,
+    label-model posterior) share one mentions stage: over a persisted
+    annotated frame each plans exactly one MapInPandas and no join, and
+    building it launches no Spark job."""
+    from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
+    from weak_supervision_for_ner_spark.operators.labelmodel import LabelModelAggregator
+
+    annotated = annotate_pages(synth_pages(spark, 40, partitions=2)).persist()
+    annotated.count()
+    hmm = HMMAggregator(n_iter=1)
+    hmm.fit_spark(spark, annotated)
+    snorkel = LabelModelAggregator(n_iter=1)
+    snorkel.fit_spark(spark, annotated)
+
+    decodes = {}
+    jobs = jobs_launched("decode-plans", lambda: decodes.update(
+        majority=majority_voter_mentions(annotated),
+        hmm=hmm.decode_spark(spark, annotated),
+        snorkel=snorkel.decode_spark(spark, annotated),
+    ))
+    assert jobs == []
+    for name, frame in decodes.items():
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        # the text below InMemoryRelation is the cached annotate stage
+        above_cache, _, _ = plan.partition("InMemoryRelation")
+        assert "InMemoryTableScan" in above_cache, (name, plan)
+        assert above_cache.count("MapInPandas") == 1, (name, plan)
+        assert "Join" not in plan, (name, plan)
+    annotated.unpersist()
+
+
 def test_cli_truecase_and_correction_are_flagship_defaults(spark, tmp_path, monkeypatch):
     """The reference truecases <=25-token docs during parsing and
     repairs entities after every annotation BY DEFAULT — so must the

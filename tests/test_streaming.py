@@ -34,6 +34,12 @@ def test_streaming_mentions_equal_batch(spark, tmp_path):
 
 
 def test_streaming_windowed_counts(spark, tmp_path):
+    """The watermarked windowed rollup over the stream equals the batch
+    rollup of ``annotate_pages`` joined back to ``warc_ts``: the 2-file
+    corpus is one micro-batch, so the watermark drops nothing."""
+    from pyspark.sql import functions as F
+
+    from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
     from weak_supervision_for_ner_spark.sources.pages import synth_pages
     from weak_supervision_for_ner_spark.streaming.ingest import (
         read_pages_stream,
@@ -54,9 +60,19 @@ def test_streaming_windowed_counts(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    rows = spark.sql("select * from win_counts").collect()
-    assert rows
-    assert all(r["n_mentions"] > 0 for r in rows)
+    got = sorted(map(tuple, spark.sql(
+        "select window_start, label, n_mentions from win_counts").collect()))
+
+    pages = spark.read.parquet(in_path)
+    batch = (
+        annotate_pages(pages).join(pages.select("url", "warc_ts"), "url")
+        .select("warc_ts", F.explode("spans.label").alias("label"))
+        .groupBy(F.window("warc_ts", "10 minutes").alias("win"), "label")
+        .agg(F.count(F.lit(1)).alias("n_mentions"))
+        .select(F.col("win.start").alias("window_start"), "label", "n_mentions")
+    )
+    want = sorted(map(tuple, batch.collect()))
+    assert got == want and got
 
 
 def test_streaming_stateful_dedup_across_microbatches(spark, tmp_path):

@@ -9,17 +9,13 @@ inside Arrow batches.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from weak_supervision_for_ner_spark.schema import (
     GENERIC_LABELS,
     LABELS,
     LABEL_INDICES,
-    MENTIONS_SCHEMA,
     POSITIONED_LABELS,
     SOURCE_INDICES,
     SOURCE_NAMES,
@@ -289,28 +285,21 @@ def majority_voter_mentions(
     source_name: str = "majority_voter",
     sources_to_keep: list[str] | None = None,
 ) -> DataFrame:
-    """Stateless narrow mapInPandas: annotated rows -> aggregated
-    mention rows (the relational form of MajorityVoter.annotate).
+    """Stateless narrow stage: annotated rows -> aggregated mention rows
+    (the relational form of MajorityVoter.annotate).
 
     ``sources_to_keep`` restricts the vote to a source subset AFTER
     specialisation, matching the reference's UnifiedAnnotator order
     (specialise over all layers, then extract only kept sources,
     labelling.py:144-175). Runs the shared per-document kernel
-    (operators.triples.doc_mentions)."""
+    (operators.triples.doc_mentions) in the shared mentions stage."""
     from weak_supervision_for_ner_spark.operators.triples import (
+        _mentions_stage,
         doc_mentions,
         majority_labeller,
     )
 
     label = majority_labeller(nb_sources_threshold, sources_to_keep)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (url, source_name, s, e, lab, conf, " ".join(tokens[s:e]))
-                for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"])
-                for (s, e, lab, conf) in doc_mentions(tokens, spans, label)
-            ]
-            yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
-
-    return annotated.mapInPandas(run, schema=MENTIONS_SCHEMA)
+    return _mentions_stage(
+        annotated, lambda tokens, spans: doc_mentions(tokens, spans, label), source_name
+    )

@@ -17,7 +17,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from weak_supervision_for_ner_spark.operators.labelling import (
     Doc,
@@ -95,6 +95,31 @@ def select_text(
     return selected, selected.sparkSession.sparkContext.broadcast(form_freqs)
 
 
+def annotate_stage(rows: DataFrame, freqs_bc=None) -> DataFrame:
+    """The annotation stage: one narrow Arrow stage that annotates the
+    ``text`` column of ``rows`` (``url``, ``text`` and any other
+    columns) into ``tokens``/``spans``, truecased under the broadcast
+    casing dictionary ``freqs_bc`` when given. Every other input column
+    passes through: the output schema is ``ANNOTATED_SCHEMA`` followed
+    by them."""
+    extra = [f for f in rows.schema.fields if f.name not in ("url", "text")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        freqs = freqs_bc.value if freqs_bc is not None else None
+        for pdf in batches:
+            annotated = annotate_batch(pdf["text"], form_freqs=freqs)
+            yield pd.DataFrame(
+                {
+                    "url": pdf["url"].values,
+                    "tokens": [a[0] for a in annotated],
+                    "spans": [a[1] for a in annotated],
+                    **{f.name: pdf[f.name].values for f in extra},
+                }
+            )
+
+    return rows.mapInPandas(run, schema=T.StructType([*ANNOTATED_SCHEMA.fields, *extra]))
+
+
 def annotate_pages(
     pages: DataFrame,
     lang: str = "en",
@@ -103,24 +128,11 @@ def annotate_pages(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → annotated(url, tokens, spans).
 
-    One narrow stage over :func:`select_text`'s rows, truecased under
-    its broadcast dictionary when ``truecase`` or ``form_freqs`` asks.
+    :func:`annotate_stage` over :func:`select_text`'s rows, truecased
+    under its broadcast dictionary when ``truecase`` or ``form_freqs``
+    asks.
     """
-    selected, bc = select_text(pages, lang, truecase, form_freqs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        freqs = bc.value if bc is not None else None
-        for pdf in batches:
-            annotated = annotate_batch(pdf["text"], form_freqs=freqs)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "tokens": [a[0] for a in annotated],
-                    "spans": [a[1] for a in annotated],
-                }
-            )
-
-    return selected.mapInPandas(run, schema=ANNOTATED_SCHEMA)
+    return annotate_stage(*select_text(pages, lang, truecase, form_freqs))
 
 
 def mentions_from_annotated(annotated: DataFrame) -> DataFrame:

@@ -180,7 +180,7 @@ def correct_spans_with_conf(
     """Run the 15-rule repair over (start, end, label, conf) mentions
     and re-attach confidences: a repaired span carries the max conf of
     the input spans it absorbs (the reference's spaCy ents carry no
-    confidence; ours do — same policy as :func:`correct_mentions`).
+    confidence; ours do).
     Per-doc pure function: safe inside any fused Arrow stage."""
     ents = sorted((int(s), int(e), str(lab)) for (s, e, lab, _c) in ments)
     max_conf = max((float(c) for (_s, _e, _l, c) in ments), default=1.0)
@@ -200,11 +200,9 @@ def correct_mentions(mentions: DataFrame, annotated: DataFrame,
     """Run the repair pass over an aggregated mention table.
 
     One shuffle: mentions collect_list'd per url, joined to the
-    annotated table for the token stream, repaired row-locally in an
-    Arrow stage, re-exploded. Confidence of repaired spans is the max
-    conf of the input spans they absorb (the reference's spaCy ents
-    carry no confidence; ours do, so the join-preserving choice is
-    documented here)."""
+    annotated table for the token stream, repaired row-locally by
+    :func:`correct_spans_with_conf` in an Arrow stage, re-exploded, so a
+    repaired span carries the max conf of the input spans it absorbs."""
     grouped = mentions.groupBy("url").agg(
         F.collect_list(F.struct("start", "end", "label", "conf", "source")).alias("ments")
     )
@@ -215,28 +213,17 @@ def correct_mentions(mentions: DataFrame, annotated: DataFrame,
             rows = []
             for url, tokens, ments in zip(pdf["url"], pdf["tokens"], pdf["ments"]):
                 tokens = list(tokens)
-                ents = sorted(
-                    (int(m["start"]), int(m["end"]), str(m["label"])) for m in ments
-                )
-                confs = [float(m["conf"]) for m in ments]
                 # deterministic regardless of collect_list order: the
                 # lexicographically smallest input source names the pass
-                source = (
-                    min(str(m["source"]) for m in ments) + source_suffix
-                    if len(ments) else "corrected"
+                source = min(str(m["source"]) for m in ments) + source_suffix
+                repaired = correct_spans_with_conf(
+                    tokens,
+                    [(m["start"], m["end"], m["label"], m["conf"]) for m in ments],
                 )
-                max_conf = max(confs) if confs else 1.0
-                for s, e, lab in correct_entity_spans(tokens, ents):
-                    overlapping = [
-                        float(m["conf"]) for m in ments
-                        if int(m["start"]) < e and s < int(m["end"])
-                    ]
-                    conf = max(overlapping) if overlapping else max_conf
-                    rows.append((url, source, s, min(e, len(tokens)), lab, conf,
-                                 " ".join(tokens[s:min(e, len(tokens))])))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "source", "start", "end", "label", "conf", "text"],
-            )
+                rows.extend(
+                    (url, source, s, e, lab, conf, " ".join(tokens[s:e]))
+                    for (s, e, lab, conf) in repaired
+                )
+            yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
 
     return joined.mapInPandas(run, schema=MENTIONS_SCHEMA)

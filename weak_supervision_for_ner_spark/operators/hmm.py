@@ -39,9 +39,8 @@ from weak_supervision_for_ner_spark.operators.aggregate import (
     sequence_from_spans,
 )
 from weak_supervision_for_ner_spark.operators.partials import sum_partials
-from weak_supervision_for_ner_spark.operators.triples import doc_mentions
+from weak_supervision_for_ner_spark.operators.triples import _mentions_stage, doc_mentions
 from weak_supervision_for_ner_spark.schema import (
-    MENTIONS_SCHEMA,
     OUT_PRECISION,
     OUT_RECALL,
     POSITIONED_LABELS,
@@ -599,19 +598,9 @@ class HMMAggregator:
     def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
         """Stateless Viterbi decode: annotated -> HMM mention rows."""
         label = self.labeller(spark)
-        source_name = self.source_name
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = [
-                    (url, source_name, s, e, lab, conf, " ".join(tokens[s:e]))
-                    for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"])
-                    for (s, e, lab, conf) in doc_mentions(tokens, spans, label)
-                ]
-                yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
-
-        return annotated.select("url", "tokens", "spans").mapInPandas(
-            run, schema=MENTIONS_SCHEMA
+        return _mentions_stage(
+            annotated, lambda tokens, spans: doc_mentions(tokens, spans, label),
+            self.source_name,
         )
 
 

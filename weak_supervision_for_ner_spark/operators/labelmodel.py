@@ -15,8 +15,10 @@ is a row-local Arrow stage, each EM iteration is ONE narrow mapInPandas
 pass emitting tiny per-partition sufficient statistics (priors C=20
 plus 48x20x20 vote counts ~ 150 KB) summed by the HMM's reducer,
 ``operators.partials.sum_partials``, and the M-step runs on the driver.
-The single-node oracle calls the same per-doc/EM code, so Spark output
-equals the oracle exactly.
+The decode runs in the mentions stage the majority vote and the HMM
+share (``operators.triples._mentions_stage``). The single-node oracle
+calls the same per-doc/EM code, so Spark output equals the oracle
+exactly.
 """
 
 from __future__ import annotations
@@ -32,10 +34,10 @@ from weak_supervision_for_ner_spark.operators.aggregate import (
     specialise_layers,
 )
 from weak_supervision_for_ner_spark.operators.partials import sum_partials
+from weak_supervision_for_ner_spark.operators.triples import _mentions_stage
 from weak_supervision_for_ner_spark.schema import (
     GENERIC_LABELS,
     LABELS,
-    MENTIONS_SCHEMA,
     SOURCE_NAMES,
 )
 
@@ -207,7 +209,10 @@ class LabelModelAggregator:
 
     # -- decode ------------------------------------------------------------
 
-    def decode_doc(self, url: str, tokens: list, spans: list) -> list[tuple]:
+    def decode_doc(self, tokens: list, spans: list) -> list[tuple[int, int, str, float]]:
+        """One document's (start, end, label, conf) mentions: the
+        posterior argmax of every candidate span, class 0 silent. Takes
+        ``tokens`` only to share the mentions-stage kernel signature."""
         ordered, obs = span_votes(
             list(spans), self.candidate_sources, self.sources_to_keep
         )
@@ -218,29 +223,22 @@ class LabelModelAggregator:
         for (start, end), g in zip(ordered, gamma):
             c = int(g.argmax())
             if c > 0:
-                rows.append((url, self.source_name, start, end,
-                             LABELS[c - 1], float(g[c]),
-                             " ".join(tokens[start:end])))
+                rows.append((start, end, LABELS[c - 1], float(g[c])))
         return rows
 
     def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
+        """Stateless posterior decode: annotated -> label-model mention
+        rows. The parameters travel as one broadcast; the model is
+        rebuilt once per task, on first use."""
         params_bc = spark.sparkContext.broadcast((self.log_prior, self.log_conf))
-        source_name, cand = self.source_name, self.candidate_sources
-        keep = self.sources_to_keep
+        cand, keep = self.candidate_sources, self.sources_to_keep
+        model = None
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            lp, lc = params_bc.value
-            model = LabelModelAggregator.__new__(LabelModelAggregator)
-            model.log_prior, model.log_conf = lp, lc
-            model.source_name, model.candidate_sources = source_name, cand
-            model.sources_to_keep = keep
-            for pdf in batches:
-                rows = []
-                for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                    rows.extend(model.decode_doc(url, list(tokens), list(spans)))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["url", "source", "start", "end", "label", "conf", "text"],
-                )
+        def decode(tokens, spans):
+            nonlocal model
+            if model is None:
+                model = LabelModelAggregator(candidate_sources=cand, sources_to_keep=keep)
+                model.log_prior, model.log_conf = params_bc.value
+            return model.decode_doc(tokens, spans)
 
-        return annotated.mapInPandas(run, schema=MENTIONS_SCHEMA)
+        return _mentions_stage(annotated, decode, self.source_name)

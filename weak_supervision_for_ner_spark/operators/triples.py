@@ -9,22 +9,25 @@ correction →] the SVO-window rule) — run by one Arrow stage,
 ``_triples_stage``, over one of three input forms: pages (annotated in
 the stage), annotated rows (labelled in the stage), or annotated rows
 joined to already-aggregated mentions (used as they are). The public
-builders only pick the form and the labeller; the mention tables, the
-stream and the single-node oracle call the same kernel.
+builders only pick the form and the labeller; the stream and the
+single-node oracle call the same kernel. The aggregated mention tables
+(majority vote, HMM and label-model decodes) share the other Arrow
+stage, ``_mentions_stage``: annotated rows → one aggregator's
+per-document mentions → ``MENTIONS_SCHEMA`` rows.
 
 After extraction:
       raw triples (surface forms)
-      → entity linking: broadcast join against the gazetteer KB
+      → entity linking: a literal map lookup of the gazetteer KB
       → canonicalization: minhash-LSH over character shingles of
         UNLINKED surface forms; band groupBy; connected components via
         iterative smallest-id propagation; rewrite triples
       → dedup (groupBy max-conf) → write partitioned by pred.
 
-Scale notes: linking is a broadcast hash join (dictionary ~10^6 rows);
-LSH banding shuffles once on (band, signature); mega-buckets from
-boilerplate are capped (drops counted, no silent truncation —
-SURVEY.md §7.4); connected components is the classic O(log n)-round
-iterative join with AQE handling skew.
+Scale notes: linking folds into the projection (the KB is the
+in-module gazetteer, ~10^2 entries); LSH banding shuffles once on
+(band, signature); mega-buckets from boilerplate are capped (drops
+counted, no silent truncation — SURVEY.md §7.4); connected components
+is the classic O(log n)-round iterative join with AQE handling skew.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from weak_supervision_for_ner_spark.operators.aggregate import (
 )
 from weak_supervision_for_ner_spark.operators.annotate import annotate_batch, select_text
 from weak_supervision_for_ner_spark.operators.entity_correction import correct_spans_with_conf
-from weak_supervision_for_ner_spark.schema import TRIPLES_SCHEMA
+from weak_supervision_for_ner_spark.schema import MENTIONS_SCHEMA, TRIPLES_SCHEMA
 from weak_supervision_for_ner_spark.sources.gazetteer import RELATION_LEXICON
 
 ENTITY_TYPES = {"PERSON", "COMPANY", "ORG", "GPE", "LOC", "PRODUCT", "FAC", "EVENT", "NORP", "LAW"}
@@ -224,6 +227,25 @@ def doc_triples(url: str, tokens, mentions: list, correct: bool = False) -> list
     return extract_triples_from_doc(url, tokens, mentions)
 
 
+def _mentions_stage(annotated: DataFrame, mentions_of, source_name: str) -> DataFrame:
+    """The aggregated-mentions stage: one narrow Arrow stage over the
+    annotated rows running ``mentions_of(tokens, spans) -> [(start, end,
+    label, conf)]`` per document — :func:`doc_mentions` under a labeller,
+    or a span model's decode — and emitting ``MENTIONS_SCHEMA`` rows
+    named ``source_name``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (url, source_name, s, e, lab, conf, " ".join(tokens[s:e]))
+                for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"])
+                for (s, e, lab, conf) in mentions_of(tokens, spans)
+            ]
+            yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
+
+    return annotated.select("url", "tokens", "spans").mapInPandas(run, schema=MENTIONS_SCHEMA)
+
+
 def _committed_mentions(ms) -> list[tuple[int, int, str, float]]:
     """Collected mention structs (dicts or tuples after Arrow) as tuples."""
     return [
@@ -317,43 +339,28 @@ def extract_triples(annotated: DataFrame, mentions: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# Entity linking (broadcast dictionary join)
+# Entity linking (literal map lookup)
 # ---------------------------------------------------------------------------
 
 def link_entities(spark: SparkSession, triples: DataFrame) -> DataFrame:
     """Attach stable KB ids by normalized surface form; unlinked
-    entities keep a surface-form id to be canonicalized by LSH."""
+    entities keep a surface-form id to be canonicalized by LSH.
+
+    The KB (``canonical_entity_ids``, built from the in-module
+    gazetteer) is a literal MAP lookup that folds into the existing
+    projection — zero joins, zero extra stages (the reference's
+    in-process dict lookup, expressed in Catalyst)."""
     from weak_supervision_for_ner_spark.sources.gazetteer import canonical_entity_ids
 
-    ids = canonical_entity_ids()
+    entries = [x for k, v in sorted(canonical_entity_ids().items())
+               for x in (F.lit(k), F.lit(v))]
+    kb_map = F.create_map(*entries)
     out = triples
-    if len(ids) <= 10_000:
-        # Small dictionary: a literal MAP lookup folds into the existing
-        # projection — zero joins, zero extra stages. (The reference's
-        # in-process dict lookup, expressed in Catalyst.)
-        entries = [x for k, v in sorted(ids.items()) for x in (F.lit(k), F.lit(v))]
-        kb_map = F.create_map(*entries)
-        for side in ("subj", "obj"):
-            norm = F.lower(F.regexp_replace(F.col(side), r"\s+", " "))
-            out = (
-                out.withColumn(f"{side}_norm", norm)
-                .withColumn(f"{side}_kb", F.element_at(kb_map, F.col(f"{side}_norm")))
-            )
-        return out
-    # Large KB: Arrow-backed LocalRelation (no Python-RDD stage per
-    # broadcast exchange) + broadcast hash joins.
-    kb = spark.createDataFrame(
-        pd.DataFrame(sorted(ids.items()), columns=["surface", "kb_id"])
-    )
     for side in ("subj", "obj"):
+        norm = F.lower(F.regexp_replace(F.col(side), r"\s+", " "))
         out = (
-            out
-            .withColumn(f"{side}_norm", F.lower(F.regexp_replace(F.col(side), r"\s+", " ")))
-            .join(
-                F.broadcast(kb.withColumnRenamed("surface", f"{side}_norm")
-                              .withColumnRenamed("kb_id", f"{side}_kb")),
-                on=f"{side}_norm", how="left",
-            )
+            out.withColumn(f"{side}_norm", norm)
+            .withColumn(f"{side}_kb", F.element_at(kb_map, F.col(f"{side}_norm")))
         )
     return out
 

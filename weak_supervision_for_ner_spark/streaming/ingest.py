@@ -3,9 +3,10 @@
 The reference is a pure batch pipeline (SURVEY.md §2.11); streaming is
 an engine extension: continuously annotate newly crawled pages and
 append mentions to the sink. The annotation stage is the SAME
-stateless ``mapInPandas`` used in batch — Structured Streaming reuses
-it unchanged (incrementalized by the engine), with a watermark on
-``warc_ts`` for the windowed rollup.
+stateless ``mapInPandas`` used in batch,
+``operators.annotate.annotate_stage``: Structured Streaming reuses it
+unchanged (incrementalized by the engine). The windowed rollup runs it
+with ``warc_ts`` passed through, under a watermark on ``warc_ts``.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from weak_supervision_for_ner_spark.operators.annotate import (
     annotate_pages,
+    annotate_stage,
     mentions_from_annotated,
 )
 from weak_supervision_for_ner_spark.schema import PAGES_SCHEMA
@@ -32,37 +34,6 @@ def read_pages_stream(spark: SparkSession, path: str, max_files: int = 4) -> Dat
 def streaming_mentions(pages_stream: DataFrame) -> DataFrame:
     """Stateless streaming annotation: identical operator as batch."""
     return mentions_from_annotated(annotate_pages(pages_stream))
-
-
-def annotate_pages_with_ts(pages: DataFrame, lang: str = "en") -> DataFrame:
-    """Annotation stage that carries ``warc_ts`` through the narrow
-    stage (streaming variant; same per-doc core as batch)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from weak_supervision_for_ner_spark.operators.annotate import annotate_batch
-    from weak_supervision_for_ner_spark.schema import ANNOTATED_SCHEMA
-
-    schema = T.StructType(
-        [*ANNOTATED_SCHEMA.fields, T.StructField("warc_ts", T.TimestampType())]
-    )
-    selected = pages.filter(F.col("lang") == lang).select("url", "warc_ts", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            annotated = annotate_batch(pdf["text"])
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "tokens": [a[0] for a in annotated],
-                    "spans": [a[1] for a in annotated],
-                    "warc_ts": pdf["warc_ts"].values,
-                }
-            )
-
-    return selected.mapInPandas(run, schema=schema)
 
 
 def streaming_triples(pages_stream: DataFrame) -> DataFrame:
@@ -120,7 +91,9 @@ def finalize_streaming_graph(
 def streaming_mention_counts(pages_stream: DataFrame) -> DataFrame:
     """Event-time windowed rollup with late-data watermark: mentions
     per (10-minute window, label)."""
-    annotated = annotate_pages_with_ts(pages_stream).withWatermark("warc_ts", "30 minutes")
+    annotated = annotate_stage(
+        pages_stream.filter(F.col("lang") == "en").select("url", "warc_ts", "text")
+    ).withWatermark("warc_ts", "30 minutes")
     mentions = annotated.select(
         "warc_ts", F.explode("spans").alias("m")
     ).select("warc_ts", F.col("m.label").alias("label"))
