@@ -1,6 +1,7 @@
 """HMM math against brute-force enumeration on tiny chains, plus EM
 behaviour (SURVEY.md §5.2: forward-backward vs enumeration, Viterbi vs
-exhaustive path search, monotone EM)."""
+exhaustive path search, monotone EM), and the sparse observation
+encoding against a dense-tensor reference of every HMM pass."""
 
 import itertools
 
@@ -12,10 +13,13 @@ from weak_supervision_for_ner_spark.operators.aggregate import (
     N_STATES,
     decode_biluo,
     majority_vote,
+    observations_from_spans,
     sequence_from_spans,
 )
 from weak_supervision_for_ner_spark.operators.hmm import (
     HMMAggregator,
+    _logsumexp,
+    add_prior_counts,
     backward_pass,
     forward_pass,
     viterbi_pass,
@@ -25,6 +29,7 @@ from weak_supervision_for_ner_spark.plans.oracle import (
     oracle_hmm_fit,
     oracle_hmm_mentions,
 )
+from weak_supervision_for_ner_spark.schema import SOURCE_NAMES
 from weak_supervision_for_ner_spark.sources.pages import make_page
 
 
@@ -195,3 +200,216 @@ def test_framelogprob_follows_in_place_emission_update():
     after = model.framelogprob(X)
     assert not np.array_equal(after, before)
     assert np.array_equal(after, fresh.framelogprob(X))
+
+
+# ---------------------------------------------------------------------------
+# Dense reference: the HMM passes over the (T, sources, states) tensor,
+# kept here as oracle_majority_mentions keeps the dense vote
+# ---------------------------------------------------------------------------
+
+def _dense_masked(X, excluded):
+    if excluded is None or not len(excluded):
+        return X
+    X = X.copy()
+    X[:, excluded, :] = 0.0
+    X[:, excluded, 0] = 1.0
+    return X
+
+
+def _dense_framelogprob(model, X):
+    logB0, logB0_sum = model._emission_log_cache()
+    frame = np.tile(logB0_sum, (len(X), 1))
+    active = X[:, :, 0] == 0
+    for s in np.nonzero(active.any(axis=0))[0]:
+        rows = np.nonzero(active[:, s])[0]
+        probs = X[rows, s, :].astype(np.float64) @ model.emission_probs[s].T
+        lp = np.where(probs > 0, np.log(np.maximum(probs, 1e-300)), -np.inf)
+        frame[rows] += lp - logB0[s]
+    return np.where(X.sum(axis=1).astype(bool), frame, -np.inf)
+
+
+def _dense_e_step(model, X):
+    X = _dense_masked(X, model._excluded)
+    frame = _dense_framelogprob(model, X)
+    out = model._scaled_forward_backward(frame) or model._logspace_forward_backward(frame)
+    logprob, posteriors, trans = out
+    obs = (
+        X.reshape(len(X), -1).astype(np.float64).T @ posteriors
+    ).reshape(N_SOURCES, N_STATES, N_STATES).transpose(0, 2, 1)
+    return logprob, posteriors[0], trans, obs
+
+
+def _dense_label(model, X):
+    frame = _dense_framelogprob(model, _dense_masked(X, model._excluded))
+    _, path = viterbi_pass(*model._log_start_trans(), frame)
+    return path, np.exp(frame[np.arange(len(X)), path] - _logsumexp(frame, axis=1))
+
+
+def _dense_prior_counts(Xs, best, excluded=None):
+    init = np.zeros(N_STATES)
+    trans = np.zeros((N_STATES, N_STATES))
+    obs = np.zeros((N_SOURCES, N_STATES))
+    for X in Xs:
+        X = _dense_masked(X, excluded)
+        path = X[:, best, :].argmax(axis=1)
+        init[path[0]] += 1
+        np.add.at(trans, (path[:-1], path[1:]), 1.0)
+        obs += X.sum(axis=0)
+    return init, trans, obs
+
+
+def _sparse_prior_counts(Xs, best, excluded=None):
+    counts = np.zeros(N_STATES), np.zeros((N_STATES, N_STATES)), np.zeros((N_SOURCES, N_STATES))
+    for X in Xs:
+        add_prior_counts(X.without_sources(excluded), best, *counts)
+    return counts
+
+
+@pytest.fixture(scope="module")
+def fitted():
+    """A synthetic corpus as (sparse, dense) encodings, and a model fit on it."""
+    docs = [d for d in _small_corpus(40) if d["tokens"]]
+    pairs = [(observations_from_spans(d["spans"], len(d["tokens"])),
+              sequence_from_spans(d["spans"], len(d["tokens"]))) for d in docs]
+    return pairs, oracle_hmm_fit(docs, n_iter=2)
+
+
+def _masked_model(model):
+    """``model``'s parameters, decoding only every other source."""
+    keep = set(SOURCE_NAMES[::2])
+    excluded = np.array([i for i, s in enumerate(SOURCE_NAMES) if s not in keep])
+    return HMMAggregator._rebuilt(model.startprob_, model.transmat_,
+                                  model.emission_probs, excluded)
+
+
+def _assert_stats_match(got, want):
+    assert got[0] == pytest.approx(want[0], rel=1e-12)
+    for a, b in zip(got[1:], want[1:]):
+        np.testing.assert_allclose(a, b, rtol=1e-12, atol=0)
+
+
+def test_sparse_frame_and_prior_counts_match_dense(fitted):
+    pairs, model = fitted
+    for X, dense in pairs:
+        assert np.array_equal(model.framelogprob(X), _dense_framelogprob(model, dense))
+    best = model._best_coverage_source_index()
+    got = _sparse_prior_counts([X for X, _ in pairs], best)
+    want = _dense_prior_counts([dense for _, dense in pairs], best)
+    for a, b in zip(got, want):
+        assert np.array_equal(a, b)
+
+
+def test_sparse_e_step_and_viterbi_match_dense(fitted):
+    pairs, model = fitted
+    for X, dense in pairs:
+        _assert_stats_match(model.e_step(X), _dense_e_step(model, dense))
+        path, confs = model.label(X)
+        want_path, want_confs = _dense_label(model, dense)
+        assert np.array_equal(path, want_path)
+        assert np.array_equal(confs, want_confs)
+
+
+def test_sparse_e_step_accumulates_into_obs(fitted):
+    pairs, model = fitted
+    obs = np.zeros((N_SOURCES, N_STATES, N_STATES))
+    want = np.zeros_like(obs)
+    for X, _ in pairs:
+        assert model.e_step(X, obs)[3] is obs
+        want += model.e_step(X)[3]
+    np.testing.assert_allclose(obs, want, rtol=1e-12, atol=0)
+
+
+def test_sparse_source_mask_matches_dense_mask(fitted):
+    pairs, model = fitted
+    masked = _masked_model(model)
+    for X, dense in pairs:
+        _assert_stats_match(masked.e_step(X), _dense_e_step(masked, dense))
+        path, confs = masked.label(X)
+        want_path, want_confs = _dense_label(masked, dense)
+        assert np.array_equal(path, want_path)
+        assert np.array_equal(confs, want_confs)
+    best = HMMAggregator(sources_to_keep=SOURCE_NAMES[::2])._best_coverage_source_index()
+    got = _sparse_prior_counts([X for X, _ in pairs], best, masked._excluded)
+    want = _dense_prior_counts([dense for _, dense in pairs], best, masked._excluded)
+    for a, b in zip(got, want):
+        assert np.array_equal(a, b)
+
+
+def test_zero_conf_covered_pair_keeps_dense_ninf(fitted):
+    """A (token, source) pair covered only by zero-conf cells still
+    zeroes the O observation: every state of that token is impossible."""
+    _, model = fitted
+    spans = [(SOURCE_NAMES[5], 1, 2, "GPE", 0.0), (SOURCE_NAMES[6], 0, 2, "PERSON", 0.8)]
+    X = observations_from_spans(spans, 3)
+    assert list(zip(X.pair_s, X.pair_t)) == [(5, 1), (6, 0), (6, 1)]
+    assert X.cell_conf[X.cell_pair == 0].tolist() == [0.0]
+    frame = model.framelogprob(X)
+    assert np.isneginf(frame[1]).all() and np.isfinite(frame[0]).any()
+    dense = sequence_from_spans(spans, 3)
+    assert np.array_equal(frame, _dense_framelogprob(model, dense))
+    for a, b in zip(_sparse_prior_counts([X], 5), _dense_prior_counts([dense], 5)):
+        assert np.array_equal(a, b)
+
+
+def test_dense_entry_matches_spans_entry(fitted):
+    pairs, model = fitted
+    for m in (model, _masked_model(model)):
+        for X, dense in pairs:
+            assert np.array_equal(m.framelogprob(dense), m.framelogprob(X))
+            for a, b in zip(m.e_step(dense), m.e_step(X)):
+                assert np.array_equal(a, b)
+            for a, b in zip(m.label(dense), m.label(X)):
+                assert np.array_equal(a, b)
+
+
+# ---------------------------------------------------------------------------
+# The Spark fit against the oracle
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def annotated60(spark):
+    from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
+    from weak_supervision_for_ner_spark.sources.pages import synth_pages
+
+    frame = annotate_pages(synth_pages(spark, 60, partitions=3)).persist()
+    frame.count()
+    yield frame
+    frame.unpersist()
+
+
+def test_oracle_and_spark_fits_stop_alike(spark, annotated60):
+    """Both fits stop by one rule: at n_iter=6 on this corpus the last
+    logprob gain (about 0.11) is above tol but below tol x n_docs."""
+    model = HMMAggregator(n_iter=6)
+    model.fit_spark(spark, annotated60)
+    oracle = oracle_hmm_fit(_small_corpus(60), n_iter=6)
+    assert len(model.history) == len(oracle.history) == 6
+    np.testing.assert_allclose(model.history, oracle.history, rtol=1e-9)
+
+
+def test_hmm_spark_path_builds_no_dense_tensor(spark, annotated60, monkeypatch):
+    """fit_spark, decode_spark and extract_triples_hmm_fused run on the
+    sparse encoding: with the dense tensor function made to raise, in the
+    Python workers too, all three still run."""
+    from pyspark import cloudpickle
+
+    from weak_supervision_for_ner_spark.operators import aggregate, hmm, triples
+
+    def no_dense(*args, **kwargs):
+        raise AssertionError("dense observation tensor built on the HMM path")
+
+    monkeypatch.setattr(aggregate, "extract_sequence", no_dense)
+    # the workers import the package afresh: pickling these modules by
+    # value ships the patched function with the code that runs there
+    modules = (aggregate, hmm, triples)
+    for module in modules:
+        cloudpickle.register_pickle_by_value(module)
+    try:
+        model = hmm.HMMAggregator(n_iter=2)
+        model.fit_spark(spark, annotated60)
+        assert len(model.history) == 2
+        assert model.decode_spark(spark, annotated60).count() > 0
+        assert triples.extract_triples_hmm_fused(annotated60, model).count() > 0
+    finally:
+        for module in modules:
+            cloudpickle.unregister_pickle_by_value(module)

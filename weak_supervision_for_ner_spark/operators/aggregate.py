@@ -5,9 +5,19 @@ Numpy re-implementations of the reference's UnifiedAnnotator core
 (labelling.py:116-213, 503-531), shared between the Spark operators
 and the single-node oracle. All per-token work is vectorized numpy
 inside Arrow batches.
+
+The observations of a document are encoded once, sparsely:
+:func:`observation_cells` writes the non-O cells of the reference's
+(tokens, sources, states) tensor, and :class:`Observations` holds the
+span-covered (token, source) pairs with those cells. The majority vote
+and the HMM (``operators.hmm``) both read this encoding. The dense
+tensor (:func:`extract_sequence`) remains only as the reference the
+oracle's majority vote and the tests compare against.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -123,7 +133,8 @@ def specialise_layers(layers: Layers) -> Layers:
 
 def extract_sequence(layers: Layers, n_tokens: int) -> np.ndarray:
     """Dense observation tensor (T, n_sources, n_states) float32
-    (labelling.py:144-172). Call :func:`specialise_layers` first."""
+    (labelling.py:144-172): the reference form of :class:`Observations`.
+    Call :func:`specialise_layers` first."""
     X = np.zeros((n_tokens, N_SOURCES, N_STATES), dtype=np.float32)
     X[:, :, 0] = 1.0
     for source, layer in layers.items():
@@ -149,13 +160,9 @@ def sequence_from_spans(spans: list, n_tokens: int) -> np.ndarray:
     return extract_sequence(specialise_layers(layers_from_spans(spans)), n_tokens)
 
 
-# ---------------------------------------------------------------------------
-# Majority voter (labelling.py:503-531)
-# ---------------------------------------------------------------------------
-
 # per-label (B, I, L, U) state-index table, precomputed over the closed
-# schema label set: the sparse vote previously rebuilt f-string keys per
-# token per span — pure overhead on the hot path. A non-schema label
+# schema label set: the cell writer previously rebuilt f-string keys
+# per token per span — pure overhead on the hot path. A non-schema label
 # raising KeyError here is correct: it could never enter the 77-state
 # tensor either.
 _BILUO_STATES: dict[str, tuple[int, int, int, int]] = {
@@ -163,22 +170,17 @@ _BILUO_STATES: dict[str, tuple[int, int, int, int]] = {
 }
 
 
-def majority_vote_sparse(layers: Layers, n_tokens: int, nb_sources_threshold: int = 4):
-    """Sparse majority vote, identical semantics to
-    ``majority_vote(extract_sequence(layers))`` but computed from the
-    span lists directly — avoids materializing the dense
-    (T, sources, states) tensor whose memory traffic dominates and
-    caps multi-core scaling. Call on specialised layers.
+def observation_cells(layers: Layers, n_tokens: int) -> dict[int, float]:
+    """The non-O cells of :func:`extract_sequence`'s tensor, keyed
+    ``(t * N_SOURCES + s) * N_STATES + state``. Call on specialised
+    layers.
 
-    Replicates the dense tensor EXACTLY, including its write semantics:
-    when several spans of one source write the same (token, state) cell
-    the LAST write wins (dict iteration order — the dense assignment
-    overwrites), and the per-(token, source) argmax then runs over cell
-    VALUES with np.argmax's first-max tie-break (smallest state index;
-    cells <= 0 lose to the zeroed O cell). Tokens covered by no
-    non-generic span vote O."""
-    # cells[(t * N_SOURCES + si) * N_STATES + state] = conf, LAST write
-    # wins — the dense X[t, si, state] = conf assignment
+    Replicates the tensor's write semantics: when several spans of one
+    source write the same (token, state) cell the LAST write wins (dict
+    iteration order — the dense assignment overwrites). Every (t, s)
+    pair a non-generic span covers, whose O cell the tensor zeroes, has
+    at least one cell here, zero-conf cells included. Spans with
+    ``end <= start`` cover nothing."""
     cells: dict[int, float] = {}
     biluo = _BILUO_STATES
     for source, layer in layers.items():
@@ -200,6 +202,88 @@ def majority_vote_sparse(layers: Layers, n_tokens: int, nb_sources_threshold: in
                 for t in range(start, end):
                     state = b_st if t == start else (l_st if t == end - 1 else i_st)
                     cells[(t * N_SOURCES + si) * N_STATES + state] = conf
+    return cells
+
+
+class Observations(NamedTuple):
+    """One document's observations in sparse form: the span-covered
+    (t, s) pairs, whose O cell the dense tensor zeroes, ascending by
+    (s, t), and their non-O cells, ascending by (pair, state). Confs are
+    rounded through float32, exactly as the tensor stores them. Every
+    other (t, s) pair holds the default O observation."""
+
+    n_tokens: int
+    pair_s: np.ndarray      # (P,) source index
+    pair_t: np.ndarray      # (P,) token index
+    cell_pair: np.ndarray   # (C,) index into the pairs
+    cell_state: np.ndarray  # (C,) state index, never O
+    cell_conf: np.ndarray   # (C,) float32
+
+    @classmethod
+    def from_cells(cls, cells: dict[int, float], n_tokens: int) -> "Observations":
+        keys = np.fromiter(cells.keys(), np.int64, len(cells))
+        conf = np.fromiter(cells.values(), np.float32, len(cells))
+        pair, state = np.divmod(keys, N_STATES)
+        t, s = np.divmod(pair, N_SOURCES)
+        pair_key = s * n_tokens + t
+        order = np.argsort(pair_key * N_STATES + state)  # keys are unique
+        pair_key = pair_key[order]
+        first = np.ones(len(keys), dtype=bool)
+        first[1:] = pair_key[1:] != pair_key[:-1]
+        head = order[first]
+        return cls(n_tokens, s[head], t[head], np.cumsum(first) - 1,
+                   state[order], conf[order])
+
+    @classmethod
+    def from_dense(cls, X: np.ndarray) -> "Observations":
+        """The encoding of a dense (T, sources, states) tensor."""
+        pair_s, pair_t = np.nonzero(X[:, :, 0].T == 0)
+        rows = X[pair_t, pair_s]
+        cell_pair, cell_state = np.nonzero(rows)
+        return cls(len(X), pair_s, pair_t, cell_pair, cell_state,
+                   rows[cell_pair, cell_state].astype(np.float32))
+
+    def without_sources(self, sources: np.ndarray | None) -> "Observations":
+        """These observations with ``sources`` reset to the default O."""
+        if sources is None or not len(sources):
+            return self
+        keep = ~np.isin(self.pair_s, sources)
+        kept_cells = keep[self.cell_pair]
+        renumber = np.cumsum(keep) - 1
+        return Observations(
+            self.n_tokens, self.pair_s[keep], self.pair_t[keep],
+            renumber[self.cell_pair[kept_cells]], self.cell_state[kept_cells],
+            self.cell_conf[kept_cells],
+        )
+
+
+def as_observations(X: "Observations | np.ndarray") -> Observations:
+    """``X`` itself, or the encoding of a dense tensor."""
+    return X if isinstance(X, Observations) else Observations.from_dense(X)
+
+
+def observations_from_spans(spans: list, n_tokens: int) -> Observations:
+    """The sparse twin of :func:`sequence_from_spans`."""
+    layers = specialise_layers(layers_from_spans(spans))
+    return Observations.from_cells(observation_cells(layers, n_tokens), n_tokens)
+
+
+# ---------------------------------------------------------------------------
+# Majority voter (labelling.py:503-531)
+# ---------------------------------------------------------------------------
+
+def majority_vote_sparse(layers: Layers, n_tokens: int, nb_sources_threshold: int = 4):
+    """Sparse majority vote, identical semantics to
+    ``majority_vote(extract_sequence(layers))`` but computed from
+    :func:`observation_cells` — avoids materializing the dense
+    (T, sources, states) tensor whose memory traffic dominates and
+    caps multi-core scaling. Call on specialised layers.
+
+    The per-(token, source) argmax runs over cell VALUES with
+    np.argmax's first-max tie-break (smallest state index; cells <= 0
+    lose to the zeroed O cell). Tokens covered by no non-generic span
+    vote O."""
+    cells = observation_cells(layers, n_tokens)
 
     # best[(t, s)] = (conf, -state) maximum => argmax with min-index
     # tie-break over the surviving cell values

@@ -15,6 +15,12 @@ Distributed execution (SURVEY.md §3.2):
   M-step; params re-broadcast per iteration;
 - both passes are summed by ``operators.partials.sum_partials``, the
   reducer the label model's E-step shares;
+- every pass reads a document as the sparse
+  ``aggregate.Observations`` encoding — the span-covered (token,
+  source) pairs and their cells — never as the dense
+  (tokens, sources, states) tensor. ``e_step``/``label`` still accept a
+  dense tensor (the oracle's reference form) and encode it at entry,
+  so the arithmetic has one path;
 - per-iteration checkpoints (params + logprob) make the loop resumable
   mid-pipeline (north_rule).
 
@@ -36,7 +42,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from weak_supervision_for_ner_spark.operators.aggregate import (
     N_SOURCES,
     N_STATES,
-    sequence_from_spans,
+    Observations,
+    as_observations,
+    observations_from_spans,
 )
 from weak_supervision_for_ner_spark.operators.partials import sum_partials
 from weak_supervision_for_ner_spark.operators.triples import _mentions_stage, doc_mentions
@@ -148,14 +156,10 @@ class HMMAggregator:
         source = sorted(candidates, key=lambda s: len(SOURCE_PRIORS[s]))[-1]
         return SOURCE_NAMES.index(source)
 
-    def _apply_source_mask(self, X: np.ndarray) -> np.ndarray:
-        """Reset excluded sources' observation columns to the default O."""
-        if self._excluded is None or not len(self._excluded):
-            return X
-        X = X.copy()
-        X[:, self._excluded, :] = 0.0
-        X[:, self._excluded, 0] = 1.0
-        return X
+    def _observations(self, X: "Observations | np.ndarray") -> Observations:
+        """One document's sparse observations from either input form,
+        with the excluded sources reset to the default O."""
+        return as_observations(X).without_sources(self._excluded)
 
     def _pin_excluded_emissions(self) -> None:
         """Excluded sources emit O with probability 1 in every state (a
@@ -286,49 +290,74 @@ class HMMAggregator:
             self._lst_cache = cache
         return cache[1], cache[2]
 
-    def framelogprob(self, X: np.ndarray) -> np.ndarray:
+    def framelogprob(self, X: "Observations | np.ndarray") -> np.ndarray:
         """log Σ_sources X·emissionᵀ with masked -inf and the
         zero-observation constraint (labelling.py:434-448).
 
-        Sparse fast path: most (token, source) cells hold the default
-        O observation, whose contribution is the constant column
-        log B[s][:, 0]; only cells actually covered by a span (col 0
-        zeroed, extract_sequence) pay a matvec + correction."""
-        T_len = len(X)
+        Every (token, source) pair no span covers holds the default O
+        observation, whose contribution is the constant column
+        log B[s][:, 0]; only the covered pairs pay a matvec, grouped per
+        source, and a correction added in ascending source order."""
+        X = as_observations(X)
         logB0, logB0_sum = self._emission_log_cache()
-        frame = np.tile(logB0_sum, (T_len, 1))
-        active = X[:, :, 0] == 0  # (T, S): span-covered cells
-        for s in np.nonzero(active.any(axis=0))[0]:
-            rows = np.nonzero(active[:, s])[0]
-            probs = X[rows, s, :].astype(np.float64) @ self.emission_probs[s].T
+        frame = np.tile(logB0_sum, (X.n_tokens, 1))
+        if len(X.pair_s):
+            rows = np.zeros((len(X.pair_s), N_STATES))
+            rows[X.cell_pair, X.cell_state] = X.cell_conf
+            probs = np.empty_like(rows)
+            # the same (n, K) @ (K, K) product per source as the dense
+            # tensor's rows, so the frame is bit-identical to it
+            bounds = np.searchsorted(X.pair_s, np.arange(N_SOURCES + 1)).tolist()
+            for s, (a, b) in enumerate(zip(bounds, bounds[1:])):
+                if a < b:
+                    np.matmul(rows[a:b], self.emission_probs[s].T, out=probs[a:b])
             # no errstate needed: the argument is clamped >= 1e-300, so
-            # np.log cannot warn; values are identical to the previous
-            # context-managed form
+            # np.log cannot warn
             lp = np.where(probs > 0, np.log(np.maximum(probs, 1e-300)), _NINF)
-            frame[rows] += lp - logB0[s]
-        observed = X.sum(axis=1).astype(bool)
+            # pairs ascend by (s, t): each frame cell adds its sources'
+            # corrections in ascending source order (flat: add.at's fast path)
+            cells = X.pair_t[:, None] * N_STATES + np.arange(N_STATES)
+            np.add.at(frame.reshape(-1), cells.reshape(-1),
+                      (lp - logB0[X.pair_s]).reshape(-1))
+        # a state is observable at t when some source emits it there:
+        # O by an uncovered pair, any other state by a nonzero cell
+        # (confs are non-negative)
+        observed = np.zeros((X.n_tokens, N_STATES), dtype=bool)
+        observed[:, 0] = np.bincount(X.pair_t, minlength=X.n_tokens) < N_SOURCES
+        nonzero = X.cell_conf != 0
+        observed[X.pair_t[X.cell_pair[nonzero]], X.cell_state[nonzero]] = True
         return np.where(observed, frame, _NINF)
 
-    def e_step(self, X: np.ndarray):
-        """One document's sufficient statistics.
+    def e_step(self, X: "Observations | np.ndarray", obs: np.ndarray | None = None):
+        """One document's sufficient statistics ``(logprob, start,
+        trans, obs)``; the emission counts are added into ``obs``, a
+        (sources, states, states) accumulator (a new one if None).
 
         Scaled (linear-space) forward-backward: per step it is pure
         matmuls, and the xi transition-count sum factorizes into ONE
         (K,T)x(T,K) matmul — 10-20x faster than per-step log-space
         logsumexp loops. Falls back to the log-space path on numeric
         degeneracy (a step whose scale underflows)."""
-        X = self._apply_source_mask(X)
+        X = self._observations(X)
         frame = self.framelogprob(X)
         out = self._scaled_forward_backward(frame)
         if out is None:
             out = self._logspace_forward_backward(frame)
         logprob, posteriors, trans = out
-        start = posteriors[0]
-        # obs[s, k, j] += X[t, s, j] * posteriors[t, k]  (labelling.py:473-480)
-        obs = (
-            X.reshape(len(X), -1).astype(np.float64).T @ posteriors
-        ).reshape(N_SOURCES, N_STATES, N_STATES).transpose(0, 2, 1)
-        return logprob, start, trans, obs
+        if obs is None:
+            obs = np.zeros((N_SOURCES, N_STATES, N_STATES))
+        # obs[s, k, j] += X[t, s, j] * posteriors[t, k]  (labelling.py:473-480):
+        # the O column from the uncovered pairs, the rest from the cells
+        uncovered = np.ones((X.n_tokens, N_SOURCES))
+        uncovered[X.pair_t, X.pair_s] = 0.0
+        obs[:, :, 0] += uncovered.T @ posteriors
+        keys, group = np.unique(X.pair_s[X.cell_pair] * N_STATES + X.cell_state,
+                                return_inverse=True)
+        weights = np.zeros((len(keys), X.n_tokens))
+        weights[group, X.pair_t[X.cell_pair]] = X.cell_conf
+        sources, states = np.divmod(keys, N_STATES)
+        obs[sources, :, states] += weights @ posteriors
+        return logprob, posteriors[0], trans, obs
 
     def _scaled_forward_backward(self, frame: np.ndarray):
         T_len = len(frame)
@@ -366,9 +395,7 @@ class HMMAggregator:
         return logprob, gamma, trans
 
     def _logspace_forward_backward(self, frame: np.ndarray):
-        with np.errstate(divide="ignore"):
-            log_start = np.log(self.startprob_)
-            log_trans = np.log(self.transmat_)
+        log_start, log_trans = self._log_start_trans()
         logprob, fwd = forward_pass(log_start, log_trans, frame)
         bwd = backward_pass(log_trans, frame)
         log_gamma = fwd + bwd
@@ -402,18 +429,17 @@ class HMMAggregator:
         self.emission_probs = np.where(self.emission_probs > 0, probs, 0)
         self._params_changed()
 
-    def label(self, X: np.ndarray):
+    def label(self, X: "Observations | np.ndarray"):
         """Viterbi decode one doc -> (state path, per-token confidence)
         (labelling.py:291-311)."""
-        X = self._apply_source_mask(X)
-        frame = self.framelogprob(X)
+        frame = self.framelogprob(self._observations(X))
         log_start, log_trans = self._log_start_trans()
         _, path = viterbi_pass(log_start, log_trans, frame)
         # only the chosen path's cells need exponentiating: exp applied
         # to the same (frame - logsumexp) values the full (T, K) proba
         # matrix held, so the confidences are bit-identical
         lse = _logsumexp(frame, axis=1)
-        confidences = np.exp(frame[np.arange(len(X)), path] - lse)
+        confidences = np.exp(frame[np.arange(len(frame)), path] - lse)
         return path, confidences
 
     # -- persistence ------------------------------------------------------
@@ -476,11 +502,8 @@ class HMMAggregator:
         adds a tree-combine level on large clusters). Then numpy M-step,
         checkpoint, re-broadcast.
 
-        Convergence follows the reference (hmmlearn ConvergenceMonitor,
-        labelling.py:238): stop when the SIGNED logprob delta drops
-        below ``tol``, an absolute criterion — a decrease also stops,
-        with a logged warning mirroring hmmlearn's monitor, and
-        ``n_iter`` caps the loop either way.
+        Convergence follows :meth:`_converged`; ``n_iter`` caps the
+        loop either way.
         """
         # the fit passes need only the token COUNT and the spans:
         # projecting the token strings out here keeps them off the Arrow
@@ -529,12 +552,11 @@ class HMMAggregator:
                 start = np.zeros(N_STATES)
                 trans = np.zeros((N_STATES, N_STATES))
                 obs = np.zeros((N_SOURCES, N_STATES, N_STATES))
-                for X in _doc_tensors(batches):
-                    lp, st, tr, ob = model.e_step(X)
+                for X in _doc_observations(batches):
+                    lp, st, tr, _ = model.e_step(X, obs)
                     logprob += lp
                     start += st
                     trans += tr
-                    obs += ob
                 return {"logprob": logprob, "start": start, "trans": trans, "obs": obs}
 
             sums = sum_partials(annotated, e_step_partition, {
@@ -551,21 +573,32 @@ class HMMAggregator:
             if checkpoint_dir:
                 self.save(os.path.join(checkpoint_dir, f"iter_{iteration:03d}"),
                           iteration, curr_logprob)
-            if prev_logprob is not None and curr_logprob - prev_logprob < self.tol:
-                if curr_logprob < prev_logprob:
-                    # mirrors hmmlearn's ConvergenceMonitor warning: EM
-                    # should be monotone, so a decrease usually means
-                    # float reordering (tree-combine at high partition
-                    # counts) or a degenerate init — stopping is still
-                    # correct, but say so instead of stopping silently
-                    logging.getLogger(__name__).warning(
-                        "HMM logprob decreased (%.6f -> %.6f) at iteration %d;"
-                        " stopping (model is not strictly converging)",
-                        prev_logprob, curr_logprob, iteration,
-                    )
+            if self._converged(prev_logprob, curr_logprob, iteration):
                 break
             prev_logprob = curr_logprob
         return self
+
+    def _converged(self, prev_logprob: float | None, curr_logprob: float,
+                   iteration: int) -> bool:
+        """The EM stopping rule of :meth:`fit_spark` and of the oracle's
+        single-node fit. It follows the reference (hmmlearn
+        ConvergenceMonitor, labelling.py:238): stop when the SIGNED
+        logprob delta drops below ``tol``, an absolute criterion — a
+        decrease also stops, with a logged warning mirroring hmmlearn's
+        monitor."""
+        if prev_logprob is None or curr_logprob - prev_logprob >= self.tol:
+            return False
+        if curr_logprob < prev_logprob:
+            # EM should be monotone, so a decrease usually means float
+            # reordering (tree-combine at high partition counts) or a
+            # degenerate init — stopping is still correct, but say so
+            # instead of stopping silently
+            logging.getLogger(__name__).warning(
+                "HMM logprob decreased (%.6f -> %.6f) at iteration %d;"
+                " stopping (model is not strictly converging)",
+                prev_logprob, curr_logprob, iteration,
+            )
+        return True
 
     @classmethod
     def _rebuilt(cls, startprob, transmat, emission_probs, excluded) -> "HMMAggregator":
@@ -591,7 +624,7 @@ class HMMAggregator:
             nonlocal model
             if model is None:
                 model = cls._rebuilt(*params_bc.value, excluded)
-            return model.label(sequence_from_spans(list(spans), n_tokens))
+            return model.label(observations_from_spans(list(spans), n_tokens))
 
         return label
 
@@ -604,19 +637,47 @@ class HMMAggregator:
         )
 
 
-def _doc_tensors(batches: Iterator[pd.DataFrame]) -> Iterator[np.ndarray]:
-    """The observation tensor of every document with tokens, from
+def _doc_observations(batches: Iterator[pd.DataFrame]) -> Iterator[Observations]:
+    """The sparse observations of every document with tokens, from
     (n_tokens, spans) batches."""
     for pdf in batches:
         for n_toks, spans in zip(pdf["n_tokens"], pdf["spans"]):
             if n_toks:
-                yield sequence_from_spans(list(spans), int(n_toks))
+                yield observations_from_spans(list(spans), int(n_toks))
 
 
 # ---------------------------------------------------------------------------
 # Prior-count aggregation pass (fused replacement for the reference's
 # three tee'd streams, labelling.py:248-252)
 # ---------------------------------------------------------------------------
+
+def add_prior_counts(X: Observations, best_source_index: int,
+                     init: np.ndarray, trans: np.ndarray, obs: np.ndarray) -> None:
+    """Add one document's prior counts: the initial state and the
+    transitions of the best-coverage source's argmax path, and the
+    document's float32 (sources, states) observation sum, summed in
+    token order as ``X.sum(axis=0)`` of the dense tensor sums it."""
+    src = X.pair_s[X.cell_pair]
+    # the dense argmax over X[t, best, :]: the first maximal cell, or O
+    # when no cell is positive (an uncovered pair holds O = 1.0, a
+    # covered one O = 0.0)
+    mine = (src == best_source_index) & (X.cell_conf > 0)
+    tok, state, conf = X.pair_t[X.cell_pair[mine]], X.cell_state[mine], X.cell_conf[mine]
+    order = np.lexsort((state, -conf, tok))
+    tok, state = tok[order], state[order]
+    first = np.ones(len(tok), dtype=bool)
+    first[1:] = tok[1:] != tok[:-1]
+    best = np.zeros(X.n_tokens, dtype=np.intp)
+    best[tok[first]] = state[first]
+    init[best[0]] += 1
+    np.add.at(trans, (best[:-1], best[1:]), 1.0)
+    counts = np.zeros((N_SOURCES, N_STATES), dtype=np.float32)
+    counts[:, 0] = X.n_tokens - np.bincount(X.pair_s, minlength=N_SOURCES)
+    # cells ascend by (source, token): each (source, state) sum adds in
+    # token order
+    np.add.at(counts, (src, X.cell_state), X.cell_conf)
+    obs += counts
+
 
 def _collect_prior_counts(
     annotated: DataFrame, best_source_index: int, excluded: np.ndarray | None = None,
@@ -628,14 +689,9 @@ def _collect_prior_counts(
         init = np.zeros(N_STATES)
         trans = np.zeros((N_STATES, N_STATES))
         obs = np.zeros((N_SOURCES, N_STATES))
-        for X in _doc_tensors(batches):
-            if excluded is not None and len(excluded):
-                X[:, excluded, :] = 0.0
-                X[:, excluded, 0] = 1.0
-            best = X[:, best_source_index, :].argmax(axis=1)
-            init[best[0]] += 1
-            np.add.at(trans, (best[:-1], best[1:]), 1.0)
-            obs += X.sum(axis=0)
+        for X in _doc_observations(batches):
+            add_prior_counts(X.without_sources(excluded), best_source_index,
+                             init, trans, obs)
         return {"init": init, "trans": trans, "obs": obs}
 
     sums = sum_partials(annotated, count_partition, {

@@ -40,7 +40,7 @@ def annotate_with_model(
     registers BOTH ``source`` and ``source+c``), the entity-corrected
     repair of those spans under ``source_name + "+c"`` when
     ``with_corrected`` is on. One narrow Arrow stage, no shuffle;
-    downstream specialise/extract_sequence/HMM consume the new sources
+    downstream specialise/observation_cells/HMM consume the new sources
     because they are in the registry."""
     if source_name not in SOURCE_INDICES:
         raise ValueError(

@@ -5,7 +5,8 @@ the SAME per-document core (operators.labelling, and the kernel the
 Spark extraction stage runs: triples.doc_mentions / doc_triples) in a
 plain Python loop — no Spark. ``oracle_majority_mentions`` alone keeps
 the dense ``majority_vote``: it is the independent reference for the
-sparse vote. Golden parity tests assert the distributed output equals
+sparse vote. The HMM fit and decode read the same sparse observation
+encoding as the Spark passes. Golden parity tests assert the distributed output equals
 this oracle exactly (spans, mentions) and at P/R >= 0.95 (triples, per
 north_rule).
 """
@@ -19,9 +20,10 @@ from weak_supervision_for_ner_spark.operators.aggregate import (
     N_STATES,
     decode_biluo,
     majority_vote,
+    observations_from_spans,
     sequence_from_spans,
 )
-from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
+from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator, add_prior_counts
 from weak_supervision_for_ner_spark.operators.labelling import (
     Doc,
     annotate_document,
@@ -71,40 +73,34 @@ def oracle_majority_mentions(annotated: list[dict], threshold: int = 4) -> list[
 
 
 def oracle_hmm_fit(annotated: list[dict], n_iter: int = 10, seed: int = 42) -> HMMAggregator:
-    """Single-node Baum-Welch with the same init/E/M code paths."""
+    """Single-node Baum-Welch with the same init/E/M code paths and the
+    same stopping rule as ``HMMAggregator.fit_spark``."""
     model = HMMAggregator(n_iter=n_iter, seed=seed)
     best = model._best_coverage_source_index()
 
     init = np.zeros(N_STATES)
     trans = np.zeros((N_STATES, N_STATES))
     obs = np.zeros((N_SOURCES, N_STATES))
-    seqs = []
-    for doc in annotated:
-        if not doc["tokens"]:
-            continue
-        X = sequence_from_spans(doc["spans"], len(doc["tokens"]))
-        seqs.append(X)
-        bestpath = X[:, best, :].argmax(axis=1)
-        init[bestpath[0]] += 1
-        np.add.at(trans, (bestpath[:-1], bestpath[1:]), 1.0)
-        obs += X.sum(axis=0)
+    seqs = [observations_from_spans(doc["spans"], len(doc["tokens"]))
+            for doc in annotated if doc["tokens"]]
+    for X in seqs:
+        add_prior_counts(X, best, init, trans, obs)
     model.initialise(init, trans, obs)
 
     prev = None
-    for _ in range(n_iter):
+    for iteration in range(n_iter):
         logprob = 0.0
         start = np.zeros(N_STATES)
         tr = np.zeros((N_STATES, N_STATES))
         ob = np.zeros((N_SOURCES, N_STATES, N_STATES))
         for X in seqs:
-            lp, st, t2, o2 = model.e_step(X)
+            lp, st, t2, _ = model.e_step(X, ob)
             logprob += lp
             start += st
             tr += t2
-            ob += o2
         model.m_step(start, tr, ob)
         model.history.append(float(logprob))
-        if prev is not None and abs(logprob - prev) < model.tol * max(len(seqs), 1):
+        if model._converged(prev, logprob, iteration):
             break
         prev = logprob
     return model
@@ -112,7 +108,7 @@ def oracle_hmm_fit(annotated: list[dict], n_iter: int = 10, seed: int = 42) -> H
 
 def oracle_hmm_mentions(model: HMMAggregator, annotated: list[dict]) -> list[tuple]:
     def label(spans, n_tokens):
-        return model.label(sequence_from_spans(spans, n_tokens))
+        return model.label(observations_from_spans(spans, n_tokens))
 
     return [
         (doc["url"], model.source_name, s, e, lab, conf, " ".join(doc["tokens"][s:e]))
