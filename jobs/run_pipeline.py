@@ -9,6 +9,11 @@
         --checkpoint-dir /path/ckpt --lineage /path/lineage.json \
         [--mentions-out /path/mentions] [--metrics]
 
+In local mode Python workers start from the package's worker daemon
+(``config.worker_daemon_conf``), unless ``--conf
+spark.python.daemon.module=...`` names another; other masters keep
+Spark's own daemon.
+
 Resumable: with --aggregator hmm and --checkpoint-dir, a re-run
 resumes EM from the latest per-iteration checkpoint.
 """
@@ -58,9 +63,18 @@ def main() -> None:
                          "anything else as a catalog table)")
     args = ap.parse_args()
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.getOrCreate()
+    from weak_supervision_for_ner_spark.config import worker_daemon_conf
+
+    # join spark-submit's JVM first: SparkConf() then holds the submitted
+    # --master and --conf values
+    SparkContext._ensure_initialized()
+    builder = SparkSession.builder
+    for key, value in worker_daemon_conf(SparkConf()).items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
 
     from weak_supervision_for_ner_spark.operators.annotate import write_mentions
     from weak_supervision_for_ner_spark.operators.triples import write_graph
