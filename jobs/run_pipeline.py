@@ -41,7 +41,9 @@ def main() -> None:
     ap.add_argument("--mentions-json", default=None,
                     help="also export aggregated mentions as JSON "
                          "(the reference's convert_to_json sink)")
-    ap.add_argument("--metrics", action="store_true")
+    ap.add_argument("--metrics", action="store_true",
+                    help="record per-partition annotation counters in the "
+                         "--lineage file (requires --lineage)")
     ap.add_argument("--no-truecase", action="store_true",
                     help="skip corpus-derived case repair (the reference "
                          "truecases <=25-token docs by default)")
@@ -62,6 +64,8 @@ def main() -> None:
                          "on the filesystem reads as a parquet path, "
                          "anything else as a catalog table)")
     args = ap.parse_args()
+    if args.metrics and not args.lineage:
+        ap.error("--metrics writes to the --lineage file; pass --lineage too")
 
     from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession

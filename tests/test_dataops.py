@@ -453,10 +453,38 @@ def test_connected_components_long_chain_converges(spark):
     chain = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(63)], "a string, b string"
     )
-    labels = connected_components(chain, max_rounds=10, convergence_check=True)
+    labels = connected_components(chain, max_rounds=10)
     got = {r["name"]: r["canonical"] for r in labels.collect()}
     assert set(got.values()) == {"n000"}
     assert len(got) == 64
+
+
+def test_connected_components_raises_at_cap_and_leaks_no_cache(spark):
+    """The 64-node chain needs about 7 pointer-jumping rounds: a 2-round
+    cap must raise, not return the chain split. Neither the raise nor a
+    converged call leaves the edge cache or a round's table persisted;
+    a converged call keeps only the component table it returns."""
+    from weak_supervision_for_ner_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(63)], "a string, b string"
+    )
+
+    def persisted():
+        # ids, not a count: the cleaner may free other tests' RDDs meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    with pytest.raises(RuntimeError, match="did not converge within 2 rounds"):
+        connected_components(chain, max_rounds=2)
+    assert persisted() - before == set()
+
+    labels = connected_components(chain)
+    assert {r["canonical"] for r in labels.collect()} == {"n000"}
+    result_rdd = labels._jdf.queryExecution().logical().rdd()
+    assert persisted() - before == {result_rdd.id()}   # the returned table only
+    result_rdd.unpersist(True)
+    assert persisted() - before == set()
 
 
 def test_numpy_brute_force_plan_is_scan_only(spark):

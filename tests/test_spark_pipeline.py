@@ -347,6 +347,63 @@ def test_canonicalize_driver_and_distributed_paths_agree(spark, pages_df):
     linked.unpersist()
 
 
+def test_canonicalize_long_lsh_chain_is_one_entity(spark):
+    """A chain of names, each at most one character away from the one
+    before (12 distinct names), is one LSH component on both strategies.
+    A fixed 3-round budget on the distributed path split it into 3
+    canonical ids."""
+    import random
+    import string
+
+    from weak_supervision_for_ner_spark.operators.triples import (
+        canonicalize_triples,
+        link_entities,
+    )
+    from weak_supervision_for_ner_spark.schema import TRIPLES_SCHEMA
+
+    rng = random.Random(7)
+    name = [rng.choice(string.ascii_lowercase) for _ in range(40)]
+    names = ["".join(name)]
+    positions = list(range(1, 40, 3))
+    rng.shuffle(positions)
+    for pos in positions[:12]:
+        name[pos] = rng.choice(string.ascii_lowercase)
+        names.append("".join(name))
+    triples = spark.createDataFrame(
+        [(a, "COMPANY", "acquired", b, "COMPANY", f"https://chain.example/{i}", 0.9)
+         for i, (a, b) in enumerate(zip(names, names[1:]))],
+        TRIPLES_SCHEMA,
+    )
+    linked = link_entities(spark, triples).persist()
+    for threshold in (0, 100_000):
+        stats = {}
+        out = canonicalize_triples(spark, linked, stats=stats,
+                                   driver_threshold=threshold)
+        ids = {i for r in out.select("subj_id", "obj_id").collect() for i in r}
+        assert ids == {"ent:" + min(names)}, (threshold, ids)
+        assert stats["unconverged_labels"] == 0
+    linked.unpersist()
+
+
+def test_metrics_without_lineage_is_rejected(monkeypatch, capsys, tmp_path):
+    """Per-partition metrics are written only to the lineage file:
+    asking for them without one is an error, not a thrown-away job."""
+    import sys
+
+    from jobs.run_pipeline import main
+
+    with pytest.raises(ValueError, match="lineage_path"):
+        run_kg_pipeline(None, None, with_metrics=True)
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--input", "synth:4", "--output", str(tmp_path / "graph"),
+        "--metrics",
+    ])
+    with pytest.raises(SystemExit) as exc:
+        main()
+    assert exc.value.code == 2
+    assert "--lineage" in capsys.readouterr().err
+
+
 def test_salted_mentions_write_balances_hot_domain(spark, tmp_path):
     """SURVEY §4 hot-domain skew: 95% of mentions from ONE domain must
     still spread evenly across the sink's writers because the rebalance

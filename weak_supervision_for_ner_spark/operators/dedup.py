@@ -20,6 +20,10 @@ Scale notes: every pipeline shuffles once on the blocking key
 (hash / shingle / band / bucket); frequent-shingle blocking keys are
 capped to avoid quadratic mega-buckets (documented drop counters).
 
+LSH bucketing and components live here once (``band_rows``,
+``_cap_buckets``, ``star_edges``, ``connected_components``); the
+graph's canonicalization (``triples.canonicalize_triples``) reuses them.
+
 PAIR-form vs FILTER-form: the ``*_pairs`` operators REPORT candidate/
 duplicate pairs, which is inherently quadratic in the size of an
 identical-document group — run ``drop_exact_duplicates`` first on
@@ -158,24 +162,37 @@ def ngram_jaccard_pairs(
     )
 
 
+def band_rows(frame: DataFrame, id_col: str, band_keys: list) -> DataFrame:
+    """LSH banding: ``(id_col, band, key)``, one row per band of every
+    input row, where ``band_keys[b]`` is band b's bucket-key expression.
+    One explode of a struct array — a bands-way union would re-read (or
+    at best ReuseExchange) the signature subtree once per band."""
+    bands = F.array(*[
+        F.struct(F.lit(b).alias("band"), key.alias("key"))
+        for b, key in enumerate(band_keys)
+    ])
+    return frame.select(F.col(id_col), F.explode(bands).alias("bk")).select(
+        id_col, "bk.band", "bk.key"
+    )
+
+
 def _cap_buckets(
-    bucketed: DataFrame, keys: list[str], max_bucket: int | None,
-    stats: dict | None,
+    banded: DataFrame, max_bucket: int | None, stats: dict | None,
 ) -> DataFrame:
-    """Drop LSH buckets with more than ``max_bucket`` member rows
-    before a quadratic intra-bucket self-join (boilerplate mega-bucket
-    guard). The windowed count shuffles on the same keys the self-join
-    uses, so Catalyst reuses the exchange — no extra shuffle in the
-    capped plan. ``stats`` (optional dict) receives
+    """Drop (band, key) buckets with more than ``max_bucket`` member
+    rows (boilerplate mega-bucket guard). The windowed count shuffles on
+    the bucket key the pair self-join or the star-edge window uses next,
+    so Catalyst reuses the exchange — no extra shuffle in the capped
+    plan. ``stats`` (optional dict) receives
     ``dropped_buckets``/``dropped_members`` from one extra small job."""
     if max_bucket is None:
-        return bucketed
-    w = Window.partitionBy(*keys)
-    sized = bucketed.withColumn("_sz", F.count(F.lit(1)).over(w))
+        return banded
+    w = Window.partitionBy("band", "key")
+    sized = banded.withColumn("_sz", F.count(F.lit(1)).over(w))
     if stats is not None:
         dropped = (
             sized.filter(F.col("_sz") > max_bucket)
-            .groupBy(*keys).agg(F.first("_sz").alias("sz"))
+            .groupBy("band", "key").agg(F.first("_sz").alias("sz"))
             .agg(F.count(F.lit(1)).alias("nb"),
                  F.coalesce(F.sum("sz"), F.lit(0)).alias("nm"))
             .collect()[0]
@@ -183,6 +200,115 @@ def _cap_buckets(
         stats["dropped_buckets"] = int(dropped["nb"])
         stats["dropped_members"] = int(dropped["nm"])
     return sized.filter(F.col("_sz") <= max_bucket).drop("_sz")
+
+
+def _bucket_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """Every (a, b), a < b, sharing at least one (band, key) bucket:
+    the intra-bucket self-join, quadratic in a bucket's size."""
+    return (
+        banded.alias("l")
+        .join(banded.alias("r"), ["band", "key"])
+        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
+        .distinct()
+    )
+
+
+def star_edges(banded: DataFrame, id_col: str) -> DataFrame:
+    """Bucket edges (a, b) with the components of the full intra-bucket
+    cliques: every member links to its bucket's SMALLEST id, so a
+    B-member bucket emits B-1 edges instead of B(B-1)/2. The hub is ONE
+    window; groupBy min + join back shuffles the banded table twice and
+    measured slower, even under a 100k-member mega-bucket (20.6s vs
+    14.3s, scripts/skew_bench.py)."""
+    w = Window.partitionBy("band", "key")
+    return (
+        banded
+        .withColumn("hub", F.min(id_col).over(w))
+        .filter(F.col(id_col) != F.col("hub"))
+        .select(F.col("hub").alias("a"), F.col(id_col).alias("b"))
+        .distinct()
+    )
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Free a localCheckpoint's blocks now, not at the JVM's next GC."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def connected_components(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
+    """Exact components of an undirected pair list (a, b): (name,
+    canonical) per node, canonical = the component's smallest id,
+    materialized (localCheckpoint) so callers may join it twice.
+
+    Each round propagates the smallest neighbour label, then
+    POINTER-JUMPS (canonical <- label[canonical]), so rounds grow with
+    log2(diameter); a round changing no label ends the loop.
+    ``max_rounds`` is a safety cap (30 covers diameters beyond 2^30):
+    hitting it raises — components are never returned split. The edge
+    cache and every round's tables but the returned one are released,
+    also on raise."""
+    # Symmetric edges from ONE explode pass, not a self-union (a
+    # self-union of an uncached upstream computes it twice in one job).
+    edges = (
+        pairs.select(
+            F.explode(F.array(
+                F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
+                F.struct(F.col("b").alias("x"), F.col("a").alias("y")),
+            )).alias("e")
+        )
+        .select("e.x", "e.y")
+    ).persist()
+    try:
+        edges.count()  # materialize once: the rounds re-scan the cache
+        labels = (
+            edges.groupBy("x").agg(F.min("y").alias("min_y"))
+            .select(F.col("x").alias("name"),
+                    F.least(F.col("min_y"), F.col("x")).alias("canonical"))
+        ).localCheckpoint()
+        for _ in range(max_rounds):
+            # propagate: new label = min over neighbours' labels and own
+            neigh = (
+                edges.join(labels.withColumnRenamed("name", "y"), on="y")
+                .groupBy("x").agg(F.min("canonical").alias("n_min"))
+            )
+            # materialized BEFORE the pointer-jump self-join — uncached,
+            # that self-join would run the edge join twice in one action
+            propagated = (
+                labels.join(neigh.withColumnRenamed("x", "name"), on="name", how="left")
+                .select("name", F.least(
+                    F.col("canonical"), F.coalesce("n_min", "canonical")
+                ).alias("canonical"))
+            ).localCheckpoint()
+            # Pointer jumping (path halving): every canonical id is
+            # itself a node (it came from some node's min), so the left
+            # join finds at most one row; least() guards identity rows.
+            jump = propagated.select(
+                F.col("name").alias("canonical"), F.col("canonical").alias("jc")
+            )
+            new_labels = (
+                propagated.join(jump, on="canonical", how="left")
+                .select("name", F.least(
+                    F.col("canonical"), F.coalesce("jc", "canonical")
+                ).alias("canonical"))
+            ).localCheckpoint()
+            _release(propagated)
+            changed = (
+                new_labels.alias("n").join(labels.alias("o"), on="name")
+                .filter(F.col("n.canonical") != F.col("o.canonical"))
+                .limit(1).count()
+            )
+            _release(labels)
+            labels = new_labels
+            if changed == 0:
+                return labels
+        _release(labels)
+    finally:
+        edges.unpersist()
+    raise RuntimeError(
+        f"connected_components did not converge within {max_rounds} rounds;"
+        " raise max_rounds (component diameter exceeds the budget)"
+    )
 
 
 def minhash_signature_table(
@@ -198,6 +324,16 @@ def minhash_signature_table(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def _minhash_bands(documents: DataFrame, n_hashes: int, bands: int, n: int,
+                   text_col: str) -> DataFrame:
+    """(doc_id, band, key), a band's key joining its signature slice."""
+    rows = n_hashes // bands
+    return band_rows(minhash_signature_table(documents, n_hashes, n, text_col), "doc_id", [
+        F.concat_ws("#", *[F.col(f"h{i}") for i in range(b * rows, (b + 1) * rows)])
+        for b in range(bands)
+    ])
+
+
 def minhash_lsh_pairs(
     documents: DataFrame, n_hashes: int = 8, bands: int = 4, n: int = 3,
     verify_threshold: float | None = None, text_col: str = "text",
@@ -206,39 +342,17 @@ def minhash_lsh_pairs(
     """Near-dup candidate pairs: band the minhash signature, groupBy
     (band, key), intra-bucket pairs. Optional exact-Jaccard verify.
 
-    ``max_bucket`` (triples.lsh_candidate_pairs' contract): buckets
+    ``max_bucket`` (the canonicalization's contract too): buckets
     with more members are DROPPED before the quadratic self-join — the
     skew guard for boilerplate mega-buckets. Default None keeps the
     pairs-form's documented exhaustive-within-bucket semantics (and
     oracle parity). Pass ``stats`` (a dict) to have drops COUNTED into
     ``dropped_buckets``/``dropped_members`` via one small extra job, so
     truncation is observable in lineage instead of silent."""
-    sigs = minhash_signature_table(documents, n_hashes, n, text_col)
-    rows_per_band = n_hashes // bands
-    # single-pass banding: per-band keys become an array column that is
-    # exploded — a bands-way union would re-read (or at best
-    # ReuseExchange) the shingling+minhash subtree per band
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "#",
-                *[F.col(f"h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    banded = _cap_buckets(banded, ["band", "key"], max_bucket, stats)
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "key"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
+    banded = _cap_buckets(
+        _minhash_bands(documents, n_hashes, bands, n, text_col), max_bucket, stats
     )
+    pairs = _bucket_pairs(banded, "doc_id")
     if verify_threshold is not None:
         exact = ngram_jaccard_pairs(documents, threshold=verify_threshold, n=n)
         pairs = pairs.join(exact.select("a", "b"), ["a", "b"], "left_semi")
@@ -381,8 +495,7 @@ def embedding_near_duplicates(
     ``max_bucket``/``stats`` (lsh blocker only): drop (band, key)
     buckets larger than ``max_bucket`` before the candidate self-join,
     with drops counted into ``stats`` — the same mega-bucket contract
-    as triples.lsh_candidate_pairs. Default None = uncapped (oracle
-    parity).
+    as ``minhash_lsh_pairs``. Default None = uncapped (oracle parity).
 
     ``blocker="lsh"`` (default, the 100-TB path): random-hyperplane
     sign bits split into ``bands`` bands of ``n_planes/bands`` planes;
@@ -441,26 +554,11 @@ def embedding_near_duplicates(
             first = embeddings.select(F.size(vec_col).alias("d")).first()
             dim = int(first["d"]) if first else 0
         planes = random_hyperplanes(dim, n_planes, seed)
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                hyperplane_bucket(vec_col, planes[b * r : (b + 1) * r]).alias("key"),
-            )
+        banded = band_rows(embeddings, id_col, [
+            hyperplane_bucket(vec_col, planes[b * r : (b + 1) * r])
             for b in range(bands)
-        ]
-        bucketed = embeddings.select(
-            F.col(id_col), F.explode(F.array(*band_structs)).alias("bk")
-        ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        bucketed = _cap_buckets(bucketed, ["band", "key"], max_bucket, stats)
-        cand_ids = (
-            bucketed.alias("l")
-            .join(bucketed.alias("r"), ["band", "key"])
-            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-            .select(
-                F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b")
-            )
-            .distinct()
-        )
+        ])
+        cand_ids = _bucket_pairs(_cap_buckets(banded, max_bucket, stats), id_col)
         # re-join vectors for the exact re-rank (ids only travel
         # through the bucket shuffle; vectors are fetched twice by key)
         cand = (
@@ -508,44 +606,11 @@ def minhash_lsh_star_edges(
     documents: DataFrame, n_hashes: int = 8, bands: int = 4, n: int = 3,
     text_col: str = "text",
 ) -> DataFrame:
-    """Connectivity-preserving LSH candidate edges: per (band, key)
-    bucket, every member links to the bucket's SMALLEST doc_id instead
-    of to every other member. Connected components over these star
-    edges equal components over the full intra-bucket cliques (all
-    members share the hub), but a B-member boilerplate mega-bucket
-    emits B-1 edges instead of B(B-1)/2 — the difference between a
-    window function and an OOM at 100 TB. One shuffle on the band key,
-    no self-join anywhere."""
-    sigs = minhash_signature_table(documents, n_hashes, n, text_col)
-    rows_per_band = n_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "#",
-                *[F.col(f"h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # Hub per bucket via ONE window shuffle. The alternative (groupBy
-    # min + equi-join back, which AQE could skew-split) was measured
-    # and REJECTED: the second shuffle of the banded table costs ~2x
-    # on unskewed corpora and still loses under a 100k-member
-    # mega-bucket (20.6s vs 14.3s) — the window's single sorted pass
-    # wins even when one bucket holds half the corpus (scripts/
-    # skew_bench.py records the skew evidence per round).
-    w = Window.partitionBy("band", "key")
-    return (
-        banded
-        .withColumn("hub", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("a"), F.col("doc_id").alias("b"))
-        .distinct()
-    )
+    """Connectivity-preserving minhash-LSH candidate edges: the
+    :func:`star_edges` of the banded signatures, so a B-member
+    boilerplate mega-bucket emits B-1 edges instead of B(B-1)/2 — the
+    difference between a window function and an OOM at 100 TB."""
+    return star_edges(_minhash_bands(documents, n_hashes, bands, n, text_col), "doc_id")
 
 
 def drop_near_duplicates(
@@ -572,15 +637,9 @@ def drop_near_duplicates(
     30 rounds cover diameters beyond 2^30. Hitting the cap still
     raises: dropping survivors because propagation stopped early would
     silently lose training data."""
-    from weak_supervision_for_ner_spark.operators.triples import connected_components
-
     collapsed = drop_exact_duplicates(documents, text_col)
     edges = minhash_lsh_star_edges(collapsed, n_hashes, bands, n, text_col)
-    # convergence-checked: dropping a survivor because label propagation
-    # stopped early would silently lose training data
-    components = connected_components(
-        edges, max_rounds=max_rounds, convergence_check=True
-    )
+    components = connected_components(edges, max_rounds=max_rounds)
     losers = components.filter(F.col("name") != F.col("canonical")).select(
         F.col("name").alias("doc_id")
     )

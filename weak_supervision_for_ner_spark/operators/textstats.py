@@ -336,6 +336,19 @@ def cap_per_domain(
     )
 
 
+def _form_counts(documents: DataFrame, text_col: str) -> DataFrame:
+    """(lform, form, n): corpus counts of every alphabetic
+    whitespace-split form, keyed by its lowercase."""
+    return (
+        documents
+        .select(F.explode(F.split(F.col(text_col), r"\s+")).alias("form"))
+        .filter(F.length("form") > 0)
+        .filter(F.col("form").rlike(r"^[A-Za-z]+$"))
+        .groupBy(F.lower(F.col("form")).alias("lform"), F.col("form"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 def form_frequencies(documents: DataFrame, text_col: str = "text",
                      min_count: int = 2) -> DataFrame:
     """Corpus-level casing statistics: for every lowercase form, the
@@ -346,16 +359,7 @@ def form_frequencies(documents: DataFrame, text_col: str = "text",
     then broadcast back."""
     from pyspark.sql import Window
 
-    toks = (
-        documents
-        .select(F.explode(F.split(F.col(text_col), r"\s+")).alias("form"))
-        .filter(F.length("form") > 0)
-        .filter(F.col("form").rlike(r"^[A-Za-z]+$"))
-    )
-    counts = (
-        toks.groupBy(F.lower(F.col("form")).alias("lform"), F.col("form"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    counts = _form_counts(documents, text_col)
     totals = counts.groupBy("lform").agg(F.sum("n").alias("n_total"))
     w = Window.partitionBy("lform").orderBy(F.desc("n"), F.asc("form"))
     majority = (
@@ -387,18 +391,8 @@ def collect_form_frequency_dict(
     fewer than ``min_count`` times carry no reliable casing signal and
     are dropped before the cap.
     """
-    toks = (
-        documents
-        .select(F.explode(F.split(F.col(text_col), r"\s+")).alias("form"))
-        .filter(F.length("form") > 0)
-        .filter(F.col("form").rlike(r"^[A-Za-z]+$"))
-    )
-    counts = (
-        toks.groupBy(F.lower(F.col("form")).alias("lform"), F.col("form"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
     kept = (
-        counts.groupBy("lform")
+        _form_counts(documents, text_col).groupBy("lform")
         .agg(
             F.sum("n").alias("n_total"),
             F.map_from_entries(F.collect_list(F.struct("form", "n"))).alias("forms"),

@@ -19,15 +19,17 @@ After extraction:
       raw triples (surface forms)
       → entity linking: a literal map lookup of the gazetteer KB
       → canonicalization: minhash-LSH over character shingles of
-        UNLINKED surface forms; band groupBy; connected components via
-        iterative smallest-id propagation; rewrite triples
+        UNLINKED surface forms; banding and exact connected components
+        (driver union-find for small sets, else the dedup module's
+        star edges and pointer-jumping components); rewrite triples
       → dedup (groupBy max-conf) → write partitioned by pred.
 
 Scale notes: linking folds into the projection (the KB is the
 in-module gazetteer, ~10^2 entries); LSH banding shuffles once on
 (band, signature); mega-buckets from boilerplate are capped (drops
-counted, no silent truncation — SURVEY.md §7.4); connected components
-is the classic O(log n)-round iterative join with AQE handling skew.
+counted, no silent truncation — SURVEY.md §7.4); distributed connected
+components pointer-jump in O(log diameter) rounds and raise rather than
+stop short.
 """
 
 from __future__ import annotations
@@ -45,6 +47,12 @@ from weak_supervision_for_ner_spark.operators.aggregate import (
     specialise_layers,
 )
 from weak_supervision_for_ner_spark.operators.annotate import annotate_batch, select_text
+from weak_supervision_for_ner_spark.operators.dedup import (
+    _cap_buckets,
+    band_rows,
+    connected_components,
+    star_edges,
+)
 from weak_supervision_for_ner_spark.operators.entity_correction import correct_spans_with_conf
 from weak_supervision_for_ner_spark.schema import MENTIONS_SCHEMA, TRIPLES_SCHEMA
 from weak_supervision_for_ner_spark.sources.gazetteer import RELATION_LEXICON
@@ -394,191 +402,15 @@ def minhash_signatures(
     return sh.select(id_col, *sig_cols)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str = "name", n_hashes: int = 16,
-    bands: int = 4, max_bucket: int = 64, stats: dict | None = None,
-) -> DataFrame:
-    """Band the signatures, groupBy (band, key) and emit intra-bucket
-    pairs. Buckets above ``max_bucket`` are dropped (skew guard for
-    boilerplate mega-buckets); pass ``stats`` (a dict) to have the drop
-    COUNTED — it is filled with ``dropped_buckets``/``dropped_members``
-    via one extra small aggregation job, so truncation is observable in
-    lineage instead of silent.
-
-    Banding is a single pass: the per-band bucket keys become an array
-    column that is exploded — no n-way union re-reading the input."""
-    rows_per_band = n_hashes // bands
-    band_keys = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[f"h{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)]).alias("bucket"),
-        )
-        for b in range(bands)
-    ])
-    banded = (
-        signatures.select(F.col(id_col), F.explode(band_keys).alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-    )
-
-    bucketed = banded.groupBy("band", "bucket").agg(
-        F.collect_list(id_col).alias("members"), F.count(F.lit(1)).alias("sz")
-    )
-    if stats is not None:
-        # one extra small job recomputing the bucket aggregation —
-        # cheaper than pinning the collect_list buckets in executor
-        # storage for the rest of the application (stats mode is a
-        # lineage diagnostic, not the hot path)
-        dropped = (
-            bucketed.filter(F.col("sz") > max_bucket)
-            .agg(F.count(F.lit(1)).alias("nb"), F.coalesce(F.sum("sz"), F.lit(0)).alias("nm"))
-            .collect()[0]
-        )
-        stats["dropped_buckets"] = int(dropped["nb"])
-        stats["dropped_members"] = int(dropped["nm"])
-    kept = bucketed.filter(F.col("sz") <= max_bucket)
-    # Intra-bucket pairs: double explode is fine because buckets are
-    # capped at max_bucket members.
-    pairs = (
-        kept
-        .select(F.explode("members").alias("a"), F.col("members"))
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    return pairs
-
-
-def connected_components(
-    pairs: DataFrame, max_rounds: int = 3, convergence_check: bool = False,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Smallest-id label propagation over an undirected pair list.
-    Returns (name, canonical).
-
-    Default mode unrolls ``max_rounds`` propagation joins LAZILY into
-    one plan — a single action executes the whole loop, so the
-    per-round job/checkpoint overhead that dominates at small scale
-    disappears. LSH near-dup chains have tiny diameter, so 3 rounds
-    converge in practice. ``convergence_check=True`` switches to the
-    classic materialize-per-round loop (localCheckpoint + changed
-    count) for unbounded components — use it when component diameter
-    is unknown (and set a cluster checkpoint dir at real scale). That
-    mode also POINTER-JUMPS after each propagation (canonical <-
-    label[canonical], one extra self-join on the label table), so the
-    rounds needed grow with log2(diameter), not the diameter itself:
-    ``max_rounds`` = 30 certifies convergence for any component that
-    fits on disk, and chain graphs (the worst case for plain
-    propagation) converge in ~log2(n) rounds.
-
-    Pass ``stats`` (a dict) to make non-convergence OBSERVABLE in lazy
-    mode: after the unrolled rounds one extra propagation runs and
-    ``stats['unconverged_labels']`` records how many labels would still
-    change — 0 certifies the rounds sufficed; >0 means components with
-    diameter beyond the budget were split (switch to
-    ``convergence_check=True`` for those corpora)."""
-    # Symmetric edges from ONE explode pass, not a self-union (a
-    # self-union of an uncached upstream computes it twice in one job).
-    edges = (
-        pairs.select(
-            F.explode(F.array(
-                F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
-                F.struct(F.col("b").alias("x"), F.col("a").alias("y")),
-            )).alias("e")
-        )
-        .select("e.x", "e.y")
-    ).persist()
-    edges.count()  # materialize once: rounds below re-scan the cache
-    labels = (
-        edges.groupBy("x").agg(F.min("y").alias("min_y"))
-        .select(F.col("x").alias("name"),
-                F.least(F.col("min_y"), F.col("x")).alias("canonical"))
-    )
-    converged = False
-    for _ in range(max_rounds):
-        # propagate: new label = min over neighbours' labels and own
-        neigh = (
-            edges.join(labels.withColumnRenamed("name", "y"), on="y")
-            .groupBy("x").agg(F.min("canonical").alias("n_min"))
-        )
-        new_labels = (
-            labels.join(neigh.withColumnRenamed("x", "name"), on="name", how="left")
-            .select(
-                "name",
-                F.least(F.col("canonical"), F.coalesce("n_min", "canonical")).alias("canonical"),
-            )
-        )
-        if convergence_check:
-            # Materialize the propagation BEFORE the pointer-jump
-            # self-join — an uncached self-join would run the edge join
-            # twice in one action.
-            new_labels = new_labels.localCheckpoint()
-            # Pointer jumping (path halving): canonical <- label[canonical].
-            # Every canonical id is itself a node (it came from some
-            # node's min), so the left join finds at most one row;
-            # least() is belt-and-braces against identity rows. This is
-            # what turns per-round progress from 1 hop into doubling —
-            # rounds needed ~ log2(diameter).
-            jump = new_labels.select(
-                F.col("name").alias("canonical"), F.col("canonical").alias("jc")
-            )
-            new_labels = (
-                new_labels.join(jump, on="canonical", how="left")
-                .select(
-                    "name",
-                    F.least(
-                        F.col("canonical"), F.coalesce("jc", "canonical")
-                    ).alias("canonical"),
-                )
-            )
-            new_labels = new_labels.localCheckpoint()
-            changed = (
-                new_labels.alias("n").join(labels.alias("o"), on="name")
-                .filter(F.col("n.canonical") != F.col("o.canonical"))
-                .limit(1).count()
-            )
-            if changed == 0:
-                labels = new_labels
-                converged = True
-                break
-        labels = new_labels
-    if convergence_check:
-        # every round's labels are localCheckpointed, so the final
-        # result no longer depends on the edges cache — release it
-        edges.unpersist()
-        if not converged:
-            # exhausting the round budget in convergence mode means the
-            # caller asked for exact components (e.g. dedup survivors —
-            # stopping early silently retains duplicates); fail loudly.
-            raise RuntimeError(
-                f"connected_components did not converge within {max_rounds} rounds;"
-                " raise max_rounds (component diameter exceeds the budget)"
-            )
-    if stats is not None and not convergence_check:
-        labels = labels.localCheckpoint()
-        neigh = (
-            edges.join(labels.withColumnRenamed("name", "y"), on="y")
-            .groupBy("x").agg(F.min("canonical").alias("n_min"))
-        )
-        stats["unconverged_labels"] = (
-            labels.join(neigh.withColumnRenamed("x", "name"), on="name")
-            .filter(F.col("n_min") < F.col("canonical"))
-            .count()
-        )
-        # labels are checkpointed and the stats job has run: the edges
-        # cache is no longer reachable from anything returned — free it
-        edges.unpersist()
-    return labels
-
-
 def _local_components(
     sig_rows: list, n_hashes: int, bands: int, max_bucket: int,
     stats: dict | None,
 ) -> dict[str, str]:
     """Driver-side banding + union-find over a COLLECTED signature
-    table: identical connectivity to lsh_candidate_pairs +
-    connected_components (same bands, same bucket-size cap, smallest-id
-    representative), but exact to full convergence and zero extra Spark
-    jobs. Used when the unlinked-entity set is small enough to collect."""
+    table: the same components as the distributed branch of
+    :func:`canonicalize_triples` (same bands, same bucket-size cap,
+    smallest-id representative) with zero extra Spark jobs. Used when
+    the unlinked-entity set is small enough to collect."""
     rows_per_band = n_hashes // bands
     buckets: dict[tuple, list[str]] = {}
     for row in sig_rows:
@@ -636,13 +468,16 @@ def canonicalize_triples(
       Arrow LocalRelation broadcast — replacing ~6 small shuffle jobs
       whose per-stage orchestration dominated wall-clock. Exact to full
       convergence.
-    - above the threshold: the fully distributed path
-      (lsh_candidate_pairs -> connected_components), one shuffle on the
-      band key, label propagation with a bounded round budget.
+    - above the threshold: the fully distributed path on the dedup
+      operators (``band_rows`` -> ``_cap_buckets`` -> ``star_edges`` ->
+      ``connected_components``): one shuffle on the band key, linear
+      edges per bucket, and components exact to full convergence — a
+      component too deep for the round cap raises, it is never split.
 
-    With ``stats`` provided, LSH mega-bucket drops and CC
-    non-convergence counts are recorded there (and surfaced through the
-    pipeline's lineage log) so neither truncation is silent."""
+    With ``stats`` provided, LSH mega-bucket drops are counted there
+    (and surfaced through the pipeline's lineage log) so truncation is
+    never silent; ``unconverged_labels`` is 0 on both paths, which are
+    exact."""
     linked = linked.persist()  # read by the LSH pass and the final rewrite
     # Single-pass extraction of unlinked surface forms (explode, not a
     # self-union that would double-compute the uncached upstream).
@@ -673,14 +508,18 @@ def canonicalize_triples(
             components = components.filter(F.col("name") != "")
         components = F.broadcast(components)
     else:
-        pairs = lsh_candidate_pairs(
-            sigs, "name", n_hashes, bands, max_bucket=max_bucket, stats=stats
+        rows = n_hashes // bands
+        banded = band_rows(sigs, "name", [
+            F.xxhash64(*[f"h{i}" for i in range(b * rows, (b + 1) * rows)])
+            for b in range(bands)
+        ])
+        # materialized by connected_components, so the subj and obj
+        # rewrites below read one component table
+        components = connected_components(
+            star_edges(_cap_buckets(banded, max_bucket, stats), "name")
         )
-        # The component table joins into BOTH the subj and obj rewrites;
-        # eager localCheckpoint materializes the whole LSH+CC subtree
-        # once and truncates its (deep, unrolled-round) lineage —
-        # without it the entire canonicalization executed twice.
-        components = connected_components(pairs, stats=stats).localCheckpoint()
+        if stats is not None:
+            stats["unconverged_labels"] = 0
 
     out = linked
     for side in ("subj", "obj"):

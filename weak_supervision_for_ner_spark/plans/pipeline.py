@@ -164,8 +164,10 @@ def run_kg_pipeline(
       annotated tables, e.g. --mentions-out): majority runs re-vote the
       PERSISTED annotated rows, so the 35-function labelling stage
       executes exactly once in total; HMM runs join the decoded
-      mentions back, so Viterbi runs once. ``with_metrics`` also
-      materializes the annotated table, so majority runs re-vote it;
+      mentions back, so Viterbi runs once. ``with_metrics`` (per-
+      partition annotation counters, written to ``lineage_path``, which
+      it requires) also materializes the annotated table, so majority
+      runs re-vote it;
     - otherwise an HMM run decodes inside the stage over the annotated
       rows (Viterbi labeller under the broadcast model), no join.
 
@@ -182,6 +184,10 @@ def run_kg_pipeline(
     with). Stage files are the job's own durable checkpoints; clean
     them up after the final sink commits.
     """
+    if with_metrics and not lineage_path:
+        # the counters go only to the lineage file: without one, the
+        # metrics job's result would be thrown away
+        raise ValueError("with_metrics=True needs a lineage_path to write the metrics to")
     lineage = Lineage(lineage_path)
 
     if stage_dir:
