@@ -6,7 +6,7 @@
         --input  <pages parquet/iceberg path | synth:N>  \
         --output /path/to/graph \
         --aggregator majority|hmm \
-        --checkpoint-dir /path/ckpt --lineage /path/lineage.json \
+        [--stage-dir /path/stages] [--lineage /path/lineage.json] \
         [--mentions-out /path/mentions] [--metrics]
 
 In local mode Python workers start from the package's worker daemon
@@ -14,8 +14,8 @@ In local mode Python workers start from the package's worker daemon
 spark.python.daemon.module=...`` names another; other masters keep
 Spark's own daemon.
 
-Resumable: with --aggregator hmm and --checkpoint-dir, a re-run
-resumes EM from the latest per-iteration checkpoint.
+Resumable: with --stage-dir, a re-run with the same flags and input
+reuses the committed stages, casing dictionary and HMM EM checkpoints.
 """
 
 from __future__ import annotations
@@ -31,11 +31,11 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--aggregator", default="majority", choices=["majority", "hmm"])
     ap.add_argument("--hmm-iters", type=int, default=10)
-    ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--stage-dir", default=None,
                     help="durable mid-pipeline resume: committed stage "
-                         "outputs (annotated/mentions parquet) are reused "
-                         "by a re-run instead of recomputed")
+                         "outputs (annotated/mentions parquet, casing "
+                         "dictionary, HMM checkpoints) are reused by a "
+                         "re-run instead of recomputed")
     ap.add_argument("--lineage", default=None)
     ap.add_argument("--mentions-out", default=None)
     ap.add_argument("--mentions-json", default=None,
@@ -103,7 +103,6 @@ def main() -> None:
         spark, pages,
         aggregator=args.aggregator,
         hmm_iters=args.hmm_iters,
-        checkpoint_dir=args.checkpoint_dir,
         lineage_path=args.lineage,
         with_metrics=args.metrics,
         mentions_consumed=bool(args.mentions_out or args.mentions_json),
@@ -118,11 +117,6 @@ def main() -> None:
         mentions.write.mode("overwrite").json(args.mentions_json)
     annotated.unpersist()
     mentions.unpersist()
-    # the canonicalization stage caches its linked-triples input for
-    # the duration of the job (read by the LSH pass and the final
-    # rewrite); everything is written out now, so release all stage
-    # caches before the session moves on
-    spark.catalog.clearCache()
     n = (spark.table(args.output) if args.format == "iceberg"
          else spark.read.parquet(args.output)).count()
     print(f"graph written to {args.output}: {n} triples")

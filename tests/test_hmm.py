@@ -413,3 +413,21 @@ def test_hmm_spark_path_builds_no_dense_tensor(spark, annotated60, monkeypatch):
     finally:
         for module in modules:
             cloudpickle.unregister_pickle_by_value(module)
+
+
+def test_resumed_converged_fit_runs_no_iteration(spark, annotated60, tmp_path, jobs_launched):
+    """A fit that stopped by the convergence rule, resumed from its
+    checkpoints, stops there too: it reloads the last checkpoint, runs no
+    Spark job, and has the uninterrupted fit's history and parameters."""
+    ckpt = str(tmp_path / "ckpt")
+    # tol far above any logprob gain: EM stops after its second iteration
+    model = HMMAggregator(n_iter=5, tol=1e12)
+    model.fit_spark(spark, annotated60, checkpoint_dir=ckpt)
+    assert len(model.history) == 2
+
+    resumed = HMMAggregator(n_iter=5, tol=1e12)
+    jobs = jobs_launched("hmm-resume-converged", lambda: resumed.fit_spark(
+        spark, annotated60, checkpoint_dir=ckpt, resume=True))
+    assert jobs == []
+    assert resumed.history == model.history
+    np.testing.assert_array_equal(resumed.emission_probs, model.emission_probs)

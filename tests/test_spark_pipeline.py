@@ -247,6 +247,9 @@ def test_graph_only_majority_extraction_is_one_stage(spark, tmp_path):
     """On the graph-only majority path everything between the scan and
     entity linking (annotate → vote → correct → SVO, then the KB map
     lookup) is ONE MapInPandas node, with no join."""
+    from weak_supervision_for_ner_spark.operators.textstats import (
+        collect_form_frequency_dict,
+    )
     from weak_supervision_for_ner_spark.operators.triples import (
         extract_triples_direct,
         link_entities,
@@ -254,7 +257,9 @@ def test_graph_only_majority_extraction_is_one_stage(spark, tmp_path):
 
     path = str(tmp_path / "pages")
     synth_pages(spark, 20, partitions=2).write.parquet(path)
-    raw = extract_triples_direct(spark.read.parquet(path), truecase=True, correct=True)
+    pages = spark.read.parquet(path)
+    freqs = collect_form_frequency_dict(pages.filter("lang = 'en'"))
+    raw = extract_triples_direct(pages, form_freqs=freqs, correct=True)
     plan = link_entities(spark, raw)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert "Join" not in plan, plan
@@ -588,14 +593,83 @@ def test_cli_stage_dir_flag(spark, tmp_path, monkeypatch):
 def test_stage_dir_rejects_same_size_different_corpus(spark, tmp_path):
     """The in-memory input fingerprint must be a content hash, not a
     bare row count: two same-size corpora with different text would
-    otherwise collide and silently resume each other's stages."""
+    otherwise collide and silently resume each other's stages — for the
+    HMM, its EM checkpoints too."""
     pages = synth_pages(spark, 30, partitions=2)
-    stage = str(tmp_path / "stages_same_size")
-    run_kg_pipeline(spark, pages, aggregator="majority", stage_dir=stage)
-
     same_size_garbage = synth_pages(spark, 30, partitions=2).selectExpr(
         "url", "warc_ts", "html", "'nothing here' AS text", "lang"
     )
-    with pytest.raises(ValueError, match="stage_dir"):
-        run_kg_pipeline(spark, same_size_garbage, aggregator="majority",
-                        stage_dir=stage)
+    for aggregator in ("majority", "hmm"):
+        stage = str(tmp_path / f"stages_same_size_{aggregator}")
+        run_kg_pipeline(spark, pages, aggregator=aggregator, stage_dir=stage)
+        with pytest.raises(ValueError, match="stage_dir"):
+            run_kg_pipeline(spark, same_size_garbage, aggregator=aggregator,
+                            stage_dir=stage)
+
+
+def test_stage_dir_resumes_hmm_from_its_checkpoints(spark, tmp_path):
+    """The HMM's EM checkpoints live in the stage_dir: with the mentions
+    stage deleted, a re-run reloads the finished fit (no checkpoint is
+    rewritten), decodes and commits the same mentions, and builds the
+    same graph as the first run and as a run without a stage_dir."""
+    import json
+    import os
+    import shutil
+
+    pages = synth_pages(spark, 40, partitions=2).persist()
+    stage = str(tmp_path / "hmm_stages")
+
+    def rows(frame):
+        return sorted(map(tuple, frame.select(*sorted(frame.columns)).collect()))
+
+    _, m_first, g_first = run_kg_pipeline(spark, pages, aggregator="hmm", stage_dir=stage)
+    first = rows(m_first), rows(g_first)
+    assert first[0] and first[1]
+    hmm_dir = os.path.join(stage, "hmm")
+    written = {f: os.stat(os.path.join(hmm_dir, f)).st_mtime_ns for f in os.listdir(hmm_dir)}
+    assert any(f.endswith(".npz") for f in written)
+
+    shutil.rmtree(os.path.join(stage, "mentions"))
+    lineage = str(tmp_path / "hmm_resume.json")
+    _, m_resumed, g_resumed = run_kg_pipeline(
+        spark, pages, aggregator="hmm", stage_dir=stage, lineage_path=lineage)
+    assert (rows(m_resumed), rows(g_resumed)) == first
+    assert {f: os.stat(os.path.join(hmm_dir, f)).st_mtime_ns
+            for f in os.listdir(hmm_dir)} == written
+    with open(lineage) as fd:
+        stages = [r["stage"] for r in json.load(fd)]
+    assert "stage_resume_annotated" in stages and "stage_commit_mentions" in stages
+
+    annotated, m_plain, g_plain = run_kg_pipeline(spark, pages, aggregator="hmm")
+    assert (rows(m_plain), rows(g_plain)) == first
+    annotated.unpersist()
+    m_plain.unpersist()
+    pages.unpersist()
+
+
+# Spark jobs of one call on the corpus below when canonicalization
+# persisted its input (a cached table that outlived the call): 10 and 14
+# on a local[4] session; a local checkpoint saves one of them
+_JOBS_WITH_CACHED_LINKED = {"majority": 10, "hmm": 14}
+
+
+def test_pipeline_leaves_no_cache_behind(spark, tmp_path, jobs_launched):
+    """run_kg_pipeline → write_graph, once per aggregator: after the
+    caller unpersists the returned annotated and mentions frames, the
+    session's CacheManager holds what it held before the call, and the
+    call launches no more Spark jobs than with the cached input."""
+    from weak_supervision_for_ner_spark.operators.triples import write_graph
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    pages = synth_pages(spark, 40, partitions=2)
+    for aggregator, max_jobs in _JOBS_WITH_CACHED_LINKED.items():
+        def job():
+            annotated, mentions, graph = run_kg_pipeline(spark, pages, aggregator=aggregator)
+            write_graph(graph, str(tmp_path / f"graph_{aggregator}"))
+            annotated.unpersist()
+            mentions.unpersist()
+
+        jobs = jobs_launched(f"no-cache-{aggregator}", job)
+        assert cache.numCachedEntries() == before, aggregator
+        assert 0 < len(jobs) <= max_jobs, (aggregator, jobs)

@@ -200,3 +200,23 @@ def test_streaming_compaction_matches_batch_graph(spark, tmp_path):
     with open(lineage) as fd:
         rec = json.load(fd)
     assert rec["edges"] == n and "unconverged_labels" in rec
+
+
+def test_finalize_streaming_graph_keeps_caller_caches(spark, tmp_path):
+    """The compaction job releases only what it cached itself: a frame
+    the caller persisted before the call is still cached after it."""
+    from weak_supervision_for_ner_spark.operators.triples import extract_triples_direct
+    from weak_supervision_for_ner_spark.sources.pages import synth_pages
+    from weak_supervision_for_ner_spark.streaming.ingest import finalize_streaming_graph
+
+    raw_sink = str(tmp_path / "raw_triples")
+    extract_triples_direct(synth_pages(spark, 20, partitions=2), correct=True) \
+        .write.parquet(raw_sink)
+    kept = synth_pages(spark, 10, partitions=1).persist()
+    kept.count()
+    try:
+        assert finalize_streaming_graph(spark, raw_sink, str(tmp_path / "graph")) > 0
+        level = kept.storageLevel
+        assert level.useMemory or level.useDisk
+    finally:
+        kept.unpersist()

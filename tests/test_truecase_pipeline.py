@@ -31,8 +31,12 @@ def _mentions(spark, pages, truecase):
         annotate_pages,
         mentions_from_annotated,
     )
+    from weak_supervision_for_ner_spark.operators.textstats import (
+        collect_form_frequency_dict,
+    )
 
-    annotated = annotate_pages(pages, truecase=truecase)
+    freqs = collect_form_frequency_dict(pages) if truecase else None
+    annotated = annotate_pages(pages, form_freqs=freqs)
     return mentions_from_annotated(annotated).filter(f"url = '{HEADLINE_URL}'").collect()
 
 

@@ -68,30 +68,16 @@ def annotate_batch(
     return out
 
 
-def select_text(
-    pages: DataFrame,
-    lang: str = "en",
-    truecase: bool = False,
-    form_freqs: dict | None = None,
-):
-    """pages → (their ``url``/``text`` rows in ``lang``, the casing
-    dictionary as a Spark broadcast or None). The lang filter is pushed
-    into the scan.
-
-    With ``truecase=True`` the casing dictionary is derived from those
-    rows (one groupBy + bounded driver collect,
-    textstats.collect_form_frequency_dict); pass ``form_freqs`` to reuse
-    a precomputed dictionary. Short/ALL-CAPS docs then get case repair
-    before labelling (spacy_wrapper.py:186-221)."""
-    selected = pages.filter(F.col("lang") == lang).select("url", "text")
-    if not truecase and form_freqs is None:
-        return selected, None
+def select_text(pages: DataFrame, form_freqs: dict | None = None):
+    """pages → (their English ``url``/``text`` rows, the casing
+    dictionary ``form_freqs`` as a Spark broadcast or None). The lang
+    filter is pushed into the scan. Under a dictionary, short/ALL-CAPS
+    docs get case repair before labelling (spacy_wrapper.py:186-221);
+    ``run_kg_pipeline`` derives it once per corpus
+    (textstats.collect_form_frequency_dict)."""
+    selected = pages.filter(F.col("lang") == "en").select("url", "text")
     if form_freqs is None:
-        from weak_supervision_for_ner_spark.operators.textstats import (
-            collect_form_frequency_dict,
-        )
-
-        form_freqs = collect_form_frequency_dict(selected)
+        return selected, None
     return selected, selected.sparkSession.sparkContext.broadcast(form_freqs)
 
 
@@ -120,19 +106,13 @@ def annotate_stage(rows: DataFrame, freqs_bc=None) -> DataFrame:
     return rows.mapInPandas(run, schema=T.StructType([*ANNOTATED_SCHEMA.fields, *extra]))
 
 
-def annotate_pages(
-    pages: DataFrame,
-    lang: str = "en",
-    truecase: bool = False,
-    form_freqs: dict | None = None,
-) -> DataFrame:
+def annotate_pages(pages: DataFrame, form_freqs: dict | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → annotated(url, tokens, spans).
 
     :func:`annotate_stage` over :func:`select_text`'s rows, truecased
-    under its broadcast dictionary when ``truecase`` or ``form_freqs``
-    asks.
+    under ``form_freqs`` when given.
     """
-    return annotate_stage(*select_text(pages, lang, truecase, form_freqs))
+    return annotate_stage(*select_text(pages, form_freqs))
 
 
 def mentions_from_annotated(annotated: DataFrame) -> DataFrame:

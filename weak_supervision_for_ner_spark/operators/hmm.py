@@ -518,6 +518,11 @@ class HMMAggregator:
                 try:
                     self.load(latest[1])
                     start_iter = latest[0] + 1
+                    if len(self.history) >= 2 and self._converged(
+                        self.history[-2], self.history[-1], latest[0]
+                    ):
+                        # the checkpointed fit had already stopped
+                        start_iter = self.n_iter
                 except ValueError as exc:
                     # registry-shape mismatch (load() validates): a
                     # checkpoint from an older SOURCE_NAMES/LABELS

@@ -299,7 +299,6 @@ def _triples_stage(frame: DataFrame, label, correct: bool, freqs_bc=None) -> Dat
 
 
 def extract_triples_direct(frame: DataFrame, nb_sources_threshold: int = 4,
-                           lang: str = "en", truecase: bool = False,
                            form_freqs: dict | None = None,
                            correct: bool = False) -> DataFrame:
     """Majority-vote triples in ONE Arrow stage, from pages or from
@@ -307,18 +306,17 @@ def extract_triples_direct(frame: DataFrame, nb_sources_threshold: int = 4,
 
     Pages (a ``text`` column): annotate → specialise → majority-vote →
     [entity-correct] → SVO per doc, so on the graph-only path the span
-    table never crosses the Arrow boundary. ``truecase`` derives the
-    corpus casing dictionary and broadcasts it, exactly like
-    ``annotate_pages``; pass ``form_freqs`` to reuse a precomputed one.
+    table never crosses the Arrow boundary. ``form_freqs`` is the corpus
+    casing dictionary, broadcast exactly like ``annotate_pages``.
 
     Annotated rows (``tokens``, ``spans``): re-vote the spans per doc,
     for callers that materialize the annotated table anyway, so the
-    labelling functions run once; ``lang``, ``truecase`` and
-    ``form_freqs`` do not apply. ``correct`` applies the 15-rule entity
-    repair per doc before the SVO rule — row-local either way."""
+    labelling functions run once; ``form_freqs`` does not apply.
+    ``correct`` applies the 15-rule entity repair per doc before the SVO
+    rule — row-local either way."""
     freqs_bc = None
     if "text" in frame.columns:
-        frame, freqs_bc = select_text(frame, lang, truecase, form_freqs)
+        frame, freqs_bc = select_text(frame, form_freqs)
     return _triples_stage(frame, majority_labeller(nb_sources_threshold), correct, freqs_bc)
 
 
@@ -474,11 +472,15 @@ def canonicalize_triples(
       edges per bucket, and components exact to full convergence — a
       component too deep for the round cap raises, it is never split.
 
+    ``linked`` is read twice (LSH pass, final rewrite), so the first job
+    stores it as a lazy local checkpoint, which leaves nothing in the
+    session's cache: the ContextCleaner frees it with the returned frame.
+
     With ``stats`` provided, LSH mega-bucket drops are counted there
     (and surfaced through the pipeline's lineage log) so truncation is
     never silent; ``unconverged_labels`` is 0 on both paths, which are
     exact."""
-    linked = linked.persist()  # read by the LSH pass and the final rewrite
+    linked = linked.localCheckpoint(eager=False)
     # Single-pass extraction of unlinked surface forms (explode, not a
     # self-union that would double-compute the uncached upstream).
     unlinked = (

@@ -17,8 +17,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from weak_supervision_for_ner_spark.operators.aggregate import majority_voter_mentions
-from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
+from weak_supervision_for_ner_spark.operators.annotate import annotate_pages, select_text
 from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
+from weak_supervision_for_ner_spark.operators.textstats import collect_form_frequency_dict
 from weak_supervision_for_ner_spark.operators.triples import (
     canonicalize_triples,
     extract_triples,
@@ -128,27 +129,23 @@ def run_kg_pipeline(
     pages: DataFrame,
     aggregator: str = "majority",
     hmm_iters: int = 3,
-    checkpoint_dir: str | None = None,
     lineage_path: str | None = None,
     with_metrics: bool = False,
     mentions_consumed: bool = False,
     truecase: bool = True,
     entity_correction: bool = True,
-    form_freqs: dict | None = None,
     stage_dir: str | None = None,
 ):
     """pages -> (annotated, mentions, graph) DataFrames.
 
     aggregator: 'majority' (stateless, zero extra passes) or 'hmm'
-    (EM driver loop; params checkpointed per iteration).
+    (EM driver loop).
 
     ``truecase`` (default ON, mirroring the reference pipe which
     truecases every ≤25-token doc during parsing,
     spacy_wrapper.py:186-221): derive the corpus casing dictionary ONCE
     (one groupBy + bounded driver collect) and broadcast it to every
-    annotation stage; pass ``form_freqs`` to reuse a precomputed
-    dictionary (at 100 TB derive it once per corpus snapshot, not per
-    run). ``entity_correction`` (default ON, mirroring
+    annotation stage. ``entity_correction`` (default ON, mirroring
     spacy_wrapper.py:268-402 which repairs entities after every model
     annotation): apply the 15-rule boundary/type repair to the
     aggregated layer before triple extraction — per-doc pure function,
@@ -171,18 +168,22 @@ def run_kg_pipeline(
     - otherwise an HMM run decodes inside the stage over the annotated
       rows (Viterbi labeller under the broadcast model), no join.
 
-    ``stage_dir``: durable MID-PIPELINE resume (north_rule). Each major
-    stage output (annotated, mentions) is written to
-    ``{stage_dir}/{stage}`` as parquet on first completion; a re-run
-    finds the committed stage (parquet _SUCCESS marker) and READS it
-    instead of recomputing — so a job that died during canonicalization
-    restarts without re-running the labelling or aggregation stages at
-    all (the HMM additionally resumes EM mid-training from
-    ``checkpoint_dir``). Triple extraction reads the committed stages:
-    majority runs re-vote the committed annotated rows; HMM runs join
-    the committed mentions back (a resumed run has no model to decode
-    with). Stage files are the job's own durable checkpoints; clean
-    them up after the final sink commits.
+    The returned ``annotated`` and ``mentions`` are persisted (or read
+    from committed stages) and the caller unpersists them; nothing else
+    stays cached (canonicalization's input is a lazy local checkpoint,
+    freed with ``graph``).
+
+    ``stage_dir``: the only durable state, for MID-PIPELINE resume
+    (north_rule). The annotated and mentions stages are committed as
+    ``{stage_dir}/{stage}`` parquet (the _SUCCESS marker), the casing
+    dictionary as ``form_freqs.json`` and the HMM's per-iteration EM
+    checkpoints under ``hmm/``, all under one fingerprint of the run's
+    config and input. A re-run READS what is committed: a job that died
+    during canonicalization skips labelling and aggregation, an HMM fit
+    resumes at its next EM iteration, and a finished fit reloads with no
+    Spark job. Triple extraction then re-votes the committed annotated
+    rows (majority) or joins the committed mentions back (HMM). Clean
+    the stage_dir up after the final sink commits.
     """
     if with_metrics and not lineage_path:
         # the counters go only to the lineage file: without one, the
@@ -218,22 +219,16 @@ def run_kg_pipeline(
             with open(fp_path, "w") as fd:
                 json.dump(fingerprint, fd)
 
-    if truecase and form_freqs is None:
-        from weak_supervision_for_ner_spark.operators.textstats import (
-            collect_form_frequency_dict,
-        )
-
+    form_freqs = None
+    if truecase:
         ff_path = os.path.join(stage_dir, "form_freqs.json") if stage_dir else None
         if ff_path and os.path.exists(ff_path):
             with open(ff_path) as fd:
                 form_freqs = json.load(fd)
             lineage.stage("truecase_dict_resumed", n_forms=len(form_freqs))
         else:
-            form_freqs = collect_form_frequency_dict(
-                pages.filter(F.col("lang") == "en").select("url", "text")
-            )
+            form_freqs = collect_form_frequency_dict(select_text(pages)[0])
             if ff_path:
-                os.makedirs(stage_dir, exist_ok=True)
                 with open(ff_path, "w") as fd:
                     json.dump(form_freqs, fd)
             lineage.stage("truecase_dict", n_forms=len(form_freqs))
@@ -243,40 +238,33 @@ def run_kg_pipeline(
     # durably (stage parquet) when resumability is requested, else in
     # executor storage.
     annotated = annotate_pages(pages, form_freqs=form_freqs)
-    mentions_resumed = False
     if stage_dir:
         annotated = _stage_materialize(spark, stage_dir, "annotated", annotated, lineage)
-        mentions_resumed = os.path.exists(
-            os.path.join(stage_dir, "mentions", "_SUCCESS")
-        )
     else:
         annotated = annotated.persist()
 
-    model = None
-    if aggregator == "hmm" and not mentions_resumed:
+    if aggregator == "hmm":
         model = HMMAggregator(n_iter=hmm_iters)
-        model.fit_spark(spark, annotated, checkpoint_dir=checkpoint_dir, resume=True)
+        model.fit_spark(
+            spark, annotated,
+            checkpoint_dir=os.path.join(stage_dir, "hmm") if stage_dir else None,
+            resume=True,
+        )
         mentions = model.decode_spark(spark, annotated)
         lineage.stage("hmm_fit", annotated, iterations=len(model.history),
                       logprob=model.history[-1] if model.history else None)
-    elif aggregator == "hmm":
-        mentions = None  # read below from the committed stage
     else:
         mentions = majority_voter_mentions(annotated)
     if stage_dir:
-        if mentions is None:  # hmm path resuming a committed stage
-            mentions = spark.read.parquet(os.path.join(stage_dir, "mentions"))
-            lineage.stage("stage_resume_mentions")
-        else:
-            mentions = _stage_materialize(spark, stage_dir, "mentions", mentions, lineage)
+        mentions = _stage_materialize(spark, stage_dir, "mentions", mentions, lineage)
     else:
         mentions = mentions.persist()
     lineage.stage("aggregate", mentions)
 
     # choose the extraction stage's input frame and labeller
     if aggregator == "hmm" and (stage_dir or mentions_consumed):
-        # the decoded mentions are materialized anyway (or the model is
-        # gone on a resume): join them back, Viterbi runs once
+        # the decoded mentions are materialized anyway: join them back,
+        # Viterbi runs once
         raw_triples = extract_triples(annotated, mentions, correct=entity_correction)
     elif aggregator == "hmm":
         raw_triples = extract_triples_hmm_fused(annotated, model, correct=entity_correction)

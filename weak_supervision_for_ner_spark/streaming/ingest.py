@@ -84,7 +84,6 @@ def finalize_streaming_graph(
     if lineage_path:
         with open(lineage_path, "w") as fd:
             _json.dump({"stage": "streaming_compaction", "edges": n, **stats}, fd)
-    spark.catalog.clearCache()
     return n
 
 
