@@ -15,7 +15,8 @@ spark.python.daemon.module=...`` names another; other masters keep
 Spark's own daemon.
 
 Resumable: with --stage-dir, a re-run with the same flags and input
-reuses the committed stages, casing dictionary and HMM EM checkpoints.
+reuses the committed annotated stage, casing dictionary and HMM EM
+checkpoints; the mentions are decoded again from the annotated stage.
 """
 
 from __future__ import annotations
@@ -32,10 +33,10 @@ def main() -> None:
     ap.add_argument("--aggregator", default="majority", choices=["majority", "hmm"])
     ap.add_argument("--hmm-iters", type=int, default=10)
     ap.add_argument("--stage-dir", default=None,
-                    help="durable mid-pipeline resume: committed stage "
-                         "outputs (annotated/mentions parquet, casing "
-                         "dictionary, HMM checkpoints) are reused by a "
-                         "re-run instead of recomputed")
+                    help="durable mid-pipeline resume: the annotated "
+                         "stage parquet, casing dictionary and HMM "
+                         "checkpoints are reused by a re-run instead of "
+                         "recomputed")
     ap.add_argument("--lineage", default=None)
     ap.add_argument("--mentions-out", default=None)
     ap.add_argument("--mentions-json", default=None,

@@ -431,3 +431,26 @@ def test_resumed_converged_fit_runs_no_iteration(spark, annotated60, tmp_path, j
     assert jobs == []
     assert resumed.history == model.history
     np.testing.assert_array_equal(resumed.emission_probs, model.emission_probs)
+
+
+def test_fit_resumes_from_its_init_checkpoint(spark, annotated60, tmp_path, jobs_launched):
+    """A fit killed after the prior pass, before its first EM iteration,
+    resumes from ``iter_init``: it runs no prior pass again, only the
+    one E-step job, and ends with the uninterrupted fit's parameters."""
+    import glob
+    import os
+
+    ckpt = str(tmp_path / "ckpt")
+    model = HMMAggregator(n_iter=1)
+    model.fit_spark(spark, annotated60, checkpoint_dir=ckpt)
+    for path in glob.glob(os.path.join(ckpt, "iter_000*")):
+        os.remove(path)
+
+    resumed = HMMAggregator(n_iter=1)
+    jobs = jobs_launched("hmm-resume-init", lambda: resumed.fit_spark(
+        spark, annotated60, checkpoint_dir=ckpt, resume=True))
+    assert len(jobs) == 1, jobs
+    assert resumed.history == model.history
+    np.testing.assert_array_equal(resumed.startprob_, model.startprob_)
+    np.testing.assert_array_equal(resumed.transmat_, model.transmat_)
+    np.testing.assert_array_equal(resumed.emission_probs, model.emission_probs)

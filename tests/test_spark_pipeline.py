@@ -169,29 +169,33 @@ def test_hmm_tree_level_matches_flat_collect(spark, monkeypatch):
 
 
 def test_pipeline_fused_reuse_matches_direct(spark, tmp_path):
-    """mentions_consumed=True routes triple extraction through the
-    persisted annotated cache (labelling once end-to-end) and must
-    produce the identical graph; lineage records LSH-drop and
+    """mentions_consumed=True, once per aggregator (a majority run
+    re-votes the persisted annotated rows, so labelling runs once
+    end-to-end; an HMM run takes the same path as without it), gives the
+    identical graph and mentions; lineage records LSH-drop and
     CC-convergence counters so truncation is never silent."""
     import json
 
-    pages = synth_pages(spark, 80, partitions=3).persist()
-    _, _, g_direct = run_kg_pipeline(spark, pages, aggregator="majority")
-    lineage_path = str(tmp_path / "lineage.json")
-    _, _, g_fused = run_kg_pipeline(
-        spark, pages, aggregator="majority",
-        mentions_consumed=True, lineage_path=lineage_path,
-    )
-    cols = g_direct.columns
-    direct = sorted(map(tuple, g_direct.select(*cols).collect()))
-    fused = sorted(map(tuple, g_fused.select(*cols).collect()))
-    assert direct == fused
+    def rows(frame):
+        return sorted(map(tuple, frame.select(*sorted(frame.columns)).collect()))
 
-    with open(lineage_path) as fd:
-        records = {r["stage"]: r for r in json.load(fd)}
-    graph_rec = records["graph"]
-    assert "dropped_buckets" in graph_rec and "unconverged_labels" in graph_rec
-    assert graph_rec["unconverged_labels"] == 0
+    pages = synth_pages(spark, 80, partitions=3).persist()
+    for aggregator in ("majority", "hmm"):
+        _, m_direct, g_direct = run_kg_pipeline(spark, pages, aggregator=aggregator)
+        lineage_path = str(tmp_path / f"lineage_{aggregator}.json")
+        _, m_fused, g_fused = run_kg_pipeline(
+            spark, pages, aggregator=aggregator,
+            mentions_consumed=True, lineage_path=lineage_path,
+        )
+        direct = rows(g_direct)
+        assert direct and rows(g_fused) == direct, aggregator
+        assert rows(m_fused) == rows(m_direct), aggregator
+
+        with open(lineage_path) as fd:
+            records = {r["stage"]: r for r in json.load(fd)}
+        graph_rec = records["graph"]
+        assert "dropped_buckets" in graph_rec and "unconverged_labels" in graph_rec
+        assert graph_rec["unconverged_labels"] == 0
 
 
 def test_cli_job_writes_graph_and_json_mentions(spark, tmp_path, monkeypatch):
@@ -217,27 +221,29 @@ def test_cli_job_writes_graph_and_json_mentions(spark, tmp_path, monkeypatch):
     assert {"url", "source", "start", "end", "label", "conf"} <= set(json_rows.columns)
 
 
-def test_hmm_fused_triples_match_join_path(spark):
+def test_hmm_fused_triples_match_decoded_mentions(spark):
     """extract_triples_hmm_fused (decode + SVO in one Arrow stage, no
-    mentions join) must produce the identical triple set as decoding to
-    a mentions table and joining it back."""
+    mentions join) must produce the triples that the driver-side
+    doc_triples gives over each document's decode_spark mentions."""
     from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
-    from weak_supervision_for_ner_spark.operators.triples import (
-        extract_triples,
-        extract_triples_hmm_fused,
-    )
+    from weak_supervision_for_ner_spark.operators.triples import extract_triples_hmm_fused
 
     pages = synth_pages(spark, 80, partitions=3)
     annotated = annotate_pages(pages).persist()
     model = HMMAggregator(n_iter=2)
     model.fit_spark(spark, annotated)
 
-    joined = extract_triples(annotated, model.decode_spark(spark, annotated))
+    by_url: dict[str, list] = {}
+    for r in model.decode_spark(spark, annotated).collect():
+        by_url.setdefault(r["url"], []).append((r["start"], r["end"], r["label"], r["conf"]))
+    want = sorted(
+        t
+        for r in annotated.select("url", "tokens").collect()
+        for t in doc_triples(r["url"], r["tokens"], sorted(by_url.get(r["url"], [])))
+    )
     fused = extract_triples_hmm_fused(annotated, model)
-    cols = sorted(fused.columns)
-    a = sorted(map(tuple, joined.select(*cols).collect()))
-    b = sorted(map(tuple, fused.select(*cols).collect()))
-    assert a == b and a
+    got = sorted(map(tuple, fused.collect()))
+    assert got == want and got
     # and the fused plan really has no join
     assert "Join" not in fused._jdf.queryExecution().executedPlan().toString()
     annotated.unpersist()
@@ -451,19 +457,30 @@ def test_salted_mentions_write_balances_hot_domain(spark, tmp_path):
     assert max(counts) <= 3 * (sum(counts) / len(counts))
 
 
+# What a stage_dir holds after a run: only what is costly to recompute
+_STAGE_DIR_FILES = {
+    "majority": ["annotated", "form_freqs.json", "pipeline_config.json"],
+    "hmm": ["annotated", "form_freqs.json", "hmm", "pipeline_config.json"],
+}
+
+
 def test_stage_dir_resumes_mid_pipeline(spark, tmp_path):
     """Durable mid-pipeline resume (north_rule): with stage_dir set,
     committed annotated/mentions stages are REUSED by a re-run — proven
     by swapping the input for a garbage corpus and still getting the
     byte-identical graph — and the stage-durable run's graph equals the
-    plain in-memory run's."""
+    plain in-memory run's, mentions included."""
     import json
+    import os
+
+    def rows(frame):
+        return sorted(map(tuple, frame.select(*sorted(frame.columns)).collect()))
 
     pages = synth_pages(spark, 80, partitions=3).persist()
     stage = str(tmp_path / "stages")
     lineage1 = str(tmp_path / "l1.json")
-    _, _, g_plain = run_kg_pipeline(spark, pages, aggregator="majority")
-    _, _, g_staged = run_kg_pipeline(
+    _, m_plain, g_plain = run_kg_pipeline(spark, pages, aggregator="majority")
+    _, m_staged, g_staged = run_kg_pipeline(
         spark, pages, aggregator="majority",
         stage_dir=stage, lineage_path=lineage1,
     )
@@ -471,10 +488,11 @@ def test_stage_dir_resumes_mid_pipeline(spark, tmp_path):
     plain = sorted(map(tuple, g_plain.select(*cols).collect()))
     staged = sorted(map(tuple, g_staged.select(*cols).collect()))
     assert staged == plain and staged
+    assert rows(m_staged) == rows(m_plain)
     with open(lineage1) as fd:
         stages1 = [r["stage"] for r in json.load(fd)]
     assert "stage_commit_annotated" in stages1
-    assert "stage_commit_mentions" in stages1
+    assert sorted(os.listdir(stage)) == _STAGE_DIR_FILES["majority"]
 
     # re-run over the same input: committed stages are READ, not
     # recomputed (lineage proves it), and the graph is byte-identical
@@ -488,7 +506,6 @@ def test_stage_dir_resumes_mid_pipeline(spark, tmp_path):
     with open(lineage2) as fd:
         stages2 = [r["stage"] for r in json.load(fd)]
     assert "stage_resume_annotated" in stages2
-    assert "stage_resume_mentions" in stages2
     assert "truecase_dict_resumed" in stages2
 
     # a DIFFERENT corpus against the same stage_dir must be rejected —
@@ -530,7 +547,8 @@ def test_stale_registry_checkpoint_triggers_retrain(spark, tmp_path):
 
     # corrupt the latest checkpoint into an "old registry" shape
     # (iter_0*: lexicographic iter_*.npz would pick iter_init.npz,
-    # which resume never reads — corrupting it tests nothing)
+    # which resume reads only when no iteration was saved — corrupting
+    # it tests nothing)
     import glob
     latest = sorted(glob.glob(ckpt + "/iter_0*.npz"))[-1]
     data = dict(np.load(latest))
@@ -564,6 +582,7 @@ def test_cli_stage_dir_flag(spark, tmp_path, monkeypatch):
     """--stage-dir through the spark-submit entry point: first run
     commits stages, second run resumes them (lineage proves it)."""
     import json
+    import os
     import sys
 
     from jobs.run_pipeline import main
@@ -584,7 +603,8 @@ def test_cli_stage_dir_flag(spark, tmp_path, monkeypatch):
     first = run(1)
     second = run(2)
     assert "stage_commit_annotated" in first
-    assert "stage_resume_annotated" in second and "stage_resume_mentions" in second
+    assert "stage_resume_annotated" in second
+    assert sorted(os.listdir(stage)) == _STAGE_DIR_FILES["majority"]
     a = spark.read.parquet(str(tmp_path / "cli_graph1")).count()
     b = spark.read.parquet(str(tmp_path / "cli_graph2")).count()
     assert a == b > 0
@@ -608,13 +628,12 @@ def test_stage_dir_rejects_same_size_different_corpus(spark, tmp_path):
 
 
 def test_stage_dir_resumes_hmm_from_its_checkpoints(spark, tmp_path):
-    """The HMM's EM checkpoints live in the stage_dir: with the mentions
-    stage deleted, a re-run reloads the finished fit (no checkpoint is
-    rewritten), decodes and commits the same mentions, and builds the
-    same graph as the first run and as a run without a stage_dir."""
+    """The HMM's EM checkpoints live in the stage_dir: a re-run reloads
+    the finished fit (no checkpoint is rewritten), decodes the same
+    mentions, and builds the same graph as the first run and as a run
+    without a stage_dir."""
     import json
     import os
-    import shutil
 
     pages = synth_pages(spark, 40, partitions=2).persist()
     stage = str(tmp_path / "hmm_stages")
@@ -628,8 +647,8 @@ def test_stage_dir_resumes_hmm_from_its_checkpoints(spark, tmp_path):
     hmm_dir = os.path.join(stage, "hmm")
     written = {f: os.stat(os.path.join(hmm_dir, f)).st_mtime_ns for f in os.listdir(hmm_dir)}
     assert any(f.endswith(".npz") for f in written)
+    assert sorted(os.listdir(stage)) == _STAGE_DIR_FILES["hmm"]
 
-    shutil.rmtree(os.path.join(stage, "mentions"))
     lineage = str(tmp_path / "hmm_resume.json")
     _, m_resumed, g_resumed = run_kg_pipeline(
         spark, pages, aggregator="hmm", stage_dir=stage, lineage_path=lineage)
@@ -638,7 +657,8 @@ def test_stage_dir_resumes_hmm_from_its_checkpoints(spark, tmp_path):
             for f in os.listdir(hmm_dir)} == written
     with open(lineage) as fd:
         stages = [r["stage"] for r in json.load(fd)]
-    assert "stage_resume_annotated" in stages and "stage_commit_mentions" in stages
+    assert "stage_resume_annotated" in stages
+    assert sorted(os.listdir(stage)) == _STAGE_DIR_FILES["hmm"]
 
     annotated, m_plain, g_plain = run_kg_pipeline(spark, pages, aggregator="hmm")
     assert (rows(m_plain), rows(g_plain)) == first
@@ -673,3 +693,49 @@ def test_pipeline_leaves_no_cache_behind(spark, tmp_path, jobs_launched):
         jobs = jobs_launched(f"no-cache-{aggregator}", job)
         assert cache.numCachedEntries() == before, aggregator
         assert 0 < len(jobs) <= max_jobs, (aggregator, jobs)
+
+
+# Spark jobs of one stage_dir call on the corpus below when the decoded
+# mentions were committed to the stage_dir too (and, for the HMM, joined
+# back for triple extraction): 15 and 21 on a local[4] session
+_JOBS_WITH_COMMITTED_MENTIONS = {"majority": 15, "hmm": 21}
+
+
+def test_stage_dir_run_commits_no_mentions(spark, tmp_path, jobs_launched):
+    """run_kg_pipeline(stage_dir=…) → write_graph, once per aggregator:
+    the stage_dir gets only what is costly to recompute, and the call
+    launches fewer Spark jobs than when it also committed the mentions."""
+    import os
+
+    from weak_supervision_for_ner_spark.operators.triples import write_graph
+
+    pages = synth_pages(spark, 40, partitions=2)
+    for aggregator, parent_jobs in _JOBS_WITH_COMMITTED_MENTIONS.items():
+        stage = str(tmp_path / f"stages_{aggregator}")
+
+        def job():
+            annotated, mentions, graph = run_kg_pipeline(
+                spark, pages, aggregator=aggregator, stage_dir=stage)
+            write_graph(graph, str(tmp_path / f"graph_{aggregator}"))
+            annotated.unpersist()
+            mentions.unpersist()
+
+        jobs = jobs_launched(f"stage-dir-{aggregator}", job)
+        assert 0 < len(jobs) < parent_jobs, (aggregator, jobs)
+        assert sorted(os.listdir(stage)) == _STAGE_DIR_FILES[aggregator]
+
+
+def test_unknown_aggregator_is_rejected(spark, tmp_path, jobs_launched):
+    """A misspelt aggregator raises before any Spark job and before the
+    stage_dir fingerprint is written; it never runs the majority vote."""
+    import os
+
+    pages = synth_pages(spark, 4, partitions=1)
+    stage = str(tmp_path / "stages_typo")
+
+    def job():
+        with pytest.raises(ValueError, match="'majority' or 'hmm'"):
+            run_kg_pipeline(spark, pages, aggregator="HMM", stage_dir=stage)
+
+    assert jobs_launched("unknown-aggregator", job) == []
+    assert not os.path.exists(os.path.join(stage, "pipeline_config.json"))

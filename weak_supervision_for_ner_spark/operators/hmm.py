@@ -724,12 +724,16 @@ def _quarantine_checkpoints(checkpoint_dir: str) -> None:
 
 
 def _latest_checkpoint(checkpoint_dir: str):
+    """(iteration, path) of the newest checkpoint, or None. ``iter_init``
+    (the initialised model, saved after the prior pass) counts as
+    iteration -1, so a fit resumed from it skips the prior pass."""
     if not os.path.isdir(checkpoint_dir):
         return None
     best = None
     for name in os.listdir(checkpoint_dir):
-        if name.startswith("iter_") and name.endswith(".npz") and "init" not in name:
-            it = int(name[5:8])
+        if name.startswith("iter_") and name.endswith(".npz"):
+            stem = name[5:-4]
+            it = -1 if stem == "init" else int(stem)
             if best is None or it > best[0]:
                 best = (it, os.path.join(checkpoint_dir, name))
     return best

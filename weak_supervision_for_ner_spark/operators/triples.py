@@ -6,9 +6,10 @@ Triple extraction is one per-document kernel — :func:`doc_mentions`
 (spans → labeller → BILUO decode; the labeller is the sparse majority
 vote or a trained model's Viterbi) then :func:`doc_triples` ([entity
 correction →] the SVO-window rule) — run by one Arrow stage,
-``_triples_stage``, over one of three input forms: pages (annotated in
-the stage), annotated rows (labelled in the stage), or annotated rows
-joined to already-aggregated mentions (used as they are). The public
+``_triples_stage``, over one of two input forms: pages (annotated in
+the stage) or annotated rows (labelled in the stage). Either way the
+stage labels the rows it reads and never receives precomputed
+mentions, so extraction has no shuffle and no join. The public
 builders only pick the form and the labeller; the stream and the
 single-node oracle call the same kernel. The aggregated mention tables
 (majority vote, HMM and label-model decodes) share the other Arrow
@@ -254,15 +255,6 @@ def _mentions_stage(annotated: DataFrame, mentions_of, source_name: str) -> Data
     return annotated.select("url", "tokens", "spans").mapInPandas(run, schema=MENTIONS_SCHEMA)
 
 
-def _committed_mentions(ms) -> list[tuple[int, int, str, float]]:
-    """Collected mention structs (dicts or tuples after Arrow) as tuples."""
-    return [
-        (int(m["start"]), int(m["end"]), m["label"], float(m["conf"]))
-        if isinstance(m, dict) else (int(m[0]), int(m[1]), m[2], float(m[3]))
-        for m in ms
-    ]
-
-
 def _triples_stage(frame: DataFrame, label, correct: bool, freqs_bc=None) -> DataFrame:
     """The triple-extraction stage: one narrow Arrow stage running
     :func:`doc_mentions` and :func:`doc_triples` per document. The input
@@ -271,28 +263,21 @@ def _triples_stage(frame: DataFrame, label, correct: bool, freqs_bc=None) -> Dat
     - ``text`` (pages, already lang-filtered): annotate in the stage
       under the broadcast casing dictionary ``freqs_bc``, then label —
       the span structs never cross the Arrow boundary;
-    - ``ms`` (annotated rows joined to committed mentions): use those
-      mentions, no labeller;
     - ``spans`` (annotated rows): label the spans."""
-    if "text" in frame.columns:
-        form, frame = "text", frame.select("url", "text")
-    elif "ms" in frame.columns:
-        form, frame = "ms", frame.select("url", "tokens", "ms")
-    else:
-        form, frame = "spans", frame.select("url", "tokens", "spans")
+    from_text = "text" in frame.columns
+    frame = (frame.select("url", "text") if from_text
+             else frame.select("url", "tokens", "spans"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         freqs = freqs_bc.value if freqs_bc is not None else None
         for pdf in batches:
-            if form == "text":
+            if from_text:
                 docs = annotate_batch(pdf["text"], form_freqs=freqs)
             else:
-                docs = zip(pdf["tokens"], pdf[form])
+                docs = zip(pdf["tokens"], pdf["spans"])
             rows = []
-            for url, (tokens, obs) in zip(pdf["url"], docs):
-                ments = (_committed_mentions(obs) if form == "ms"
-                         else doc_mentions(tokens, obs, label))
-                rows.extend(doc_triples(url, tokens, ments, correct))
+            for url, (tokens, spans) in zip(pdf["url"], docs):
+                rows.extend(doc_triples(url, tokens, doc_mentions(tokens, spans, label), correct))
             yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
 
     return frame.mapInPandas(run, schema=TRIPLES_SCHEMA)
@@ -324,24 +309,10 @@ def extract_triples_hmm_fused(annotated: DataFrame, model,
                               correct: bool = False) -> DataFrame:
     """HMM triples in ONE Arrow stage over the annotated table: Viterbi
     under the trained model (its parameters travel as one broadcast) →
-    [entity-correct] → SVO per doc. No mentions shuffle and no join
-    back; the same triples as ``extract_triples(annotated,
-    model.decode_spark(...))`` — asserted by the parity test."""
+    [entity-correct] → SVO per doc. No mentions shuffle and no join;
+    per document, the same triples as :func:`doc_triples` over the
+    model's ``decode_spark`` mentions — asserted by the parity test."""
     return _triples_stage(annotated, model.labeller(annotated.sparkSession), correct)
-
-
-def extract_triples(annotated: DataFrame, mentions: DataFrame,
-                    correct: bool = False) -> DataFrame:
-    """Triples from an aggregated mentions table: collect the mentions
-    per url, join them back onto the tokens (equi-join on url) and run
-    [entity-correct →] the SVO rule per doc. For mentions that are
-    materialized anyway (a committed stage, an export), so the model's
-    decode runs once."""
-    grouped = mentions.groupBy("url").agg(
-        F.collect_list(F.struct("start", "end", "label", "conf")).alias("ms")
-    )
-    joined = annotated.select("url", "tokens").join(grouped, "url")
-    return _triples_stage(joined, None, correct)
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,6 @@ from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
 from weak_supervision_for_ner_spark.operators.textstats import collect_form_frequency_dict
 from weak_supervision_for_ner_spark.operators.triples import (
     canonicalize_triples,
-    extract_triples,
     extract_triples_direct,
     extract_triples_hmm_fused,
     link_entities,
@@ -31,17 +30,15 @@ from weak_supervision_for_ner_spark.operators.triples import (
 
 
 class Lineage:
-    """Per-stage counters + timings, persisted as JSON next to the
-    output (north_rule: per-partition lineage + metrics). Row counts
-    come from Spark actions; partition counts from the plan."""
+    """The pipeline's stage log, rewritten as a JSON list at ``path``
+    after every record. A record holds the stage name, a timestamp and
+    the keyword counters its caller passes."""
 
     def __init__(self, path: str | None = None):
         self.path = path
         self.records: list[dict] = []
 
-    def stage(self, name: str, df: DataFrame | None = None, **extra) -> None:
-        # NOTE: never call df.rdd here — under AQE, materializing the
-        # RDD executes the whole query just to read its partitioning.
+    def stage(self, name: str, **extra) -> None:
         rec = {"stage": name, "ts": time.time(), **extra}
         self.records.append(rec)
         if self.path:
@@ -139,7 +136,8 @@ def run_kg_pipeline(
     """pages -> (annotated, mentions, graph) DataFrames.
 
     aggregator: 'majority' (stateless, zero extra passes) or 'hmm'
-    (EM driver loop).
+    (EM driver loop); any other value raises ``ValueError`` before any
+    Spark job.
 
     ``truecase`` (default ON, mirroring the reference pipe which
     truecases every ≤25-token doc during parsing,
@@ -152,39 +150,40 @@ def run_kg_pipeline(
     fused into the extraction stage, so neither default adds a shuffle.
 
     Triple extraction is one stage running one per-document kernel
-    (operators.triples: labeller → BILUO → [correct] → SVO); the flags
-    below only choose its input frame and labeller:
+    (operators.triples: labeller → BILUO → [correct] → SVO). It labels
+    the rows it reads and never receives precomputed mentions, so it
+    has no shuffle and no join. Two cases:
 
-    - graph-only majority run: pages, annotated inside the stage (the
-      span table never crosses Arrow), majority labeller;
-    - ``mentions_consumed`` (the caller also materializes the mentions/
-      annotated tables, e.g. --mentions-out): majority runs re-vote the
-      PERSISTED annotated rows, so the 35-function labelling stage
-      executes exactly once in total; HMM runs join the decoded
-      mentions back, so Viterbi runs once. ``with_metrics`` (per-
-      partition annotation counters, written to ``lineage_path``, which
-      it requires) also materializes the annotated table, so majority
-      runs re-vote it;
-    - otherwise an HMM run decodes inside the stage over the annotated
-      rows (Viterbi labeller under the broadcast model), no join.
+    - majority: a graph-only run reads pages and annotates inside the
+      stage (the span table never crosses Arrow). With a materialized
+      annotated table — ``stage_dir``, ``with_metrics`` (per-partition
+      annotation counters, written to ``lineage_path``, which it
+      requires) or ``mentions_consumed`` (the caller also reads the
+      returned frames, e.g. --mentions-out) — it re-votes those rows
+      instead, so the labelling functions run once in total.
+      ``mentions_consumed`` matters only here;
+    - hmm: Viterbi under the broadcast model over the annotated rows,
+      whatever the flags.
 
-    The returned ``annotated`` and ``mentions`` are persisted (or read
-    from committed stages) and the caller unpersists them; nothing else
-    stays cached (canonicalization's input is a lazy local checkpoint,
-    freed with ``graph``).
+    The returned ``annotated`` is persisted (or read from its committed
+    stage); ``mentions`` is the lazily persisted decode of it, computed
+    only if the caller reads it. The caller unpersists both; nothing
+    else stays cached (canonicalization's input is a lazy local
+    checkpoint, freed with ``graph``).
 
     ``stage_dir``: the only durable state, for MID-PIPELINE resume
-    (north_rule). The annotated and mentions stages are committed as
-    ``{stage_dir}/{stage}`` parquet (the _SUCCESS marker), the casing
-    dictionary as ``form_freqs.json`` and the HMM's per-iteration EM
-    checkpoints under ``hmm/``, all under one fingerprint of the run's
-    config and input. A re-run READS what is committed: a job that died
-    during canonicalization skips labelling and aggregation, an HMM fit
-    resumes at its next EM iteration, and a finished fit reloads with no
-    Spark job. Triple extraction then re-votes the committed annotated
-    rows (majority) or joins the committed mentions back (HMM). Clean
-    the stage_dir up after the final sink commits.
+    (north_rule). It holds only what is costly to recompute: the
+    annotated stage as ``{stage_dir}/annotated`` parquet (the _SUCCESS
+    marker), the casing dictionary as ``form_freqs.json``, the HMM's
+    per-iteration EM checkpoints under ``hmm/`` and the
+    ``pipeline_config.json`` fingerprint of the run's config and input
+    that guards them. A re-run READS what is committed: a job that died
+    during canonicalization skips labelling, an HMM fit resumes at its
+    next EM iteration, and a finished fit reloads with no Spark job.
+    Clean the stage_dir up after the final sink commits.
     """
+    if aggregator not in ("majority", "hmm"):
+        raise ValueError(f"aggregator must be 'majority' or 'hmm', not {aggregator!r}")
     if with_metrics and not lineage_path:
         # the counters go only to the lineage file: without one, the
         # metrics job's result would be thrown away
@@ -250,25 +249,12 @@ def run_kg_pipeline(
             checkpoint_dir=os.path.join(stage_dir, "hmm") if stage_dir else None,
             resume=True,
         )
-        mentions = model.decode_spark(spark, annotated)
-        lineage.stage("hmm_fit", annotated, iterations=len(model.history),
+        lineage.stage("hmm_fit", iterations=len(model.history),
                       logprob=model.history[-1] if model.history else None)
-    else:
-        mentions = majority_voter_mentions(annotated)
-    if stage_dir:
-        mentions = _stage_materialize(spark, stage_dir, "mentions", mentions, lineage)
-    else:
-        mentions = mentions.persist()
-    lineage.stage("aggregate", mentions)
-
-    # choose the extraction stage's input frame and labeller
-    if aggregator == "hmm" and (stage_dir or mentions_consumed):
-        # the decoded mentions are materialized anyway: join them back,
-        # Viterbi runs once
-        raw_triples = extract_triples(annotated, mentions, correct=entity_correction)
-    elif aggregator == "hmm":
+        mentions = model.decode_spark(spark, annotated)
         raw_triples = extract_triples_hmm_fused(annotated, model, correct=entity_correction)
     else:
+        mentions = majority_voter_mentions(annotated)
         # re-vote the materialized annotated table when there is one,
         # else annotate in the stage from pages
         reuse = stage_dir or mentions_consumed or with_metrics
@@ -276,6 +262,7 @@ def run_kg_pipeline(
             annotated if reuse else pages, form_freqs=form_freqs,
             correct=entity_correction,
         )
+    mentions = mentions.persist()
     if with_metrics:
         for row in stage_metrics(annotated).collect():
             lineage.stage("annotate_partition", **row.asDict())
@@ -285,7 +272,7 @@ def run_kg_pipeline(
         spark, linked, stats=canon_stats if lineage_path else None
     )
     graph = materialize_graph(canonical)
-    lineage.stage("graph", graph, **canon_stats)
+    lineage.stage("graph", **canon_stats)
     return annotated, mentions, graph
 
 
