@@ -862,16 +862,15 @@ def q_pages_eval_mv(spark, sf_dir):
 
 
 def q_pages_corrected(spark, sf_dir):
-    """Standalone entity-correction pass (spacy_wrapper.py:268-402)
-    over the aggregated majority mentions: cross-layer boundary/type
-    repair (currency extension, magnitude absorption, Q1 removal,
-    legal-suffix->ORG, MONEY-priority overlap merge)."""
+    """Entity correction (spacy_wrapper.py:268-402) of the aggregated
+    majority mentions: cross-layer boundary/type repair (currency
+    extension, magnitude absorption, Q1 removal, legal-suffix->ORG,
+    MONEY-priority overlap merge), run per document in the stage that
+    votes it — the graph path's correction."""
     from weak_supervision_for_ner_spark.operators.aggregate import majority_voter_mentions
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
-    from weak_supervision_for_ner_spark.operators.entity_correction import correct_mentions
 
-    annotated = annotate_pages(_pages(spark, sf_dir)).persist()
-    return correct_mentions(majority_voter_mentions(annotated), annotated)
+    return majority_voter_mentions(annotate_pages(_pages(spark, sf_dir)), correct=True)
 
 
 def q_pages_eval_corrected(spark, sf_dir):
@@ -881,13 +880,11 @@ def q_pages_eval_corrected(spark, sf_dir):
     0.897 uncorrected at sf0.01."""
     from weak_supervision_for_ner_spark.operators.aggregate import majority_voter_mentions
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
-    from weak_supervision_for_ner_spark.operators.entity_correction import correct_mentions
     from weak_supervision_for_ner_spark.operators.evaluate import evaluate_mentions
     from weak_supervision_for_ner_spark.schema import CONLL_MAPPINGS, CONLL_TO_RETAIN
     from weak_supervision_for_ner_spark.sources.pages import synth_gold
 
-    annotated = annotate_pages(_pages(spark, sf_dir)).persist()
-    pred = correct_mentions(majority_voter_mentions(annotated), annotated)
+    pred = majority_voter_mentions(annotate_pages(_pages(spark, sf_dir)), correct=True)
     gold = synth_gold(spark, _n_docs(sf_dir))
     return evaluate_mentions(gold, pred, mappings=CONLL_MAPPINGS, keep=CONLL_TO_RETAIN)
 
@@ -895,22 +892,22 @@ def q_pages_eval_corrected(spark, sf_dir):
 def q_distill_dataset(spark, sf_dir):
     """NER-distillation dataset prep (reference ner.py:327-392): the
     corpus-derived vocabulary + per-doc (token_ids, BILUO tags) example
-    table from the aggregated layer — everything upstream of the
-    neural trainer, which is the part a Spark engine owns. The array
-    columns are projected to strings (comma-joined ids, space-joined
-    tags) so the driver's pandas canonicalizer can sort/hash them (the
-    r3 ERROR); exact tag/vocab semantics also pinned by
-    tests/test_distill.py."""
-    from weak_supervision_for_ner_spark.operators.aggregate import majority_voter_mentions
+    table from the aggregated majority layer, decoded per document in
+    the examples stage — everything upstream of the neural trainer,
+    which is the part a Spark engine owns. The array columns are
+    projected to strings (comma-joined ids, space-joined tags) so the
+    driver's pandas canonicalizer can sort/hash them (the r3 ERROR);
+    exact tag/vocab semantics also pinned by tests/test_distill.py."""
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
     from weak_supervision_for_ner_spark.operators.distill import (
         build_vocabulary,
         distillation_examples,
     )
+    from weak_supervision_for_ner_spark.operators.triples import majority_labeller
 
     annotated = annotate_pages(_pages(spark, sf_dir)).persist()
     vocab = build_vocabulary(annotated)
-    ex = distillation_examples(annotated, majority_voter_mentions(annotated), vocab)
+    ex = distillation_examples(annotated, majority_labeller(), vocab)
     return ex.select(
         "url",
         F.concat_ws(",", F.col("token_ids").cast("array<string>")).alias("token_ids"),

@@ -41,6 +41,39 @@ def normalize(rows, columns):
     return out
 
 
+def check(spark, con, sf_dir, fn, oracle):
+    """Run one query on ``spark`` and compare its rows with ``oracle``
+    (DuckDB SQL on ``con``, or None): (status, n_rows, detail) with
+    status "ok", "rows-only" or "fail"; detail says why it failed."""
+    try:
+        df = fn(spark, sf_dir)
+        cols = df.columns
+        rows = [tuple(r) for r in df.collect()]
+    except Exception as exc:  # noqa: BLE001
+        return "fail", 0, f"spark error {type(exc).__name__}: {exc}"
+    if oracle is None:
+        return "rows-only", len(rows), None
+    try:
+        res = con.sql(oracle)
+        o_cols = res.columns
+        o_rows = res.fetchall()
+    except Exception as exc:  # noqa: BLE001
+        return "fail", len(rows), f"duckdb error {exc}"
+    if sorted(cols) != sorted(o_cols):
+        return "fail", len(rows), f"columns {sorted(cols)} != {sorted(o_cols)}"
+    a = normalize(rows, cols)
+    b = normalize(o_rows, o_cols)
+    if len(a) != len(b):
+        return "fail", len(a), f"{len(a)} spark rows vs {len(b)} oracle rows"
+    if a != b:
+        diff = [i for i, (x, y) in enumerate(zip(a, b)) if x != y][:3]
+        detail = f"value mismatch at sorted rows {diff}"
+        for i in diff[:2]:
+            detail += f"\n      spark : {a[i]}\n      oracle: {b[i]}"
+        return "fail", len(a), detail
+    return "ok", len(a), None
+
+
 def main():
     argv = list(sys.argv[1:])
     json_out = None
@@ -70,61 +103,22 @@ def main():
     failures = []
     results = {}
 
-    def record(name, status, n_rows, t0, detail=None):
-        results[name] = {"status": status, "rows": n_rows,
-                         "sec": round(time.time() - t0, 2)}
-        if detail:
-            results[name]["detail"] = detail
-
     for name, fn in queries.items():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
-        except Exception as exc:  # noqa: BLE001
+        status, n_rows, detail = check(spark, con, sf_dir, fn, oracles.get(name))
+        sec = time.time() - t0
+        results[name] = {"status": status, "rows": n_rows, "sec": round(sec, 2)}
+        if detail:
+            results[name]["detail"] = detail
+        if status == "fail":
             failures.append(name)
-            record(name, "fail", 0, t0, f"spark {type(exc).__name__}: {exc}")
-            print(f"FAIL  {name}: spark error {type(exc).__name__}: {exc}")
-            continue
-        if name not in oracles:
-            record(name, "rows-only", len(rows), t0)
-            print(f"rows  {name}: {len(rows)} rows ({time.time()-t0:.1f}s) [no oracle]")
-            continue
-        try:
-            res = con.sql(oracles[name])
-            o_cols = res.columns
-            o_rows = res.fetchall()
-        except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            record(name, "fail", len(rows), t0, f"duckdb {exc}")
-            print(f"FAIL  {name}: duckdb error {exc}")
-            continue
-        if sorted(cols) != sorted(o_cols):
-            failures.append(name)
-            record(name, "fail", len(rows), t0,
-                   f"columns {sorted(cols)} != {sorted(o_cols)}")
-            print(f"FAIL  {name}: columns {sorted(cols)} != {sorted(o_cols)}")
-            continue
-        a = normalize(rows, cols)
-        b = normalize(o_rows, o_cols)
-        if len(a) != len(b):
-            print(f"FAIL  {name}: {len(a)} spark rows vs {len(b)} oracle rows")
-            record(name, "fail", len(a), t0, f"{len(a)} vs {len(b)} oracle rows")
-            failures.append(name)
-        elif a != b:
-            diff = [i for i, (x, y) in enumerate(zip(a, b)) if x != y][:3]
-            print(f"FAIL  {name}: value mismatch at sorted rows {diff}")
-            for i in diff[:2]:
-                print(f"      spark : {a[i]}")
-                print(f"      oracle: {b[i]}")
-            record(name, "fail", len(a), t0, f"value mismatch at {diff}")
-            failures.append(name)
+            print(f"FAIL  {name}: {detail}")
+        elif status == "rows-only":
+            print(f"rows  {name}: {n_rows} rows ({sec:.1f}s) [no oracle]")
         else:
-            record(name, "ok", len(a), t0)
-            print(f"ok    {name}: {len(a)} rows match ({time.time()-t0:.1f}s)")
+            print(f"ok    {name}: {n_rows} rows match ({sec:.1f}s)")
     n_run = len([q for q in queries if not only or q in only])
     print("\n%d/%d failed" % (len(failures), n_run))
     if json_out:

@@ -32,7 +32,7 @@ from weak_supervision_for_ner_spark.plans.oracle import (  # noqa: E402
 )
 from weak_supervision_for_ner_spark.sources.pages import make_page  # noqa: E402
 
-N_DOCS = 1200  # _n_docs("/root/testdata/sf0.01")
+N_DOCS = 1200  # __spark_entry__._n_docs of an sf0.01 directory
 SEED = 42
 OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "fixtures")
@@ -173,30 +173,19 @@ def main() -> None:
                    os.path.join(OUT_DIR, "oracle_majority_sf0.01.parquet"))
     print(f"majority: {len(mv_rows)} rows")
 
-    # entity-corrected majority mentions — the same single-node mirror
-    # of operators.entity_correction.correct_mentions (per-doc pure
-    # repair + max-absorbed-conf policy + lexicographically-smallest
-    # source naming)
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_entity_spans,
+    # entity-corrected majority mentions: the per-document kernel the
+    # graph's triple stage and majority_voter_mentions(correct=True) run
+    from weak_supervision_for_ner_spark.operators.triples import (
+        doc_mentions,
+        majority_labeller,
     )
 
-    by_url: dict[str, list[tuple]] = {}
-    for url, source, start, end, label, conf, _text in mv_rows:
-        by_url.setdefault(url, []).append((start, end, label, conf, source))
-    tok_by_url = {d["url"]: d["tokens"] for d in annotated}
-    corr_rows = []
-    for url, ments in by_url.items():
-        tokens = tok_by_url[url]
-        ents = sorted((int(s), int(e), str(lab)) for (s, e, lab, _c, _src) in ments)
-        source = min(src for (_s, _e, _l, _c, src) in ments)
-        max_conf = max(c for (_s, _e, _l, c, _src) in ments)
-        for s, e, lab in correct_entity_spans(list(tokens), ents):
-            e = min(e, len(tokens))
-            overlapping = [c for (ms, me, _ml, c, _src) in ments if ms < e and s < me]
-            conf = max(overlapping) if overlapping else max_conf
-            corr_rows.append((url, source, s, e, lab, conf,
-                              " ".join(tokens[s:e])))
+    label = majority_labeller()
+    corr_rows = [
+        (d["url"], "majority_voter", s, e, lab, conf, " ".join(d["tokens"][s:e]))
+        for d in annotated
+        for (s, e, lab, conf) in doc_mentions(d["tokens"], d["spans"], label, correct=True)
+    ]
     pq.write_table(_mention_table(corr_rows),
                    os.path.join(OUT_DIR, "oracle_corrected_sf0.01.parquet"))
     print(f"corrected: {len(corr_rows)} rows")

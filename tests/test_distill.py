@@ -7,19 +7,22 @@ import pytest
 
 @pytest.fixture(scope="module")
 def tiny(spark):
+    """Two annotated rows and a labeller under which u1's layer is
+    COMPANY over tokens 0-1 and PERSON over token 3 (one source per
+    span, voted at a threshold of one source)."""
+    from weak_supervision_for_ner_spark.operators.triples import majority_labeller
+
     annotated = spark.createDataFrame(
         [
-            ("u1", ["Acme", "Corp", "hired", "Mary", "."], []),
+            ("u1", ["Acme", "Corp", "hired", "Mary", "."],
+             [("crunchbase_cased", 0, 2, "COMPANY", 0.9),
+              ("full_name_detector", 3, 4, "PERSON", 0.8)]),
             ("u2", ["nothing", "here", "."], []),
         ],
         "url string, tokens array<string>, "
         "spans array<struct<source:string,start:int,end:int,label:string,conf:double>>",
     )
-    mentions = spark.createDataFrame(
-        [("u1", "hmm", 0, 2, "COMPANY", 0.9), ("u1", "hmm", 3, 4, "PERSON", 0.8)],
-        "url string, source string, start int, end int, label string, conf double",
-    )
-    return annotated, mentions
+    return annotated, majority_labeller(nb_sources_threshold=1)
 
 
 def test_vocabulary_conventions(spark, tiny):
@@ -47,12 +50,12 @@ def test_examples_biluo_and_oov(spark, tiny):
         distillation_examples,
     )
 
-    annotated, mentions = tiny
+    annotated, label = tiny
     vocab = build_vocabulary(annotated, min_count=1)
     # delete one form to prove the OOV path
     vocab = {k: v for k, v in vocab.items() if k != "hired"}
     rows = {r["url"]: r for r in
-            distillation_examples(annotated, mentions, vocab).collect()}
+            distillation_examples(annotated, label, vocab).collect()}
     assert rows["u1"]["tags"] == ["B-COMPANY", "L-COMPANY", "O", "U-PERSON", "O"]
     assert rows["u1"]["token_ids"][2] == OOV_INDEX
     assert all(i >= 2 for i in rows["u1"]["token_ids"][:2])
@@ -61,9 +64,9 @@ def test_examples_biluo_and_oov(spark, tiny):
 
 
 def test_distillation_end_to_end_from_hmm(spark, tmp_path):
-    """annotate -> HMM fit/decode -> distillation dataset: every token
-    gets an id, tags form valid BILUO runs, and the sharded sink
-    round-trips."""
+    """annotate -> HMM fit -> distillation dataset under the model's
+    Viterbi: every token gets an id, tags form valid BILUO runs, and the
+    sharded sink round-trips."""
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
     from weak_supervision_for_ner_spark.operators.distill import (
         build_vocabulary,
@@ -76,10 +79,9 @@ def test_distillation_end_to_end_from_hmm(spark, tmp_path):
     annotated = annotate_pages(synth_pages(spark, 60, partitions=3)).persist()
     model = HMMAggregator(n_iter=2)
     model.fit_spark(spark, annotated)
-    mentions = model.decode_spark(spark, annotated)
 
     vocab = build_vocabulary(annotated, min_count=1)
-    examples = distillation_examples(annotated, mentions, vocab)
+    examples = distillation_examples(annotated, model.labeller(spark), vocab)
     out = str(tmp_path / "distill")
     write_distillation_dataset(examples, out, shards=4)
     back = spark.read.parquet(out).collect()

@@ -80,33 +80,36 @@ def test_overlap_merge_money_wins():
 
 
 def test_spark_correct_mentions_matches_pure_function(spark):
+    """majority_voter_mentions(correct=True) repairs each document's
+    vote in the stage that votes it: the rows equal the pure repair of
+    that vote, and a document with no vote still gets the MONEY span
+    the undetected-currency scan finds (the graph path's correction)."""
+    from weak_supervision_for_ner_spark.operators.aggregate import majority_voter_mentions
     from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_mentions,
         correct_spans_with_conf,
     )
 
     tokens = "it cost 3,400 USD in Q1".split()
     annotated = spark.createDataFrame(
-        [("u1", tokens, [])],
+        [("u1", tokens, [("number_detector", 2, 3, "CARDINAL", 0.9),
+                         ("date_detector", 5, 6, "DATE", 0.8)]),
+         ("u2", ["paid", "$", "149", "."], [])],
         "url string, tokens array<string>, spans array<struct<source:string,start:int,end:int,label:string,conf:double>>",
     )
-    mentions = spark.createDataFrame(
-        [("u1", "majority_voter", 2, 3, "CARDINAL", 0.9, "3,400"),
-         ("u1", "majority_voter", 5, 6, "DATE", 0.8, "Q1")],
-        "url string, source string, start int, end int, label string, conf double, text string",
-    )
     got = sorted(
-        (r["start"], r["end"], r["label"], r["conf"])
-        for r in correct_mentions(mentions, annotated).collect()
+        (r["url"], r["start"], r["end"], r["label"], r["conf"])
+        for r in majority_voter_mentions(
+            annotated, nb_sources_threshold=1, correct=True).collect()
     )
-    want = sorted(correct_spans_with_conf(
-        tokens, [(2, 3, "CARDINAL", 0.9), (5, 6, "DATE", 0.8)]
-    ))
+    # one source per span: each token's vote has confidence 1
+    vote = [(2, 3, "CARDINAL", 1.0), (5, 6, "DATE", 1.0)]
+    want = sorted([("u1", *m) for m in correct_spans_with_conf(tokens, vote)]
+                  + [("u2", 1, 3, "MONEY", 1.0)])
     assert got == want
-    assert [g[:3] for g in got] == sorted(correct_entity_spans(
+    assert [g[1:4] for g in got if g[0] == "u1"] == sorted(correct_entity_spans(
         tokens, [(2, 3, "CARDINAL"), (5, 6, "DATE")]
     ))
-    assert got == [(2, 4, "MONEY", 0.9)]
+    assert got == [("u1", 2, 4, "MONEY", 1.0), ("u2", 1, 3, "MONEY", 1.0)]
 
 
 def test_overlap_merge_preserves_money_across_intervening_span():

@@ -399,8 +399,8 @@ def test_spark_triples_equal_oracle_kernel(spark, texts, partitions, batch):
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
     from weak_supervision_for_ner_spark.operators.triples import (
         doc_mentions,
-        doc_triples,
         extract_triples_direct,
+        extract_triples_from_doc,
         extract_triples_hmm_fused,
         majority_labeller,
     )
@@ -417,8 +417,8 @@ def test_spark_triples_equal_oracle_kernel(spark, texts, partitions, batch):
     def oracle(label):
         return sorted(
             t for d in docs
-            for t in doc_triples(d["url"], d["tokens"],
-                                 doc_mentions(d["tokens"], d["spans"], label), True)
+            for t in extract_triples_from_doc(
+                d["url"], d["tokens"], doc_mentions(d["tokens"], d["spans"], label, True))
         )
 
     def collected(df):

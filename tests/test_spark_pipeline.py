@@ -9,7 +9,7 @@ from weak_supervision_for_ner_spark.operators.annotate import (
     annotate_pages,
     mentions_from_annotated,
 )
-from weak_supervision_for_ner_spark.operators.triples import doc_triples
+from weak_supervision_for_ner_spark.operators.triples import extract_triples_from_doc
 from weak_supervision_for_ner_spark.plans.oracle import (
     oracle_annotate,
     oracle_majority_mentions,
@@ -83,7 +83,7 @@ def test_kg_pipeline_triples_pr_vs_oracle(spark, pages_df, oracle_docs):
     want = {
         (t[0], t[2], t[3], t[5])
         for d in oracle_docs
-        for t in doc_triples(d["url"], d["tokens"], by_url.get(d["url"], []))
+        for t in extract_triples_from_doc(d["url"], d["tokens"], by_url.get(d["url"], []))
     }
     assert want, "oracle should produce triples on the synthetic corpus"
     tp = len(got & want)
@@ -224,7 +224,8 @@ def test_cli_job_writes_graph_and_json_mentions(spark, tmp_path, monkeypatch):
 def test_hmm_fused_triples_match_decoded_mentions(spark):
     """extract_triples_hmm_fused (decode + SVO in one Arrow stage, no
     mentions join) must produce the triples that the driver-side
-    doc_triples gives over each document's decode_spark mentions."""
+    extract_triples_from_doc gives over each document's decode_spark
+    mentions."""
     from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
     from weak_supervision_for_ner_spark.operators.triples import extract_triples_hmm_fused
 
@@ -239,7 +240,7 @@ def test_hmm_fused_triples_match_decoded_mentions(spark):
     want = sorted(
         t
         for r in annotated.select("url", "tokens").collect()
-        for t in doc_triples(r["url"], r["tokens"], sorted(by_url.get(r["url"], [])))
+        for t in extract_triples_from_doc(r["url"], r["tokens"], sorted(by_url.get(r["url"], [])))
     )
     fused = extract_triples_hmm_fused(annotated, model)
     got = sorted(map(tuple, fused.collect()))
@@ -300,6 +301,82 @@ def test_decodes_plan_one_mentions_stage(spark, jobs_launched):
         assert "InMemoryTableScan" in above_cache, (name, plan)
         assert above_cache.count("MapInPandas") == 1, (name, plan)
         assert "Join" not in plan, (name, plan)
+    annotated.unpersist()
+
+
+def _biluo_tags(n_tokens: int, mentions) -> list[str]:
+    tags = ["O"] * n_tokens
+    for s, e, lab, _conf in sorted(mentions):
+        for i in range(s, e):
+            pos = "U" if e == s + 1 else "B" if i == s else "L" if i == e - 1 else "I"
+            tags[i] = f"{pos}-{lab}"
+    return tags
+
+
+def test_documents_sharing_a_url_keep_their_own_layers(spark):
+    """Two annotated rows with one url (a re-crawled page) each get the
+    corrected mentions and the distillation tags of their own tokens and
+    spans: the rows equal the per-document kernel over each document,
+    and no document receives the other's mentions."""
+    from weak_supervision_for_ner_spark.operators.distill import distillation_examples
+    from weak_supervision_for_ner_spark.operators.triples import doc_mentions, majority_labeller
+    from weak_supervision_for_ner_spark.schema import ANNOTATED_SCHEMA
+
+    pages = [dict(make_page(i)[0], url="https://dup.example/a") for i in (3, 4)]
+    docs = oracle_annotate(pages)
+    annotated = spark.createDataFrame(
+        [(d["url"], d["tokens"], d["spans"]) for d in docs], ANNOTATED_SCHEMA
+    ).repartition(1)
+    label = majority_labeller()
+
+    got = sorted(
+        (r["url"], r["start"], r["end"], r["label"], r["conf"], r["text"])
+        for r in majority_voter_mentions(annotated, correct=True).collect()
+    )
+    want = sorted(
+        (d["url"], s, e, lab, conf, " ".join(d["tokens"][s:e]))
+        for d in docs
+        for (s, e, lab, conf) in doc_mentions(d["tokens"], d["spans"], label, correct=True)
+    )
+    assert got == want and len({m[1:4] for m in want}) == len(want)
+
+    got_tags = sorted(
+        (r["url"], tuple(r["tags"]))
+        for r in distillation_examples(annotated, label, {}).collect()
+    )
+    want_tags = sorted(
+        (d["url"], tuple(_biluo_tags(len(d["tokens"]),
+                                     doc_mentions(d["tokens"], d["spans"], label))))
+        for d in docs
+    )
+    assert got_tags == want_tags
+    assert got_tags[0][1] != got_tags[1][1]
+
+
+def test_corrected_mentions_and_examples_decode_in_place(spark, jobs_launched):
+    """Over a persisted annotated table, the corrected majority mentions
+    and the distillation examples are one narrow stage each: no Join and
+    no Exchange in the executed plan, one job of one stage to compute
+    the rows, and a count() costs what counting the table itself does
+    (AQE runs count's single-partition aggregate as a job of its own)."""
+    from weak_supervision_for_ner_spark.operators.distill import distillation_examples
+    from weak_supervision_for_ner_spark.operators.triples import majority_labeller
+
+    annotated = annotate_pages(synth_pages(spark, 40, partitions=2)).persist()
+    annotated.count()
+    table_count_jobs = jobs_launched("annotated-count", annotated.count)
+    frames = {
+        "corrected": majority_voter_mentions(annotated, correct=True),
+        "examples": distillation_examples(annotated, majority_labeller(), {}),
+    }
+    sc = spark.sparkContext
+    for name, frame in frames.items():
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "Exchange" not in plan, (name, plan)
+        jobs = jobs_launched(f"{name}-collect", frame.collect)
+        assert len(jobs) == 1, name
+        assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1, name
+        assert len(jobs_launched(f"{name}-count", frame.count)) == len(table_count_jobs), name
     annotated.unpersist()
 
 
@@ -413,6 +490,36 @@ def test_metrics_without_lineage_is_rejected(monkeypatch, capsys, tmp_path):
         main()
     assert exc.value.code == 2
     assert "--lineage" in capsys.readouterr().err
+
+
+def test_metrics_run_counts_every_partition(spark, tmp_path):
+    """run_kg_pipeline(with_metrics=True) writes one annotate_partition
+    record per partition of the annotated table, whose counters sum to
+    the table's totals, and builds the graph a plain run builds."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    pages = synth_pages(spark, 40, partitions=3).persist()
+    lineage = tmp_path / "lineage.json"
+    annotated, mentions, graph = run_kg_pipeline(
+        spark, pages, lineage_path=str(lineage), with_metrics=True
+    )
+    got = sorted(map(tuple, graph.collect()))
+    records = [r for r in json.loads(lineage.read_text()) if r["stage"] == "annotate_partition"]
+    assert sorted(r["partition"] for r in records) == list(
+        range(annotated.rdd.getNumPartitions())
+    )
+    totals = annotated.agg(
+        F.count(F.lit(1)), F.sum(F.size("tokens")), F.sum(F.size("spans"))
+    ).first()
+    for i, key in enumerate(("n_docs", "n_tokens", "n_spans")):
+        assert sum(r[key] for r in records) == totals[i] > 0, key
+
+    plain_annotated, plain_mentions, plain = run_kg_pipeline(spark, pages)
+    assert got == sorted(map(tuple, plain.collect())) and got
+    for frame in (annotated, mentions, plain_annotated, plain_mentions, pages):
+        frame.unpersist()
 
 
 def test_salted_mentions_write_balances_hot_domain(spark, tmp_path):

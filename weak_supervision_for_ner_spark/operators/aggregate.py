@@ -368,6 +368,7 @@ def majority_voter_mentions(
     annotated: DataFrame, nb_sources_threshold: int = 4,
     source_name: str = "majority_voter",
     sources_to_keep: list[str] | None = None,
+    correct: bool = False,
 ) -> DataFrame:
     """Stateless narrow stage: annotated rows -> aggregated mention rows
     (the relational form of MajorityVoter.annotate).
@@ -375,8 +376,10 @@ def majority_voter_mentions(
     ``sources_to_keep`` restricts the vote to a source subset AFTER
     specialisation, matching the reference's UnifiedAnnotator order
     (specialise over all layers, then extract only kept sources,
-    labelling.py:144-175). Runs the shared per-document kernel
-    (operators.triples.doc_mentions) in the shared mentions stage."""
+    labelling.py:144-175). ``correct`` applies the 15-rule entity
+    repair to each document's vote, as the graph's triple stage does.
+    Runs the shared per-document kernel (operators.triples.doc_mentions)
+    in the shared mentions stage."""
     from weak_supervision_for_ner_spark.operators.triples import (
         _mentions_stage,
         doc_mentions,
@@ -385,5 +388,6 @@ def majority_voter_mentions(
 
     label = majority_labeller(nb_sources_threshold, sources_to_keep)
     return _mentions_stage(
-        annotated, lambda tokens, spans: doc_mentions(tokens, spans, label), source_name
+        annotated, lambda tokens, spans: doc_mentions(tokens, spans, label, correct),
+        source_name,
     )

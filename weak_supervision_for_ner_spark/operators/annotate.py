@@ -49,8 +49,9 @@ def annotate_batch(
 
     Per-document error isolation (the reference swallows per-doc
     failures, annotations.py:240-243): a failing doc yields its tokens
-    (or none) with ZERO spans instead of killing the partition; the
-    pipeline's metrics pass surfaces the count."""
+    (or none) with ZERO spans instead of killing the partition;
+    ``run_kg_pipeline(with_metrics=True)`` writes the per-partition
+    count (``n_quarantined``) to its lineage file."""
     gazetteers, first_names = _get_resources()
     out = []
     for text in texts:

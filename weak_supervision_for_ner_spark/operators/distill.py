@@ -11,13 +11,15 @@ everything UP TO the trainer is data-pipeline work this engine owns:
   broadcast (the reference ships a static ``indices`` dict; ours is
   corpus-derived like the truecase dictionary, index 0 = padding,
   1 = OOV — ner.py's ``self.indices.get(norm, 1)`` convention);
-- examples: one narrow Arrow stage joining the aggregated mention
-  layer back onto tokens and emitting, per doc, the vocab-index
-  sequence and the BILUO tag sequence (sparse labels — the aggregated
-  decode is non-overlapping, so one-hot rows collapse to one tag per
-  token; 'O' elsewhere, exactly the reference's O = 1 - sum);
-- sink: salted url-hash repartition so examples land shuffled across
-  shards, which is what a data-parallel trainer wants to read.
+- examples: one narrow Arrow stage over the annotated rows that
+  decodes each document's aggregated layer in place, with the same
+  labeller the triple stage takes (``triples.doc_mentions``), and
+  emits, per doc, the vocab-index sequence and the BILUO tag sequence
+  (sparse labels — the aggregated decode is non-overlapping, so one-hot
+  rows collapse to one tag per token; 'O' elsewhere, exactly the
+  reference's O = 1 - sum);
+- sink: url-hash repartition so examples land shuffled across shards,
+  which is what a data-parallel trainer wants to read.
 """
 
 from __future__ import annotations
@@ -27,6 +29,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from weak_supervision_for_ner_spark.operators.triples import doc_mentions
 
 PAD_INDEX = 0
 OOV_INDEX = 1
@@ -59,36 +63,24 @@ def build_vocabulary(
 
 
 def distillation_examples(
-    annotated: DataFrame, mentions: DataFrame, vocab: dict[str, int]
+    annotated: DataFrame, label, vocab: dict[str, int]
 ) -> DataFrame:
-    """(url, token_ids, tags) training examples from the aggregated
-    layer. One co-partitioned url join + one narrow Arrow stage; spans
-    are applied in ascending start order with later spans overwriting
-    earlier tags at shared tokens (the reference's one-hot writes in
-    ``doc.ents`` order, ner.py:376-391)."""
+    """(url, token_ids, tags) training examples, one per annotated row,
+    from the document's aggregated layer under ``label`` —
+    ``triples.majority_labeller()`` or ``HMMAggregator.labeller(spark)``.
+    One narrow Arrow stage; spans are applied in ascending start order
+    with later spans overwriting earlier tags at shared tokens (the
+    reference's one-hot writes in ``doc.ents`` order, ner.py:376-391)."""
     bc = annotated.sparkSession.sparkContext.broadcast(vocab)
-    grouped = mentions.groupBy("url").agg(
-        F.collect_list(F.struct("start", "end", "label")).alias("ms")
-    )
-    joined = annotated.select("url", "tokens").join(grouped, "url", "left")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
         for pdf in batches:
             rows = []
-            for url, tokens, ms in zip(pdf["url"], pdf["tokens"], pdf["ms"]):
-                tokens = list(tokens)
-                n = len(tokens)
+            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
                 ids = [v.get(t.lower(), OOV_INDEX) for t in tokens]
-                tags = ["O"] * n
-                spans = sorted(
-                    (int(m["start"]), int(m["end"]), str(m["label"]))
-                    for m in (ms if ms is not None else ())
-                )
-                for s, e, lab in spans:
-                    e = min(e, n)
-                    if e <= s:
-                        continue
+                tags = ["O"] * len(tokens)
+                for s, e, lab, _conf in sorted(doc_mentions(tokens, spans, label)):
                     if e == s + 1:
                         tags[s] = f"U-{lab}"
                     else:
@@ -99,14 +91,14 @@ def distillation_examples(
                 rows.append((url, ids, tags))
             yield pd.DataFrame(rows, columns=["url", "token_ids", "tags"])
 
-    return joined.mapInPandas(run, schema=EXAMPLES_SCHEMA)
+    return annotated.select("url", "tokens", "spans").mapInPandas(run, schema=EXAMPLES_SCHEMA)
 
 
 def write_distillation_dataset(
     examples: DataFrame, path: str, shards: int = 32
 ) -> None:
-    """Shuffled shards via salted url-hash repartition — what a
-    data-parallel trainer reads (the reference shuffles in-process)."""
+    """Shuffled shards via a url-hash repartition — what a data-parallel
+    trainer reads (the reference shuffles in-process)."""
     (
         examples
         .repartition(shards, F.xxhash64("url"))

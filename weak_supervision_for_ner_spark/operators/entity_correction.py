@@ -1,4 +1,4 @@
-"""Standalone entity-correction pass (reference spacy_wrapper.py:268-402).
+"""Entity correction (reference spacy_wrapper.py:268-402).
 
 The reference repairs the aggregated entity layer after parsing: 15
 boundary/type rules (currency extension left/right, million/billion
@@ -10,21 +10,21 @@ generators; this module is the missing cross-layer home: it repairs an
 already-aggregated mention list against the token stream, exactly the
 frame the reference applies it to (doc.ents after NER/aggregation).
 
-Pure per-doc function + one narrow Arrow stage; no oracle SQL (the
-merge loop and recursion are procedural), so the gate is the per-rule
-unit tests plus the Spark==pure-function integration test.
+Pure per-document functions, run in the stage that reads the
+document: the aggregated layer is repaired by the per-document kernel,
+``triples.doc_mentions(correct=True)`` (the graph's triple stage,
+corrected majority mentions), and a plugged-in model's spans by its
+annotation stage (``model_annotator``, the ``+c`` layer). No operator
+joins mentions back to documents. No oracle SQL (the merge loop and
+recursion are procedural), so the gate is the per-rule unit tests plus
+the Spark==pure-function integration test.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
 
 from weak_supervision_for_ner_spark.functions import lexicons as lx
-from weak_supervision_for_ner_spark.schema import MENTIONS_SCHEMA
 
 # the reference's magnitude list, verbatim (spacy_wrapper.py:299-300)
 _MAGNITUDES = {
@@ -194,36 +194,3 @@ def correct_spans_with_conf(
         out.append((s, e, lab, max(overlapping) if overlapping else max_conf))
     return out
 
-
-def correct_mentions(mentions: DataFrame, annotated: DataFrame,
-                     source_suffix: str = "") -> DataFrame:
-    """Run the repair pass over an aggregated mention table.
-
-    One shuffle: mentions collect_list'd per url, joined to the
-    annotated table for the token stream, repaired row-locally by
-    :func:`correct_spans_with_conf` in an Arrow stage, re-exploded, so a
-    repaired span carries the max conf of the input spans it absorbs."""
-    grouped = mentions.groupBy("url").agg(
-        F.collect_list(F.struct("start", "end", "label", "conf", "source")).alias("ments")
-    )
-    joined = annotated.select("url", "tokens").join(grouped, "url")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, tokens, ments in zip(pdf["url"], pdf["tokens"], pdf["ments"]):
-                tokens = list(tokens)
-                # deterministic regardless of collect_list order: the
-                # lexicographically smallest input source names the pass
-                source = min(str(m["source"]) for m in ments) + source_suffix
-                repaired = correct_spans_with_conf(
-                    tokens,
-                    [(m["start"], m["end"], m["label"], m["conf"]) for m in ments],
-                )
-                rows.extend(
-                    (url, source, s, e, lab, conf, " ".join(tokens[s:e]))
-                    for (s, e, lab, conf) in repaired
-                )
-            yield pd.DataFrame(rows, columns=MENTIONS_SCHEMA.fieldNames())
-
-    return joined.mapInPandas(run, schema=MENTIONS_SCHEMA)

@@ -119,13 +119,12 @@ class HMMAggregator:
     _params_version = 0
 
     def __init__(self, source_name: str = "HMM", n_iter: int = 10,
-                 tol: float = 1e-2, seed: int = 42, informative_priors: bool = True,
+                 tol: float = 1e-2, seed: int = 42,
                  sources_to_keep: list[str] | None = None):
         self.source_name = source_name
         self.n_iter = n_iter
         self.tol = tol
         self.seed = seed
-        self.informative_priors = informative_priors
         # sources_to_keep (UnifiedAnnotator, labelling.py:93-100): train
         # and decode on a source subset. Excluded sources are pinned to
         # deterministic O-emitters and their observation columns masked
@@ -224,7 +223,7 @@ class HMMAggregator:
         prior_rec = np.zeros((N_SOURCES, N_STATES))
         for si, source in enumerate(SOURCE_NAMES):
             for pi, pos_label in enumerate(POSITIONED_LABELS):
-                if pi == 0 or not self.informative_priors:
+                if pi == 0:
                     prior_rec[si, pi] = OUT_RECALL
                     prior_prec[si, pi] = OUT_PRECISION
                 elif pos_label[2:] in SOURCE_PRIORS[source]:
@@ -251,9 +250,8 @@ class HMMAggregator:
                 * (1 - prior_prec[si][None, :])
                 * (0.001 + obs_probs[si][None, :])
             )
-            if self.informative_priors:
-                error = np.where(same_label & nontrivial, error * 5, error)
-                error = np.where(same_pos & nontrivial, error * 2, error)
+            error = np.where(same_label & nontrivial, error * 5, error)
+            error = np.where(same_pos & nontrivial, error * 2, error)
             error[eye] = 0.0
             err_sum = error.sum(axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):

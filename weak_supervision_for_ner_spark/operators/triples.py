@@ -3,18 +3,20 @@ minhash-LSH canonicalization, graph materialize (north_rule — new
 capability layered on the reference's aggregated mentions).
 
 Triple extraction is one per-document kernel — :func:`doc_mentions`
-(spans → labeller → BILUO decode; the labeller is the sparse majority
-vote or a trained model's Viterbi) then :func:`doc_triples` ([entity
-correction →] the SVO-window rule) — run by one Arrow stage,
-``_triples_stage``, over one of two input forms: pages (annotated in
-the stage) or annotated rows (labelled in the stage). Either way the
-stage labels the rows it reads and never receives precomputed
-mentions, so extraction has no shuffle and no join. The public
-builders only pick the form and the labeller; the stream and the
-single-node oracle call the same kernel. The aggregated mention tables
-(majority vote, HMM and label-model decodes) share the other Arrow
-stage, ``_mentions_stage``: annotated rows → one aggregator's
-per-document mentions → ``MENTIONS_SCHEMA`` rows.
+(spans → labeller → BILUO decode [→ entity correction]; the labeller is
+the sparse majority vote or a trained model's Viterbi) then
+:func:`extract_triples_from_doc` (the SVO-window rule) — run by one
+Arrow stage, ``_triples_stage``, over one of two input forms: pages
+(annotated in the stage) or annotated rows (labelled in the stage).
+Either way the stage labels the rows it reads and never receives
+precomputed mentions, so extraction has no shuffle and no join. The
+public builders only pick the form and the labeller; the stream and
+the single-node oracle call the same kernel. The aggregated mention
+tables (majority vote, HMM and label-model decodes) share the other
+Arrow stage, ``_mentions_stage``: annotated rows → one aggregator's
+per-document mentions → ``MENTIONS_SCHEMA`` rows. The distillation
+examples (``operators.distill``) decode the same kernel in place too:
+no operator groups mentions by url or joins them back to documents.
 
 After extraction:
       raw triples (surface forms)
@@ -214,26 +216,24 @@ def majority_labeller(nb_sources_threshold: int = 4,
     return label
 
 
-def doc_mentions(tokens, spans, label) -> list[tuple[int, int, str, float]]:
+def doc_mentions(tokens, spans, label,
+                 correct: bool = False) -> list[tuple[int, int, str, float]]:
     """One document's aggregated (start, end, label, conf) mentions: the
     labeller — :func:`majority_labeller` or a model's Viterbi
     (``HMMAggregator.labeller``) — gives a per-token state path, BILUO
-    decoding turns it into spans. A token-less document has none."""
+    decoding turns it into spans. ``correct`` then applies the 15-rule
+    entity repair (spacy_wrapper.py:268-402) against the document's
+    tokens, which can add a span to a document with none (an undetected
+    currency amount). A token-less document has none."""
     if len(tokens) == 0:
         return []
     states, confs = label(spans, len(tokens))
-    return [
+    mentions = [
         (s, e, lab, conf) for (s, e), (lab, conf) in decode_biluo(states, confs).items()
     ]
-
-
-def doc_triples(url: str, tokens, mentions: list, correct: bool = False) -> list[tuple]:
-    """One document's raw triples: [the 15-rule entity repair,
-    spacy_wrapper.py:268-402 →] the SVO-window rule."""
-    tokens = list(tokens)
     if correct:
-        mentions = correct_spans_with_conf(tokens, mentions)
-    return extract_triples_from_doc(url, tokens, mentions)
+        mentions = correct_spans_with_conf(list(tokens), mentions)
+    return mentions
 
 
 def _mentions_stage(annotated: DataFrame, mentions_of, source_name: str) -> DataFrame:
@@ -257,8 +257,8 @@ def _mentions_stage(annotated: DataFrame, mentions_of, source_name: str) -> Data
 
 def _triples_stage(frame: DataFrame, label, correct: bool, freqs_bc=None) -> DataFrame:
     """The triple-extraction stage: one narrow Arrow stage running
-    :func:`doc_mentions` and :func:`doc_triples` per document. The input
-    form comes from the frame's columns:
+    :func:`doc_mentions` and :func:`extract_triples_from_doc` per
+    document. The input form comes from the frame's columns:
 
     - ``text`` (pages, already lang-filtered): annotate in the stage
       under the broadcast casing dictionary ``freqs_bc``, then label —
@@ -277,7 +277,8 @@ def _triples_stage(frame: DataFrame, label, correct: bool, freqs_bc=None) -> Dat
                 docs = zip(pdf["tokens"], pdf["spans"])
             rows = []
             for url, (tokens, spans) in zip(pdf["url"], docs):
-                rows.extend(doc_triples(url, tokens, doc_mentions(tokens, spans, label), correct))
+                rows.extend(extract_triples_from_doc(
+                    url, list(tokens), doc_mentions(tokens, spans, label, correct)))
             yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
 
     return frame.mapInPandas(run, schema=TRIPLES_SCHEMA)
@@ -310,8 +311,9 @@ def extract_triples_hmm_fused(annotated: DataFrame, model,
     """HMM triples in ONE Arrow stage over the annotated table: Viterbi
     under the trained model (its parameters travel as one broadcast) →
     [entity-correct] → SVO per doc. No mentions shuffle and no join;
-    per document, the same triples as :func:`doc_triples` over the
-    model's ``decode_spark`` mentions — asserted by the parity test."""
+    per document, the same triples as :func:`extract_triples_from_doc`
+    over :func:`doc_mentions` under the model's labeller — asserted by
+    the parity test."""
     return _triples_stage(annotated, model.labeller(annotated.sparkSession), correct)
 
 

@@ -2,8 +2,9 @@
 
 Implements the identical semantics as the Spark pipeline by calling
 the SAME per-document core (operators.labelling, and the kernel the
-Spark extraction stage runs: triples.doc_mentions / doc_triples) in a
-plain Python loop — no Spark. ``oracle_majority_mentions`` alone keeps
+Spark extraction stage runs: triples.doc_mentions, with its entity
+correction, then triples.extract_triples_from_doc) in a plain Python
+loop — no Spark. ``oracle_majority_mentions`` alone keeps
 the dense ``majority_vote``: it is the independent reference for the
 sparse vote. The HMM fit and decode read the same sparse observation
 encoding as the Spark passes. Golden parity tests assert the distributed output equals
@@ -32,7 +33,7 @@ from weak_supervision_for_ner_spark.operators.labelling import (
 from weak_supervision_for_ner_spark.operators.triples import (
     _local_components,
     doc_mentions,
-    doc_triples,
+    extract_triples_from_doc,
     majority_labeller,
 )
 from weak_supervision_for_ner_spark.sources.gazetteer import (
@@ -196,8 +197,8 @@ def oracle_graph(
     raw = [
         t
         for doc in oracle_annotate(pages, form_freqs=form_freqs)
-        for t in doc_triples(
-            doc["url"], doc["tokens"], doc_mentions(doc["tokens"], doc["spans"], label), correct
+        for t in extract_triples_from_doc(
+            doc["url"], doc["tokens"], doc_mentions(doc["tokens"], doc["spans"], label, correct)
         )
     ]
     return oracle_finalize_graph(raw, n_hashes, bands, max_bucket)
