@@ -71,6 +71,18 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return synth_pages(spark, _n_docs(sf_dir))
 
 
+def _majority_graph(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """``run_kg_pipeline``'s majority graph. The graph is built from
+    pages, so the annotated and mentions frames the pipeline persists
+    go unread and are released at once."""
+    from weak_supervision_for_ner_spark.plans.pipeline import run_kg_pipeline
+
+    annotated, mentions, graph = run_kg_pipeline(spark, pages, aggregator="majority")
+    annotated.unpersist()
+    mentions.unpersist()
+    return graph
+
+
 _DEC = "decimal(18,2)"
 
 
@@ -655,8 +667,8 @@ def q_media_stats(spark, sf_dir):
 
 def q_eval_metrics(spark, sf_dir):
     """The evaluation harness (analysis.py:40-161) over two span
-    tables derived deterministically from lineitem: joins + anti-joins
-    + per-label metrics."""
+    tables derived deterministically from lineitem: one full outer join
+    per granularity + per-label metrics."""
     from weak_supervision_for_ner_spark.operators.evaluate import evaluate_mentions
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
@@ -799,7 +811,8 @@ def q_pages_hmm(spark, sf_dir):
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
     from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
 
-    annotated = annotate_pages(_pages(spark, sf_dir)).persist()
+    # read twice; a lazy local checkpoint is freed with the returned frame
+    annotated = annotate_pages(_pages(spark, sf_dir)).localCheckpoint(eager=False)
     model = HMMAggregator(n_iter=2)
     model.fit_spark(spark, annotated)
     return model.decode_spark(spark, annotated)
@@ -810,17 +823,14 @@ def q_pages_triples(spark, sf_dir):
     fixtures/oracle_triples_sf0.01.parquet — the single-node oracle's
     re-run of the ENTIRE pipeline including LSH canonicalization
     (plans/oracle.py:oracle_graph)."""
-    from weak_supervision_for_ner_spark.plans.pipeline import run_kg_pipeline
-
-    _, _, graph = run_kg_pipeline(spark, _pages(spark, sf_dir), aggregator="majority")
-    return graph
+    return _majority_graph(spark, _pages(spark, sf_dir))
 
 
 def q_pages_kg_quality(spark, sf_dir):
     """End-to-end KG quality: triple precision/recall vs the
     generator's seeded gold relations (north_rule gate: >=0.95)."""
     from weak_supervision_for_ner_spark.functions.lexicons import LEGAL_SUFFIXES
-    from weak_supervision_for_ner_spark.plans.pipeline import run_kg_pipeline
+    from weak_supervision_for_ner_spark.operators.evaluate import _counts
     from weak_supervision_for_ner_spark.sources.pages import synth_gold_triples
 
     suffix_re = r"(?i)\s+(" + "|".join(sorted(LEGAL_SUFFIXES)) + r")\.?$"
@@ -830,15 +840,16 @@ def q_pages_kg_quality(spark, sf_dir):
             F.regexp_replace(F.lower(col), suffix_re, ""), suffix_re, ""
         )
 
-    n = _n_docs(sf_dir)
-    _, _, graph = run_kg_pipeline(spark, _pages(spark, sf_dir))
-    got = graph.select(norm("subj").alias("subj"), "pred",
-                       norm("obj").alias("obj"), "url").distinct().persist()
-    gold = synth_gold_triples(spark, n).select(
-        norm("subj").alias("subj"), "pred", norm("obj").alias("obj"), "url"
-    ).distinct().persist()
-    tp = got.join(gold, ["url", "subj", "pred", "obj"]).count()
-    n_got, n_gold = got.count(), gold.count()
+    def triples(df):  # the predicate is the label _counts counts by
+        return df.select(norm("subj").alias("subj"), F.col("pred").alias("label"),
+                         norm("obj").alias("obj"), "url")
+
+    graph = _majority_graph(spark, _pages(spark, sf_dir))
+    gold = triples(synth_gold_triples(spark, _n_docs(sf_dir)))
+    counts = _counts(gold, triples(graph), ["url", "subj", "obj"]).collect()
+    tp = sum(r["tp"] for r in counts)
+    n_got = tp + sum(r["fp"] for r in counts)
+    n_gold = sum(r["support"] for r in counts)
     return spark.createDataFrame(
         [(n_got, n_gold, tp,
           round(tp / max(n_got, 1), 4), round(tp / max(n_gold, 1), 4))],
@@ -905,7 +916,8 @@ def q_distill_dataset(spark, sf_dir):
     )
     from weak_supervision_for_ner_spark.operators.triples import majority_labeller
 
-    annotated = annotate_pages(_pages(spark, sf_dir)).persist()
+    # read twice; a lazy local checkpoint is freed with the returned frame
+    annotated = annotate_pages(_pages(spark, sf_dir)).localCheckpoint(eager=False)
     vocab = build_vocabulary(annotated)
     ex = distillation_examples(annotated, majority_labeller(), vocab)
     return ex.select(
@@ -971,7 +983,8 @@ def q_pages_snorkel(spark, sf_dir):
     from weak_supervision_for_ner_spark.operators.annotate import annotate_pages
     from weak_supervision_for_ner_spark.operators.labelmodel import LabelModelAggregator
 
-    annotated = annotate_pages(_pages(spark, sf_dir)).persist()
+    # read twice; a lazy local checkpoint is freed with the returned frame
+    annotated = annotate_pages(_pages(spark, sf_dir)).localCheckpoint(eager=False)
     model = LabelModelAggregator(n_iter=5)
     model.fit_spark(spark, annotated)
     return model.decode_spark(spark, annotated)
@@ -992,7 +1005,9 @@ def q_pages_eval_snorkel(spark, sf_dir):
     model.fit_spark(spark, annotated)
     pred = model.decode_spark(spark, annotated)
     gold = synth_gold(spark, _n_docs(sf_dir))
-    return evaluate_mentions(gold, pred, mappings=CONLL_MAPPINGS, keep=CONLL_TO_RETAIN)
+    metrics = evaluate_mentions(gold, pred, mappings=CONLL_MAPPINGS, keep=CONLL_TO_RETAIN)
+    annotated.unpersist()  # the metrics are driver-side rows
+    return metrics
 
 
 def q_pages_eval_hmm(spark, sf_dir):
@@ -1009,7 +1024,9 @@ def q_pages_eval_hmm(spark, sf_dir):
     model.fit_spark(spark, annotated)
     pred = model.decode_spark(spark, annotated)
     gold = synth_gold(spark, _n_docs(sf_dir))
-    return evaluate_mentions(gold, pred, mappings=CONLL_MAPPINGS, keep=CONLL_TO_RETAIN)
+    metrics = evaluate_mentions(gold, pred, mappings=CONLL_MAPPINGS, keep=CONLL_TO_RETAIN)
+    annotated.unpersist()  # the metrics are driver-side rows
+    return metrics
 
 
 # ---------------------------------------------------------------------------
@@ -1019,11 +1036,8 @@ def q_pages_eval_hmm(spark, sf_dir):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: full KG construction
     (annotate -> majority-vote -> triples -> link -> canonicalize)."""
-    from weak_supervision_for_ner_spark.plans.pipeline import run_kg_pipeline
-
     pages = _pages(spark, "/root/testdata/sf0.001")
-    _, _, graph = run_kg_pipeline(spark, pages, aggregator="majority")
-    return graph
+    return _majority_graph(spark, pages)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

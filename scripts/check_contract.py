@@ -74,8 +74,9 @@ def check(spark, con, sf_dir, fn, oracle):
     return "ok", len(a), None
 
 
-def main():
-    argv = list(sys.argv[1:])
+def parse_args(argv):
+    """(json_out, sf_dir, only) from the command-line arguments."""
+    argv = list(argv)
     json_out = None
     if "--json" in argv:
         i = argv.index("--json")
@@ -85,18 +86,29 @@ def main():
         json_out = argv[i + 1]
         del argv[i:i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    return json_out, sf_dir, set(argv[1:])
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+def connect(sf_dir):
+    """A DuckDB connection with one view per contract table of ``sf_dir``."""
     import __spark_entry__ as entrymod
-    from weak_supervision_for_ner_spark.config import get_spark
 
-    spark = get_spark("contract-check", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in entrymod._TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
+    return con
+
+
+def main():
+    json_out, sf_dir, only = parse_args(sys.argv[1:])
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entrymod
+    from weak_supervision_for_ner_spark.config import get_spark
+
+    spark = get_spark("contract-check", cores=8, shuffle_partitions=8)
+    con = connect(sf_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -1,6 +1,6 @@
-"""Driver-contract queries whose per-document kernel changed, compared
-with their DuckDB oracles by ``scripts/check_contract.py``'s own
-comparison, on the test session."""
+"""Driver-contract queries compared with their DuckDB oracles by
+``scripts/check_contract.py``'s own comparison, on the test session,
+each checked to leave the session's cache as it found it."""
 
 import importlib.util
 import os
@@ -9,9 +9,14 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# the queries whose evaluate_mentions result is driver-side rows: they
+# must not leave even a lazily freed local checkpoint behind
+EVALUATION = {"eval_metrics", "pages_eval_mv", "pages_eval_corrected",
+              "pages_eval_hmm", "pages_eval_snorkel"}
+
 
 @pytest.fixture(scope="module")
-def contract(spark):
+def contract():
     import __spark_entry__ as entry
 
     spec = importlib.util.spec_from_file_location(
@@ -19,20 +24,46 @@ def contract(spark):
     )
     module = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(module)
-    yield module.check, entry.queries(), entry.oracle_sql()
-    # the queries persist their inputs and evaluate_mentions its count
-    # tables, none released; free them for the rest of the session
-    spark.catalog.clearCache()
+    # check_contract's default scale: the pages queries generate that
+    # corpus and their oracles read only the committed fixtures;
+    # eval_metrics and its oracle read the scale's lineitem table
+    _, sf_dir, _ = module.parse_args([])
+    con = module.connect(sf_dir)
+    yield module.check, con, sf_dir, entry.queries(), entry.oracle_sql()
+    con.close()
 
 
-@pytest.mark.parametrize("name", ["pages_corrected", "pages_eval_corrected", "distill_dataset"])
+def cache_state(spark):
+    """(persistent RDD ids, number of CacheManager entries)."""
+    return (
+        set(spark.sparkContext._jsc.getPersistentRDDs().keySet()),
+        spark._jsparkSession.sharedState().cacheManager().numCachedEntries(),
+    )
+
+
+@pytest.mark.parametrize("name", [
+    "pages_corrected", "pages_eval_corrected", "distill_dataset", "eval_metrics",
+    "pages_eval_mv", "pages_eval_hmm", "pages_eval_snorkel", "pages_kg_quality",
+])
 def test_contract_query_matches_its_oracle(spark, contract, name):
-    import duckdb
-
-    check, queries, oracles = contract
-    # the pages queries generate the sf0.01 corpus from the scale in the
-    # directory name and read no table, and their oracles read only the
-    # committed fixtures
-    status, n_rows, detail = check(spark, duckdb.connect(), "sf0.01", queries[name], oracles[name])
+    check, con, sf_dir, queries, oracles = contract
+    status, n_rows, detail = check(spark, con, sf_dir, queries[name], oracles[name])
     assert status == "ok", detail
     assert n_rows > 0
+
+
+@pytest.mark.parametrize("name", sorted(EVALUATION | {
+    "pages_kg_quality", "pages_triples", "pages_hmm", "pages_snorkel", "distill_dataset",
+}))
+def test_contract_query_leaves_the_cache_as_it_found_it(spark, contract, name):
+    """Collecting the query adds nothing to the CacheManager; the
+    evaluation queries also add no persistent RDD (the others may
+    leave a lazy local checkpoint, freed with their frame; the
+    ContextCleaner may free an earlier test's in the meantime)."""
+    _, _, sf_dir, queries, _ = contract
+    rdds, entries = cache_state(spark)
+    queries[name](spark, sf_dir).collect()
+    after_rdds, after_entries = cache_state(spark)
+    assert after_entries == entries
+    if name in EVALUATION:
+        assert after_rdds <= rdds

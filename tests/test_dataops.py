@@ -2,6 +2,7 @@
 tiny in-memory tables with hand-computed expectations."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -258,6 +259,54 @@ def test_evaluate_mentions_counts(spark):
     assert rows["ORG"]["entity_precision"] == 0.0  # 1 FP, no gold
     assert rows["micro"]["entity_precision"] == 0.5
     assert rows["micro"]["entity_recall"] == pytest.approx(1 / 3, abs=1e-6)
+
+
+SPANS = "url string, start int, end int, label string"
+
+
+@pytest.mark.parametrize("case", ["empty", "all_filtered"])
+def test_evaluate_mentions_with_no_label_gives_zero_rollups(spark, case):
+    """No label survives: an empty gold and prediction, or a keep set
+    that filters out every label. The rollup rows carry support 0 and
+    0.0 metrics."""
+    from weak_supervision_for_ner_spark.operators.evaluate import evaluate_mentions
+
+    rows = [("u1", 0, 2, "PERSON")] if case == "all_filtered" else []
+    gold = spark.createDataFrame(rows, SPANS)
+    pred = spark.createDataFrame([r + (0.9,) for r in rows], SPANS + ", conf double")
+    keep = {"ORG"} if case == "all_filtered" else None
+    got = sorted(map(tuple, evaluate_mentions(gold, pred, keep=keep).collect()))
+    assert got == [(label, 0) + (0.0,) * 6 for label in ("macro", "micro", "weighted")]
+
+
+def test_evaluate_mentions_counts_in_one_join_and_leaves_nothing_cached(spark):
+    """Each granularity's counts come from one join; the call leaves
+    the session's persistent RDDs and CacheManager as they were (the
+    caller's own cached input included), and its result is a local
+    relation that reads no input."""
+    from weak_supervision_for_ner_spark.operators.evaluate import _counts, evaluate_mentions
+
+    gold = spark.createDataFrame(
+        [("u1", 0, 2, "PERSON"), ("u1", 4, 5, "GPE"), ("u2", 0, 1, "GPE")], SPANS
+    ).persist()
+    gold.count()
+    pred = spark.createDataFrame(
+        [("u1", 0, 2, "PERSON", 0.9), ("u1", 4, 5, "ORG", 0.9)], SPANS + ", conf double"
+    )
+    plan = _counts(gold, pred, ["url", "start", "end"])._jdf.queryExecution().optimizedPlan()
+    assert len(re.findall(r"(?m)^[\s:+|-]*Join ", plan.toString())) == 1
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext
+    before = (set(sc._jsc.getPersistentRDDs().keySet()), cm.numCachedEntries())
+    result = evaluate_mentions(gold, pred)
+    assert (set(sc._jsc.getPersistentRDDs().keySet()), cm.numCachedEntries()) == before
+    assert gold.storageLevel.useMemory  # read from the CacheManager
+    assert result._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+    assert {r["label"] for r in result.collect()} == {
+        "PERSON", "GPE", "ORG", "micro", "macro", "weighted"
+    }
+    gold.unpersist()
 
 
 def test_multimodal_features_with_fake_decoder(spark):

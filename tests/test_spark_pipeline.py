@@ -522,6 +522,39 @@ def test_metrics_run_counts_every_partition(spark, tmp_path):
         frame.unpersist()
 
 
+def test_metrics_run_writes_lineage_independent_of_partition_count(
+    spark, tmp_path, monkeypatch
+):
+    """The lineage file is rewritten once per stage, not once per
+    partition record: a metrics run writes it as often on 6 partitions
+    as on 2."""
+    import json
+
+    from weak_supervision_for_ner_spark.plans import pipeline
+
+    writes = []
+    dump = json.dump
+
+    def counting_dump(obj, fd, *args, **kwargs):
+        writes.append(fd.name)
+        return dump(obj, fd, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline.json, "dump", counting_dump)
+    counts = {}
+    for n_parts in (2, 6):
+        lineage = tmp_path / f"lineage_{n_parts}.json"
+        annotated, mentions, graph = run_kg_pipeline(
+            spark, synth_pages(spark, 12, partitions=n_parts),
+            lineage_path=str(lineage), with_metrics=True,
+        )
+        records = json.loads(lineage.read_text())
+        assert sum(r["stage"] == "annotate_partition" for r in records) == n_parts
+        counts[n_parts] = writes.count(str(lineage))
+        annotated.unpersist()
+        mentions.unpersist()
+    assert counts[6] == counts[2]
+
+
 def test_salted_mentions_write_balances_hot_domain(spark, tmp_path):
     """SURVEY §4 hot-domain skew: 95% of mentions from ONE domain must
     still spread evenly across the sink's writers because the rebalance

@@ -3,18 +3,29 @@ table, with micro/macro/weighted rollups.
 
 Spark re-expression of the reference's metrics engine
 (analysis.py:40-161): the per-document set algebra (TP = intersection,
-FP/FN = differences) becomes inner + anti joins on
-(url, start, end, label); token-level metrics explode spans into token
-indices first; the three rollups are named re-aggregations of the
-per-label counts (no cube needed). CONLL label mapping and the
-conf >= 0.5 threshold follow analysis.py:6-8, 72.
+FP/FN = differences) becomes one full outer join of the distinct
+(url, start, end, label) rows of gold and prediction, counted per
+label; token-level metrics explode spans into token indices first.
+Both count tables (one row per label) come back to the driver in one
+collect, where the per-label and rollup rows are computed. CONLL label
+mapping and the conf >= 0.5 threshold follow analysis.py:6-8, 72.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+import pyarrow as pa
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, functions as F
 
+from weak_supervision_for_ner_spark.operators.similarity import _round_half_up6
 from weak_supervision_for_ner_spark.schema import CONLL_MAPPINGS
+
+_METRICS = pa.schema(
+    [("label", pa.string()), ("support", pa.int64())]
+    + [(f"{level}_{m}", pa.float64())
+       for level in ("entity", "token") for m in ("precision", "recall", "f1")]
+)
 
 
 def best_label_per_span(pred: DataFrame, conf_threshold: float = 0.5) -> DataFrame:
@@ -44,24 +55,16 @@ def map_labels(df: DataFrame, mappings: dict[str, str] | None = None,
 
 
 def _counts(gold: DataFrame, pred: DataFrame, keys: list[str]) -> DataFrame:
-    """(label, tp, fp, fn, support) via one inner and two anti joins."""
-    g = gold.select(*keys, "label").distinct()
-    p = pred.select(*keys, "label").distinct()
+    """(label, tp, fp, fn, support) from one full outer join of each
+    side's distinct (keys, label) rows, each side flagged present."""
     on = keys + ["label"]
-    tp = g.join(p, on).groupBy("label").agg(F.count(F.lit(1)).alias("tp"))
-    fp = p.join(g, on, "left_anti").groupBy("label").agg(F.count(F.lit(1)).alias("fp"))
-    fn = g.join(p, on, "left_anti").groupBy("label").agg(F.count(F.lit(1)).alias("fn"))
-    support = g.groupBy("label").agg(F.count(F.lit(1)).alias("support"))
-    return (
-        support.join(tp, "label", "left").join(fp, "label", "full")
-        .join(fn, "label", "left")
-        .select(
-            "label",
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            F.coalesce("fp", F.lit(0)).alias("fp"),
-            F.coalesce("fn", F.lit(0)).alias("fn"),
-            F.coalesce("support", F.lit(0)).alias("support"),
-        )
+    g = gold.select(*on).distinct().withColumn("g", F.lit(True))
+    p = pred.select(*on).distinct().withColumn("p", F.lit(True))
+    return g.join(p, on, "full").groupBy("label").agg(
+        F.count_if(F.col("g") & F.col("p")).alias("tp"),
+        F.count_if(F.col("g").isNull()).alias("fp"),
+        F.count_if(F.col("p").isNull()).alias("fn"),
+        F.count("g").alias("support"),
     )
 
 
@@ -189,6 +192,12 @@ def token_logloss(
     )
 
 
+def _round6(x: float) -> float:
+    """Spark's ``F.round(x, 6)``, which the per-label rows have always
+    used."""
+    return float(_round_half_up6(np.array([x]))[0])
+
+
 def evaluate_mentions(
     gold: DataFrame, pred: DataFrame, conf_threshold: float = 0.5,
     mappings: dict[str, str] | None = None, keep: set[str] | None = None,
@@ -196,99 +205,72 @@ def evaluate_mentions(
     """Per-label + micro/macro/weighted metrics table.
 
     Columns: label, entity_precision/recall/f1, token_precision/
-    recall/f1, support (per-label rows carry entity support)."""
+    recall/f1, support (per-label rows carry entity support). The
+    counts run in one Spark action; the result is a local relation,
+    and nothing stays cached."""
     pred_best = best_label_per_span(pred, conf_threshold)
     if mappings is not None or keep is not None:
         pred_best = map_labels(pred_best, mappings or {}, keep)
         gold = map_labels(gold, mappings or {}, keep)
-    # Both count tables feed several downstream aggregations/collects;
-    # persist so the upstream (possibly a full UDF pipeline) runs once.
-    pred_best = pred_best.persist()
-    gold = gold.persist()
-
-    ent = _counts(gold, pred_best, ["url", "start", "end"]).persist()
-    tok = _counts(_tokens(gold), _tokens(pred_best), ["url", "idx"]).persist()
-
-    def prf(df: DataFrame, prefix: str) -> DataFrame:
-        eps = 1e-10
-        p = F.round(F.col("tp") / (F.col("tp") + F.col("fp") + eps), 6)
-        r = F.round(F.col("tp") / (F.col("tp") + F.col("fn") + eps), 6)
-        return df.select(
-            "label", "support",
-            p.alias(f"{prefix}_precision"), r.alias(f"{prefix}_recall"),
-        ).withColumn(
-            f"{prefix}_f1",
-            F.round(
-                2 * F.col(f"{prefix}_precision") * F.col(f"{prefix}_recall")
-                / (F.col(f"{prefix}_precision") + F.col(f"{prefix}_recall") + 1e-10),
-                6,
-            ),
+    # both granularities read both inputs: hold them for the one collect
+    # so the upstream (possibly a full UDF pipeline) runs once; an input
+    # the session caches already is read from there and left cached
+    held = [df.persist() for df in (pred_best, gold) if df.storageLevel == StorageLevel.NONE]
+    try:
+        counts = (
+            _counts(gold, pred_best, ["url", "start", "end"])
+            .withColumn("level", F.lit("entity"))
+            .unionByName(
+                _counts(_tokens(gold), _tokens(pred_best), ["url", "idx"])
+                .withColumn("level", F.lit("token"))
+            )
+            .collect()
         )
+    finally:
+        for df in held:
+            df.unpersist()
+    ent = {r["label"]: r for r in counts if r["level"] == "entity"}
+    # a token row comes from a span of the same label, so tok's labels
+    # are a subset of ent's
+    tok = {r["label"]: r for r in counts if r["level"] == "token"}
+    eps = 1e-10
 
-    per_label = (
-        prf(ent, "entity")
-        .join(prf(tok, "token").drop("support"), "label", "full")
-        .na.fill(0.0)
-    )
+    def prf(c, rnd):
+        if c is None:
+            return 0.0, 0.0, 0.0
+        p = rnd(c["tp"] / (c["tp"] + c["fp"] + eps))
+        r = rnd(c["tp"] / (c["tp"] + c["fn"] + eps))
+        return p, r, rnd(2 * p * r / (p + r + eps))
 
-    # micro: re-aggregate raw counts; macro: average per-label metrics;
+    per_label = [
+        (lab, ent[lab]["support"], *prf(ent[lab], _round6), *prf(tok.get(lab), _round6))
+        for lab in sorted(ent, key=str)
+    ]
+
+    # micro: summed counts; macro: mean of the per-label metrics;
     # weighted: support-share dot product (analysis.py:124-158)
-    def rollup(ent_c: DataFrame, tok_c: DataFrame) -> list:
-        e = ent_c.agg(
-            F.sum("tp").alias("tp"), F.sum("fp").alias("fp"),
-            F.sum("fn").alias("fn"), F.sum("support").alias("support"),
-        ).collect()[0]
-        t = tok_c.agg(
-            F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn"),
-        ).collect()[0]
-        rows = []
-        eps = 1e-10
+    support = sum(r[1] for r in per_label)
 
-        def prf3(tp, fp, fn):
-            p = round(tp / (tp + fp + eps), 6)
-            r = round(tp / (tp + fn + eps), 6)
-            return p, r, round(2 * p * r / (p + r + eps), 6)
+    def total(level):
+        return {k: sum(c[k] for c in level.values()) for k in ("tp", "fp", "fn")}
 
-        ep, er, ef = prf3(e["tp"], e["fp"], e["fn"])
-        tpk, trk, tfk = prf3(t["tp"], t["fp"], t["fn"])
-        rows.append(("micro", int(e["support"]), ep, er, ef, tpk, trk, tfk))
-        return rows
+    def mean(col):
+        return _round6(sum(r[col] for r in per_label) / len(per_label)) if per_label else 0.0
 
-    micro = rollup(ent, tok)
-    macro_weighted = (
-        per_label.agg(
-            F.round(F.avg("entity_precision"), 6), F.round(F.avg("entity_recall"), 6),
-            F.round(F.avg("token_precision"), 6), F.round(F.avg("token_recall"), 6),
-            F.round(
-                F.sum(F.col("entity_precision") * F.col("support")) / F.sum("support"), 6
-            ),
-            F.round(
-                F.sum(F.col("entity_recall") * F.col("support")) / F.sum("support"), 6
-            ),
-            F.sum("support"),
-        ).collect()[0]
-    )
+    def weighted(col):
+        return _round6(sum(r[col] * r[1] for r in per_label) / support) if support else 0.0
 
     def f1(p, r):
-        return round(2 * p * r / (p + r + 1e-10), 6)
+        return round(2 * p * r / (p + r + eps), 6)
 
-    extra = [
-        ("macro", int(macro_weighted[6]),
-         macro_weighted[0], macro_weighted[1], f1(macro_weighted[0], macro_weighted[1]),
-         macro_weighted[2], macro_weighted[3], f1(macro_weighted[2], macro_weighted[3])),
-        ("weighted", int(macro_weighted[6]),
-         macro_weighted[4], macro_weighted[5], f1(macro_weighted[4], macro_weighted[5]),
-         0.0, 0.0, 0.0),
+    mep, mer, mtp, mtr = (mean(col) for col in (2, 3, 5, 6))
+    wep, wer = weighted(2), weighted(3)
+    rows = per_label + [
+        ("micro", support, *prf(total(ent), lambda x: round(x, 6)),
+         *prf(total(tok), lambda x: round(x, 6))),
+        ("macro", support, mep, mer, f1(mep, mer), mtp, mtr, f1(mtp, mtr)),
+        ("weighted", support, wep, wer, f1(wep, wer), 0.0, 0.0, 0.0),
     ]
-    spark = gold.sparkSession
-    extra_df = spark.createDataFrame(
-        micro + extra,
-        schema=(
-            "label string, support long, entity_precision double, entity_recall double,"
-            " entity_f1 double, token_precision double, token_recall double, token_f1 double"
-        ),
+    return gold.sparkSession.createDataFrame(
+        pa.Table.from_pylist([dict(zip(_METRICS.names, r)) for r in rows], schema=_METRICS)
     )
-    return per_label.select(
-        "label", "support", "entity_precision", "entity_recall", "entity_f1",
-        "token_precision", "token_recall", "token_f1",
-    ).unionByName(extra_df)

@@ -23,19 +23,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _cosine(va: str, vb: str):
-    dot = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0),
-                      lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(va, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(vb, F.lit(0.0), lambda acc, x: acc + x * x))
-    # norms clamped like the numpy kernels (max(norm, 1e-12)): a
-    # zero-norm vector (failed encoder, padding row) would otherwise
-    # yield NaN, which Spark's descending sort ranks ABOVE every real
-    # cosine — garbage vectors would take rank 1 and the two kernels
-    # would diverge
-    return dot / (F.greatest(na, F.lit(1e-12)) * F.greatest(nb, F.lit(1e-12)))
-
-
 # ---------------------------------------------------------------------------
 # Codegen-friendly JVM kernels (optimization round r7)
 #
@@ -84,7 +71,12 @@ def _dot_pair(va: str, vb: str, dim: int | None):
 
 def _clamped_norm(vec_col: str):
     """greatest(sqrt(sum x^2), 1e-12) — the per-row factor of the
-    cosine denominator, hoisted out of the pair loop."""
+    cosine denominator, hoisted out of the pair loop.
+
+    Clamped like the numpy kernels (max(norm, 1e-12)): a zero-norm
+    vector (failed encoder, padding row) would otherwise yield NaN,
+    which Spark's descending sort ranks ABOVE every real cosine —
+    garbage vectors would take rank 1 and the kernels would diverge."""
     return F.greatest(
         F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x)),
         F.lit(1e-12),

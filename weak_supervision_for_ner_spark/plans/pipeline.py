@@ -31,16 +31,19 @@ from weak_supervision_for_ner_spark.operators.triples import (
 
 class Lineage:
     """The pipeline's stage log, rewritten as a JSON list at ``path``
-    after every record. A record holds the stage name, a timestamp and
-    the keyword counters its caller passes."""
+    after every call. A record holds the stage name, a timestamp and
+    the counters its caller passes."""
 
     def __init__(self, path: str | None = None):
         self.path = path
         self.records: list[dict] = []
 
     def stage(self, name: str, **extra) -> None:
-        rec = {"stage": name, "ts": time.time(), **extra}
-        self.records.append(rec)
+        self.stages(name, [extra])
+
+    def stages(self, name: str, counters: list[dict]) -> None:
+        """One record per entry of ``counters``, written once."""
+        self.records.extend({"stage": name, "ts": time.time(), **c} for c in counters)
         if self.path:
             os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
             with open(self.path, "w") as fd:
@@ -264,8 +267,9 @@ def run_kg_pipeline(
         )
     mentions = mentions.persist()
     if with_metrics:
-        for row in stage_metrics(annotated).collect():
-            lineage.stage("annotate_partition", **row.asDict())
+        lineage.stages(
+            "annotate_partition", [r.asDict() for r in stage_metrics(annotated).collect()]
+        )
     linked = link_entities(spark, raw_triples)
     canon_stats: dict = {}
     canonical = canonicalize_triples(
