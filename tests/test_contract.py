@@ -44,6 +44,7 @@ def cache_state(spark):
 @pytest.mark.parametrize("name", [
     "pages_corrected", "pages_eval_corrected", "distill_dataset", "eval_metrics",
     "pages_eval_mv", "pages_eval_hmm", "pages_eval_snorkel", "pages_kg_quality",
+    "ann_topk", "ann_lsh", "ann_ivf", "embedding_dups",
 ])
 def test_contract_query_matches_its_oracle(spark, contract, name):
     check, con, sf_dir, queries, oracles = contract

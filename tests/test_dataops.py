@@ -149,24 +149,56 @@ def _clustered_embeddings(spark, n_clusters=12, per_cluster=5, dim=16, seed=7):
 
 def test_embedding_lsh_equals_brute_force(spark):
     """The banded-hyperplane blocker must return the SAME pair set as
-    the O(n^2) baseline on clustered data (recall certificate)."""
+    all-pairs cosines on clustered data (recall certificate). The
+    reference folds the products left to right and rounds HALF_UP at
+    6 dp, as Spark's aggregate and round do, so cosines match exactly."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
     from weak_supervision_for_ner_spark.operators.dedup import embedding_near_duplicates
 
-    emb = _clustered_embeddings(spark).persist()
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    emb = _clustered_embeddings(spark)
+    vecs = sorted((r["vec_id"], r["embedding"]) for r in emb.collect())
+    norms = {i: max(math.sqrt(fold(x * x for x in v)), 1e-12) for i, v in vecs}
+    brute = set()
+    for n, (a, va) in enumerate(vecs):
+        for b, vb in vecs[n + 1:]:
+            cos = fold(x * y for x, y in zip(va, vb)) / (norms[a] * norms[b])
+            if cos >= 0.95:
+                rounded = Decimal(repr(cos)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+                brute.add((a, b, float(rounded)))
     lsh = {(r["a"], r["b"], r["cosine"])
-           for r in embedding_near_duplicates(emb, 0.95, blocker="lsh", dim=16).collect()}
-    brute = {(r["a"], r["b"], r["cosine"])
-             for r in embedding_near_duplicates(emb, 0.95, blocker="none").collect()}
+           for r in embedding_near_duplicates(emb, 0.95, dim=16).collect()}
     assert len(brute) > 20          # the fixture actually produces dup pairs
     assert lsh == brute
-    emb.unpersist()
+
+
+def test_embedding_dedup_scores_a_zero_vector_zero(spark):
+    """A zero-norm embedding (failed encoder, padding row) pairs with
+    nothing, as in DuckDB: its clamped norm scores it 0 instead of
+    dividing by zero, which ANSI mode raises as DIVIDE_BY_ZERO. The
+    genuine pair beside it is still found."""
+    from weak_supervision_for_ner_spark.operators.dedup import embedding_near_duplicates
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.99, 0.01, 0.0]), (3, [0.0, 0.0, 0.0]),
+         (4, [0.0, 0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    assert [tuple(r) for r in embedding_near_duplicates(emb).collect()] == [(1, 2, 0.999949)]
 
 
 def test_embedding_lsh_plan_has_no_cartesian_product(spark):
     from weak_supervision_for_ner_spark.operators.dedup import embedding_near_duplicates
 
     emb = _clustered_embeddings(spark, n_clusters=3, per_cluster=3)
-    df = embedding_near_duplicates(emb, 0.95, blocker="lsh", dim=16)
+    df = embedding_near_duplicates(emb, 0.95, dim=16)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
@@ -425,9 +457,29 @@ def test_drop_near_duplicates(spark, docs):
     assert 4 in kept and 5 in kept       # singletons survive
 
 
+def _cross_product_topk(emb, q, k, dim=None):
+    """The JVM re-rank the LSH and IVF indexes share, run over every
+    (query, corpus vector) pair: the exact top-k by another kernel."""
+    from pyspark.sql import functions as F
+
+    from weak_supervision_for_ner_spark.operators.similarity import (
+        _clamped_norm,
+        _rerank_topk,
+    )
+
+    qs = q.select("query_id", F.col("embedding").alias("qvec"),
+                  _clamped_norm("embedding").alias("_qn"))
+    cand = (
+        emb.withColumn("_cn", _clamped_norm("embedding"))
+        .join(F.broadcast(qs))
+        .filter(F.col("query_id") != F.col("vec_id"))
+    )
+    return _rerank_topk(cand, k, "vec_id", "embedding", dim)
+
+
 def test_brute_force_kernels_identical(spark):
-    """The Arrow-batched numpy matmul kernel must reproduce the
-    pure-JVM higher-order-function kernel row-for-row (same 6-decimal
+    """The Arrow-batched numpy matmul scan must reproduce the JVM
+    re-rank over the full cross product row-for-row (same 6-decimal
     rounding before ranking, same id tie-break) — on the real fixture,
     across partitions, including self-match exclusion."""
     from pyspark.sql import functions as F
@@ -441,8 +493,9 @@ def test_brute_force_kernels_identical(spark):
     )
     q = emb.filter("vec_id < 8").select(F.col("vec_id").alias("query_id"), "embedding")
     cols = ["query_id", "neighbor_id", "cosine", "rank"]
-    a = sorted(map(tuple, brute_force_topk(emb, q, k=5, kernel="numpy").select(*cols).collect()))
-    b = sorted(map(tuple, brute_force_topk(emb, q, k=5, kernel="jvm").select(*cols).collect()))
+    a = sorted(map(tuple, brute_force_topk(emb, q, k=5).select(*cols).collect()))
+    dim = len(emb.first()["embedding"])
+    b = sorted(map(tuple, _cross_product_topk(emb, q, 5, dim).select(*cols).collect()))
     assert a == b and len(a) == 8 * 5
 
 
@@ -548,7 +601,7 @@ def test_numpy_brute_force_plan_is_scan_only(spark):
         "embedding", F.expr("transform(embedding, x -> cast(x as double))")
     )
     q = emb.filter("vec_id < 4").select(F.col("vec_id").alias("query_id"), "embedding")
-    df = brute_force_topk(emb, q, k=3, kernel="numpy")
+    df = brute_force_topk(emb, q, k=3)
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "CartesianProduct" not in plan
@@ -607,15 +660,13 @@ def test_embedding_lsh_max_bucket_caps_mega_bucket(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     uncapped = {(r["a"], r["b"])
-                for r in embedding_near_duplicates(
-                    emb, 0.9, blocker="lsh", dim=4).collect()}
+                for r in embedding_near_duplicates(emb, 0.9, dim=4).collect()}
     assert sum(1 for a, b in uncapped if a < 20 and b < 20) == 20 * 19 // 2
 
     stats = {}
     capped = {(r["a"], r["b"])
               for r in embedding_near_duplicates(
-                  emb, 0.9, blocker="lsh", dim=4,
-                  max_bucket=10, stats=stats).collect()}
+                  emb, 0.9, dim=4, max_bucket=10, stats=stats).collect()}
     assert (100, 101) in capped
     assert not any(a < 20 and b < 20 for a, b in capped)
     assert stats["dropped_buckets"] >= 1
@@ -884,84 +935,12 @@ def test_real_wav_and_ppm_through_spark_stages(spark):
     assert np.allclose(px[1], 0.0, atol=1e-6)   # black bottom
 
 
-def test_lsh_and_ivf_numpy_rerank_parity(spark):
-    """kernel="numpy" (Arrow einsum re-rank) must return the SAME rows
-    as the JVM HOF re-rank for both bucketed indexes — same blocking,
-    same rounding (HALF_UP 6dp), same tie-breaks."""
-    from weak_supervision_for_ner_spark.operators.similarity import ivf_topk, lsh_topk
-
-    emb = _clustered_embeddings(spark, n_clusters=10, per_cluster=6).persist()
-    # orderBy before limit: a bare limit() on unordered data may pick
-    # different rows per execution, failing parity spuriously
-    q = emb.orderBy("vec_id").limit(8).selectExpr("vec_id AS query_id", "embedding")
-
-    for fn, kw in ((lsh_topk, dict(n_planes=4, dim=16)),
-                   (ivf_topk, dict(n_cells=6, nprobe=2, sample_limit=64))):
-        jvm = sorted(map(tuple, fn(emb, q, k=5, **kw).collect()))
-        npk = sorted(map(tuple, fn(emb, q, k=5, kernel="numpy", **kw).collect()))
-        assert npk == jvm and jvm
-    emb.unpersist()
-
-
-def test_embedding_dedup_cap_requires_lsh_blocker(spark):
-    """max_bucket/stats with blocker='none' must raise, not silently
-    run uncapped with an empty stats dict (r4 advice: truncation is
-    observable, never silent)."""
-    import pytest
-
-    from weak_supervision_for_ner_spark.operators.dedup import (
-        embedding_near_duplicates,
-    )
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="only supported with blocker='lsh'"):
-        embedding_near_duplicates(emb, blocker="none", max_bucket=8)
-    with pytest.raises(ValueError, match="only supported with blocker='lsh'"):
-        embedding_near_duplicates(emb, blocker="none", stats={})
-
-
-def test_numpy_rerank_enforces_max_queries(spark):
-    """The numpy re-rank collects+broadcasts the query matrix exactly
-    like the brute kernel, so it must enforce the same conscious-choice
-    cap — an uncapped collect is a driver OOM at scale (r4 verdict)."""
-    import pytest
-
-    from weak_supervision_for_ner_spark.operators.similarity import ivf_topk, lsh_topk
-
-    emb = _clustered_embeddings(spark, n_clusters=4, per_cluster=4)
-    q = emb.selectExpr("vec_id AS query_id", "embedding")
-    for fn, kw in ((lsh_topk, dict(n_planes=2, dim=16)),
-                   (ivf_topk, dict(n_cells=2, nprobe=1, sample_limit=16))):
-        with pytest.raises(ValueError, match="raise max_queries"):
-            fn(emb, q, k=3, kernel="numpy", max_queries=5, **kw).collect()
-
-
-def test_numpy_rerank_unknown_query_id_fails_loudly(spark):
-    """A candidate whose query_id is missing from the broadcast query
-    set must raise: searchsorted alone would hand it the vector of the
-    neighbouring query id and score it silently."""
-    import pytest
-
-    from weak_supervision_for_ner_spark.operators.similarity import _numpy_pair_rerank
-
-    queries = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (3, [0.0, 1.0])], "query_id long, embedding array<double>"
-    )
-    cand = spark.createDataFrame(
-        [(1, 10, [1.0, 0.0]), (2, 11, [0.5, 0.5])],
-        "query_id long, vec_id long, embedding array<double>",
-    )
-    with pytest.raises(Exception, match=r"unknown query_id\(s\) \[2\]"):
-        _numpy_pair_rerank(cand, queries, 3, "vec_id", "embedding").collect()
-
-
 def test_zero_vector_never_ranks_first_in_either_kernel(spark):
     """A zero-norm embedding (failed encoder / padding row) must not
     outrank real neighbors: unguarded cosine yields NaN, which Spark's
-    descending sort puts at rank 1. Both kernels clamp norms to 1e-12,
-    so the zero vector scores ~0 and the kernels stay row-identical."""
+    descending sort puts at rank 1. The numpy scan and the JVM re-rank
+    both clamp norms to 1e-12, so the zero vector scores 0 and the two
+    stay row-identical."""
     from weak_supervision_for_ner_spark.operators.similarity import brute_force_topk
 
     rows = [(1, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0]),
@@ -969,10 +948,8 @@ def test_zero_vector_never_ranks_first_in_either_kernel(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = spark.createDataFrame([(1, [1.0, 0.0, 0.0])],
                               "query_id long, embedding array<double>")
-    jvm = [tuple(r) for r in
-           brute_force_topk(emb, q, k=3, kernel="jvm").orderBy("rank").collect()]
-    npk = [tuple(r) for r in
-           brute_force_topk(emb, q, k=3, kernel="numpy").orderBy("rank").collect()]
+    jvm = [tuple(r) for r in _cross_product_topk(emb, q, 3).orderBy("rank").collect()]
+    npk = [tuple(r) for r in brute_force_topk(emb, q, k=3).orderBy("rank").collect()]
     assert jvm == npk
     assert jvm[0][1] == 2                      # real neighbor first
     assert all(r[1] != 3 or r[2] == 0.0 for r in jvm)   # zero vec scores 0

@@ -1,7 +1,20 @@
 """Structured Streaming ingestion: the stateless annotation stage must
 produce the same mentions as batch over the same files."""
 
+import time
+
 import pytest
+
+
+@pytest.fixture(autouse=True)
+def no_stream_outlives_its_test(spark):
+    """Every streaming query a test starts has ended when it returns;
+    one left running is stopped here, so it cannot slow later tests."""
+    yield
+    active = spark.streams.active
+    for q in active:
+        q.stop()
+    assert active == []
 
 
 def test_streaming_mentions_equal_batch(spark, tmp_path):
@@ -109,7 +122,15 @@ def test_streaming_stateful_dedup_across_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # the processing-time state timeout keeps an availableNow stream
+    # running after its last batch: wait for the 3 rows, then stop it
+    try:
+        deadline = time.monotonic() + 120
+        while (spark.sql("SELECT * FROM dedup_stream").count() < 3
+               and time.monotonic() < deadline):
+            time.sleep(0.5)
+    finally:
+        q.stop()
     rows = {r["url"]: (r["first_url"], r["is_duplicate"])
             for r in spark.sql("SELECT * FROM dedup_stream").collect()}
     assert rows["u2"] == ("u2", False)

@@ -486,104 +486,57 @@ def simhash_near_pairs(
 
 def embedding_near_duplicates(
     embeddings: DataFrame, threshold: float = 0.95, id_col: str = "vec_id",
-    vec_col: str = "embedding", blocker: str = "lsh",
+    vec_col: str = "embedding",
     n_planes: int = 16, bands: int = 8, dim: int | None = None, seed: int = 42,
     max_bucket: int | None = None, stats: dict | None = None,
 ) -> DataFrame:
     """Cosine >= threshold near-duplicate pairs.
 
-    ``max_bucket``/``stats`` (lsh blocker only): drop (band, key)
-    buckets larger than ``max_bucket`` before the candidate self-join,
-    with drops counted into ``stats`` — the same mega-bucket contract
-    as ``minhash_lsh_pairs``. Default None = uncapped (oracle parity).
+    Random-hyperplane sign bits split into ``bands`` bands of
+    ``n_planes/bands`` planes; candidate pairs form only inside a
+    shared (band, key) bucket — ONE shuffle on the bucket key instead
+    of an all-pairs crossJoin. The candidate ids are deduped across
+    bands, re-joined to their vectors, then exactly re-ranked by
+    cosine, so precision is exact and recall is
+    P[share >= 1 band] = 1-(1-(1-theta/pi)^r)^bands — with the defaults
+    (r=2, bands=8) that is >99.9% at cosine 0.8 and ~1-2e-6 at 0.95.
+    Norms are clamped as in ``similarity``, so a zero vector scores 0.
 
-    ``blocker="lsh"`` (default, the 100-TB path): random-hyperplane
-    sign bits split into ``bands`` bands of ``n_planes/bands`` planes;
-    candidate pairs form only inside a shared (band, key) bucket — ONE
-    shuffle on the bucket key instead of an all-pairs crossJoin. The
-    candidate ids are deduped across bands, re-joined to their vectors,
-    then exactly re-ranked by cosine, so precision is exact and recall
-    is P[share >= 1 band] = 1-(1-(1-theta/pi)^r)^bands — with the
-    defaults (r=2, bands=8) that is >99.9% at cosine 0.8 and ~1-2e-6
-    at 0.95. ``blocker="none"`` is the O(n^2) brute-force baseline used
-    by verification tests (and intra-bucket re-rank inside other
-    blockers); never run it on a full corpus.
-
-    MIGRATION NOTE (round 2): the default ``blocker`` changed from the
-    exact brute-force crossJoin to ``"lsh"`` — results became
-    seed/plane-count dependent with the (quantified) recall above.
-    Callers that need provably exhaustive pairs must pass
-    ``blocker="none"`` explicitly; the old default was an OOM/cartesian
-    trap at any real corpus size, which is why approximate-with-known-
-    recall is the default an operator at 100 TB actually wants.
+    ``max_bucket``/``stats``: drop (band, key) buckets larger than
+    ``max_bucket`` before the candidate self-join, with drops counted
+    into ``stats`` — the same mega-bucket contract as
+    ``minhash_lsh_pairs``. Default None = uncapped (oracle parity).
     """
-    if blocker != "lsh" and (max_bucket is not None or stats is not None):
-        # "truncation is observable, never silent": the cap/stats
-        # contract only exists on the lsh blocker — accepting and
-        # ignoring it would hand the caller uncapped quadratic buckets
-        # with an empty stats dict and no indication (r4 advice)
-        raise ValueError(
-            f"max_bucket/stats are only supported with blocker='lsh' "
-            f"(got blocker={blocker!r}); the {blocker!r} blocker has no "
-            "bucket cap — drop the arguments or switch blockers"
-        )
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    base = embeddings.select(F.col(id_col), F.col(vec_col), norm.alias("nrm"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    from weak_supervision_for_ner_spark.operators.similarity import (
+        _clamped_norm,
+        _dot_pair,
+        hyperplane_bucket,
+        random_hyperplanes,
     )
 
-    if blocker == "none":
-        left = base.select(
-            F.col(id_col).alias("a"), F.col(vec_col).alias("va"), F.col("nrm").alias("na")
-        )
-        right = base.select(
-            F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), F.col("nrm").alias("nb")
-        )
-        cand = left.crossJoin(right).filter(F.col("a") < F.col("b"))
-    elif blocker == "lsh":
-        from weak_supervision_for_ner_spark.operators.similarity import (
-            random_hyperplanes,
-            hyperplane_bucket,
-        )
+    if n_planes % bands != 0:
+        raise ValueError(f"n_planes={n_planes} must divide into bands={bands}")
+    r = n_planes // bands
+    if dim is None:
+        first = embeddings.select(F.size(vec_col).alias("d")).first()
+        dim = int(first["d"]) if first else 0
+    planes = random_hyperplanes(dim, n_planes, seed)
+    banded = band_rows(embeddings, id_col, [
+        hyperplane_bucket(vec_col, planes[b * r : (b + 1) * r])
+        for b in range(bands)
+    ])
+    cand_ids = _bucket_pairs(_cap_buckets(banded, max_bucket, stats), id_col)
+    # re-join vectors for the exact re-rank (ids only travel through
+    # the bucket shuffle; vectors are fetched twice by key)
+    def side(name: str):
+        return embeddings.select(F.col(id_col).alias(name), F.col(vec_col).alias(f"v{name}"),
+                                 _clamped_norm(vec_col).alias(f"n{name}"))
 
-        if n_planes % bands != 0:
-            raise ValueError(f"n_planes={n_planes} must divide into bands={bands}")
-        r = n_planes // bands
-        if dim is None:
-            first = embeddings.select(F.size(vec_col).alias("d")).first()
-            dim = int(first["d"]) if first else 0
-        planes = random_hyperplanes(dim, n_planes, seed)
-        banded = band_rows(embeddings, id_col, [
-            hyperplane_bucket(vec_col, planes[b * r : (b + 1) * r])
-            for b in range(bands)
-        ])
-        cand_ids = _bucket_pairs(_cap_buckets(banded, max_bucket, stats), id_col)
-        # re-join vectors for the exact re-rank (ids only travel
-        # through the bucket shuffle; vectors are fetched twice by key)
-        cand = (
-            cand_ids
-            .join(
-                base.select(
-                    F.col(id_col).alias("a"),
-                    F.col(vec_col).alias("va"), F.col("nrm").alias("na"),
-                ),
-                "a",
-            )
-            .join(
-                base.select(
-                    F.col(id_col).alias("b"),
-                    F.col(vec_col).alias("vb"), F.col("nrm").alias("nb"),
-                ),
-                "b",
-            )
-        )
-    else:
-        raise ValueError(f"unknown blocker {blocker!r}")
-
+    # HOF dot on purpose: the unrolled _dot_pair(..., dim) was slower here
+    cosine = _dot_pair("va", "vb", None) / (F.col("na") * F.col("nb"))
     return (
-        cand
-        .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
+        cand_ids.join(side("a"), "a").join(side("b"), "b")
+        .withColumn("cosine", cosine)
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", F.round("cosine", 6).alias("cosine"))
     )

@@ -8,13 +8,10 @@ re-rank; IVF-style coarse quantization is the same pattern with
 learned centroids.
 
 Kernels: the exact scan's inner loop is an Arrow-batched numpy cosine
-matmul with map-side partial top-k (the 100-TB shape); a pure-JVM
-higher-order-function kernel (zip_with/aggregate) is kept as its
-parity oracle. The bucketed (LSH/IVF) re-ranks take the same
-``kernel=`` switch: "jvm" by default (small probed sets, oracle
-parity), "numpy" for the Arrow-batched einsum path when the
-post-blocking candidate volume is still large — at 100 TB the re-rank
-inherits the same BLAS lever as the exact scan.
+matmul with map-side partial top-k (the 100-TB shape). The bucketed
+(LSH/IVF) indexes re-rank their probed candidate pairs in the JVM
+(``_rerank_topk``): no Python worker, and the same rounding and
+tie-break as the scan, so the recall queries compare like with like.
 """
 
 from __future__ import annotations
@@ -40,20 +37,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 #   which is EXACTLY aggregate(zip_with(...))'s fold order (the HOF
 #   folds ((0.0 + x0) + x1) + ...; IEEE 0.0 + x == x for every finite
 #   x, and both sides sum the identical products left to right), so
-#   cosines are bit-identical — asserted by the jvm/numpy parity tests
-#   and the DuckDB oracle rows;
-# - rows whose array length does NOT match the probed dimension fall
+#   cosines are bit-identical — asserted by the brute-force parity
+#   tests and the DuckDB oracle rows;
+# - rows whose array length does NOT match the caller's dimension fall
 #   back to the original HOF expression inside a CASE WHEN branch
 #   (evaluated lazily, so well-formed rows never pay it), preserving
 #   the zip_with null-padding semantics for ragged inputs.
 # ---------------------------------------------------------------------------
-
-def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Array length of the first row (one cheap limit-1 job); None for
-    an empty input — callers then keep the pure-HOF plan."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return int(row["d"]) if row is not None and row["d"] is not None else None
-
 
 def _dot_pair(va: str, vb: str, dim: int | None):
     """Pairwise dot product, codegen-unrolled when ``dim`` is known."""
@@ -73,34 +63,41 @@ def _clamped_norm(vec_col: str):
     """greatest(sqrt(sum x^2), 1e-12) — the per-row factor of the
     cosine denominator, hoisted out of the pair loop.
 
-    Clamped like the numpy kernels (max(norm, 1e-12)): a zero-norm
-    vector (failed encoder, padding row) would otherwise yield NaN,
-    which Spark's descending sort ranks ABOVE every real cosine —
-    garbage vectors would take rank 1 and the kernels would diverge."""
+    Clamped like the numpy scan (max(norm, 1e-12)): a zero-norm vector
+    (failed encoder, padding row) then scores 0. Unclamped it would
+    yield NaN, which Spark's descending sort ranks ABOVE every real
+    cosine, or raise DIVIDE_BY_ZERO under ANSI mode."""
     return F.greatest(
         F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x)),
         F.lit(1e-12),
     )
 
 
-def _collect_bounded_queries(queries: DataFrame, vec_col: str, max_queries: int):
-    """Collect the (query_id, vector) rows that every numpy kernel
-    broadcasts, enforcing the shared driver-OOM cap — one guard for
-    the brute scan and the pair re-rank so the contract cannot drift."""
-    rows = queries.select("query_id", F.col(vec_col).alias("qvec")) \
-                  .limit(max_queries + 1).collect()
-    if len(rows) > max_queries:
-        raise ValueError(
-            f"more than {max_queries} query vectors; the query matrix is "
-            "broadcast — raise max_queries explicitly if that is intended"
-        )
-    return rows
+def _rerank_topk(cand: DataFrame, k: int, id_col: str, vec_col: str,
+                 dim: int | None) -> DataFrame:
+    """Exact top-k of candidate pairs: ``cand`` carries the corpus side
+    (``id_col``, ``vec_col``, clamped norm ``_cn``) and the query side
+    (``query_id``, ``qvec``, clamped norm ``_qn``), norms computed once
+    per row before the pair join. Cosines are rounded to 6 dp BEFORE
+    ranking (cosine desc, then neighbor id asc), as the numpy scan
+    does."""
+    cosine = F.round(
+        _dot_pair(vec_col, "qvec", dim) / (F.col("_cn") * F.col("_qn")), 6
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    return (
+        cand.withColumn("cosine", cosine)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine",
+                F.col("rank").cast("long").alias("rank"))
+    )
 
 
 def brute_force_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    kernel: str = "numpy", max_queries: int = 100_000,
+    max_queries: int = 100_000,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
@@ -108,67 +105,33 @@ def brute_force_topk(
     ``max_queries``; raise it consciously, the query matrix is
     broadcast).
 
-    ``kernel="numpy"`` (default): the query matrix is collected once,
-    L2-normalized and broadcast as ONE numpy array; each corpus Arrow
-    batch computes a (batch x nq) cosine matmul and emits only its
-    LOCAL top-k rows per query, so the final global window ranks
-    nq*k*n_batches rows instead of nq*corpus. Python crosses Arrow once
-    per batch with zero per-pair work — on this box ~25x the
-    higher-order-function plan (13.5 us/pair -> BLAS). This is the
-    exact-baseline shape you want at 100 TB: full scan, vectorized
-    kernel, partial top-k map-side.
+    The query matrix is collected once, L2-normalized and broadcast as
+    ONE numpy array; each corpus Arrow batch computes a (batch x nq)
+    cosine matmul and emits only its LOCAL top-k rows per query, so the
+    final global window ranks nq*k*n_batches rows instead of
+    nq*corpus. Python crosses Arrow once per batch with zero per-pair
+    work — on this box ~25x the higher-order-function plan
+    (13.5 us/pair -> BLAS). This is the exact-baseline shape you want
+    at 100 TB: full scan, vectorized kernel, partial top-k map-side.
 
-    ``kernel="jvm"``: the pure-built-ins plan (broadcast nested loop +
-    zip_with/aggregate cosine + one window). No Python at all; kept as
-    the parity oracle for the numpy kernel and for tiny corpora where
-    a python worker round-trip is not worth it.
+    Cosines are rounded to 6 decimals BEFORE ranking and ties break by
+    ascending neighbor id, exactly as ``_rerank_topk`` ranks, so the
+    two are identical row-for-row (asserted by tests).
 
-    Both kernels round cosines to 6 decimals BEFORE ranking and break
-    ties by ascending neighbor id, so their outputs are identical
-    row-for-row (asserted by tests).
-
-    Not fully lazy: building the plan runs one eager Spark job — the
-    jvm kernel's vector-dimension probe (``_probe_dim``), the numpy
-    kernel's query collect."""
-    if kernel == "jvm":
-        # norms once per side BEFORE the pair join (they were recomputed
-        # per pair); dot unrolled into codegen when the dim is uniform
-        dim = _probe_dim(embeddings, vec_col)
-        q = queries.select(
-            F.col("query_id"), F.col(vec_col).alias("qvec"),
-            _clamped_norm(vec_col).alias("_qn"),
-        )
-        scored = (
-            embeddings.select(
-                F.col(id_col), F.col(vec_col), _clamped_norm(vec_col).alias("_cn")
-            )
-            .join(F.broadcast(q))
-            .withColumn(
-                "cosine",
-                F.round(
-                    _dot_pair(vec_col, "qvec", dim) / (F.col("_cn") * F.col("_qn")),
-                    6,
-                ),
-            )
-            .filter(F.col("query_id") != F.col(id_col))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-        return (
-            scored
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine",
-                    F.col("rank").cast("long").alias("rank"))
-        )
-    if kernel != "numpy":
-        raise ValueError(f"unknown kernel {kernel!r}")
-
+    Not fully lazy: building the plan runs one eager Spark job, the
+    query collect."""
     from typing import Iterator
 
     import pandas as pd
     from pyspark.sql import types as T
 
-    q_rows = _collect_bounded_queries(queries, vec_col, max_queries)
+    q_rows = queries.select("query_id", F.col(vec_col).alias("qvec")) \
+                    .limit(max_queries + 1).collect()
+    if len(q_rows) > max_queries:
+        raise ValueError(
+            f"more than {max_queries} query vectors; the query matrix is "
+            "broadcast — raise max_queries explicitly if that is intended"
+        )
     spark = embeddings.sparkSession
     if not q_rows:
         schema = "query_id long, neighbor_id long, cosine double, rank long"
@@ -246,79 +209,6 @@ def _round_half_up6(x: "np.ndarray") -> "np.ndarray":
     return y
 
 
-def _numpy_pair_rerank(
-    cand: DataFrame, queries: DataFrame, k: int,
-    id_col: str, vec_col: str, max_queries: int = 100_000,
-) -> DataFrame:
-    """Arrow-batched exact re-rank of (query_id, candidate) pairs: the
-    query matrix is collected/normalized ONCE and broadcast; each
-    candidate Arrow batch computes its cosines in one vectorized
-    einsum — no per-pair python, no qvec duplicated through the
-    shuffle. Same rounding (HALF_UP, 6 dp) and tie-break (cosine desc,
-    id asc) as the JVM HOF re-rank, so outputs are row-identical.
-
-    This is the 100-TB lever the brute kernel already proved (~8x over
-    zip_with/aggregate): at scale the PROBED candidate set is still
-    billions of pairs, so the re-rank inherits the same BLAS win."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q_rows = _collect_bounded_queries(queries, vec_col, max_queries)
-    # sorted-id + matrix form: the per-pair dict lookup becomes one
-    # vectorized searchsorted per batch (identical vectors — r7)
-    q_ids = np.array(sorted(r["query_id"] for r in q_rows))
-    qmat = np.empty((len(q_rows), 0))
-    if q_rows:
-        by_id = {r["query_id"]: r for r in q_rows}
-        vecs = []
-        for qid in q_ids:
-            v = np.asarray(list(by_id[qid]["qvec"]), dtype=np.float64)
-            vecs.append(v / max(np.linalg.norm(v), 1e-12))
-        qmat = np.stack(vecs)
-    bc = cand.sparkSession.sparkContext.broadcast((q_ids, qmat))
-
-    out_schema = T.StructType([
-        T.StructField("query_id", queries.schema["query_id"].dataType),
-        T.StructField("neighbor_id", cand.schema[id_col].dataType),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, qm = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            q = pdf["query_id"].to_numpy()
-            idx = np.searchsorted(ids_b, q)
-            # searchsorted returns a neighbour's slot for an id it lacks:
-            # fail loudly instead of scoring against the wrong vector
-            if not ((idx < len(ids_b)).all() and np.array_equal(ids_b[idx], q)):
-                missing = sorted(set(q.tolist()) - set(ids_b.tolist()))
-                raise KeyError(f"re-rank candidates carry unknown query_id(s) {missing[:5]}")
-            Q = qm[idx]
-            cos = _round_half_up6(np.einsum("ij,ij->i", Xn, Q))
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].values,
-                "neighbor_id": pdf[id_col].values,
-                "cosine": cos,
-            })
-
-    scored = cand.select("query_id", id_col, vec_col).mapInPandas(
-        score, schema=out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("long").alias("rank"))
-    )
-
-
 def random_hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).round(6).tolist()
@@ -350,49 +240,26 @@ def lsh_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5,
     n_planes: int = 8, dim: int = 64,
     id_col: str = "vec_id", vec_col: str = "embedding", seed: int = 42,
-    kernel: str = "jvm", max_queries: int = 100_000,
 ) -> DataFrame:
     """ANN: bucket corpus + queries by hyperplane signs, exact re-rank
     within the bucket join. Trades recall for a candidate set that
-    shrinks ~2^planes-fold; multi-probe = union over plane subsets.
-
-    ``kernel``: "jvm" (default — pure built-ins, fine for small probed
-    sets and the DuckDB oracle) or "numpy" (Arrow-batched einsum
-    re-rank — the same ~8x lever the brute kernel proved; pick it when
-    the post-blocking candidate volume is still large). Row-identical
-    outputs (parity-tested)."""
+    shrinks ~2^planes-fold."""
     planes = random_hyperplanes(dim, n_planes, seed)
-    corpus_b = embeddings.withColumn("bucket", hyperplane_bucket(vec_col, planes))
+    # per-row norms hoisted out of the candidate pair loop (r7)
+    corpus_b = embeddings.withColumn(
+        "bucket", hyperplane_bucket(vec_col, planes)
+    ).withColumn("_cn", _clamped_norm(vec_col))
     queries_b = queries.select(
         "query_id", F.col(vec_col).alias("qvec")
-    ).withColumn("bucket", hyperplane_bucket("qvec", planes))
-    if kernel == "jvm":
-        # per-row norms hoisted out of the candidate pair loop (r7)
-        corpus_b = corpus_b.withColumn("_cn", _clamped_norm(vec_col))
-        queries_b = queries_b.withColumn("_qn", _clamped_norm("qvec"))
-
+    ).withColumn("bucket", hyperplane_bucket("qvec", planes)).withColumn(
+        "_qn", _clamped_norm("qvec")
+    )
     cand = (
         corpus_b.join(F.broadcast(queries_b), "bucket")
         .filter(F.col("query_id") != F.col(id_col))
     )
-    if kernel == "numpy":
-        return _numpy_pair_rerank(cand, queries, k, id_col, vec_col,
-                                  max_queries=max_queries)
-    if kernel != "jvm":
-        raise ValueError(f"kernel must be 'jvm' or 'numpy', got {kernel!r}")
-    # dim is a caller contract here (it sized the planes) — no probe job
-    scored = cand.withColumn(
-        "cosine",
-        F.round(
-            _dot_pair(vec_col, "qvec", dim) / (F.col("_cn") * F.col("_qn")), 6
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    # dim is a caller contract here (it sized the planes)
+    return _rerank_topk(cand, k, id_col, vec_col, dim)
 
 
 def _recall_vs_exact(exact, approx, approx_col: str, k: int):
@@ -492,28 +359,21 @@ def ivf_topk(
     n_cells: int = 8, nprobe: int = 2, sample_limit: int = 256,
     id_col: str = "vec_id", vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    kernel: str = "jvm", max_queries: int = 100_000,
 ) -> DataFrame:
     """IVF ANN: assign every corpus vector to its nearest centroid cell
     (one narrow codegen pass), probe each query's ``nprobe`` best cells,
     exact cosine re-rank inside the probed cells. The candidate set
     shrinks ~n_cells/nprobe-fold; the cell join shuffles on the small
-    cell key only.
-
-    ``kernel``: "jvm" (default) or "numpy" — Arrow-batched einsum
-    re-rank of the probed candidates, row-identical outputs
-    (parity-tested); see lsh_topk."""
+    cell key only."""
     if centroids is None:
         centroids = ivf_centroids(embeddings, n_cells, sample_limit=sample_limit,
                                   id_col=id_col, vec_col=vec_col)
     scores = _cell_scores(vec_col, centroids)
+    # norm once per corpus row, BEFORE the cell join fans each row out
+    # to every query probing its cell (r7)
     corpus = embeddings.withColumn(
         "cell", F.array_position(scores, F.array_max(scores)).cast("int")
-    )
-    if kernel == "jvm":
-        # norm once per corpus row, BEFORE the cell join fans each row
-        # out to every query probing its cell (r7)
-        corpus = corpus.withColumn("_cn", _clamped_norm(vec_col))
+    ).withColumn("_cn", _clamped_norm(vec_col))
     qs = queries.select(
         "query_id", F.col(vec_col).alias("qvec")
     ).withColumn("scores", _cell_scores("qvec", centroids))
@@ -528,38 +388,16 @@ def ivf_topk(
     cand = (
         corpus.join(F.broadcast(qcells), "cell")
         .filter(F.col("query_id") != F.col(id_col))
-    )
-    if kernel == "numpy":
-        return _numpy_pair_rerank(cand, queries, k, id_col, vec_col,
-                                  max_queries=max_queries)
-    if kernel != "jvm":
-        raise ValueError(f"kernel must be 'jvm' or 'numpy', got {kernel!r}")
-    # centroid dimensionality doubles as the unroll dim — no probe job
-    pair_dim = len(centroids[0]) if centroids else None
-    scored = (
-        cand
         .join(
             F.broadcast(
                 qs.select("query_id", "qvec", _clamped_norm("qvec").alias("_qn"))
             ),
             "query_id",
         )
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot_pair(vec_col, "qvec", pair_dim)
-                / (F.col("_cn") * F.col("_qn")),
-                6,
-            ),
-        )
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine",
-                F.col("rank").cast("long").alias("rank"))
-    )
+    # centroid dimensionality doubles as the unroll dim
+    return _rerank_topk(cand, k, id_col, vec_col,
+                        len(centroids[0]) if centroids else None)
 
 
 def ivf_recall(

@@ -130,6 +130,9 @@ def streaming_dedup(pages_stream: DataFrame, timeout_minutes: int = 60) -> DataF
     after ``timeout_minutes`` of processing time so the store stays
     bounded on an unbounded crawl (re-crawls beyond the horizon are
     treated as fresh — the batch dedup job is the exactness backstop).
+    Under an ``availableNow`` trigger the stream never ends on its own
+    (the processing-time timeout keeps it waiting), so the caller must
+    stop it.
     """
     from typing import Iterator, Tuple
 
